@@ -2,7 +2,7 @@
 # The oracle corpus is verified at BOTH sf0.01 (the driver's gate SF)
 # and sf0.1 (the bench SF); VERIFICATION.md records the latest results.
 
-.PHONY: test test-all oracle oracle-sf01 bench bench-compare verify
+.PHONY: test test-all oracle oracle-sf01 bench bench-compare perf verify
 
 # Default profile: slow-marked E2E/property/audit tests deselected
 # (pytest.ini addopts) so a time-budgeted run finishes with a verdict.
@@ -34,5 +34,11 @@ bench:
 # classification is committed as BENCH_COMPARE_r{N}.json.
 bench-compare:
 	python scripts/bench_compare.py `ls BENCH_DETAIL_r*.json | sort | tail -1` BENCH_DETAIL.json
+
+# BENCHMARK.json's end-to-end workloads, one seed each (~1 min per run).
+# Add --trace 1 to a line for the per-layer metrics.
+perf:
+	python3 perfbench/run.py --workload ingest --seed 1 --seconds 12
+	python3 perfbench/run.py --workload reads --seed 1 --seconds 12
 
 verify: test oracle oracle-sf01 bench bench-compare

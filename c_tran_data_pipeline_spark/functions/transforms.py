@@ -111,8 +111,10 @@ def conform_stop_events(raw: DataFrame) -> DataFrame:
 
 def split_star(conformed: DataFrame) -> tuple[DataFrame, DataFrame]:
     """store() (topic_consumer.py:174-193): one conformed stream → the
-    (Trip dim, BreadCrumb fact) pair. Trip rows dedup on the full tuple
-    (A2, the reference's set()) — the PK-level dedup happens at upsert.
+    (Trip dim, BreadCrumb fact) pair. Trip rows are one per crumb: the
+    reference's whole-tuple set() dedup (A2) is subsumed by the key-level
+    first-wins of the Trip insert (operators.upsert.absent_rows), which
+    keeps one row per trip_id and so one of any identical tuples.
     """
     trip = conformed.select(
         "trip_id",
@@ -120,7 +122,7 @@ def split_star(conformed: DataFrame) -> tuple[DataFrame, DataFrame]:
         "vehicle_id",
         "service_key",
         F.col("trip_direction").alias("direction"),
-    ).dropDuplicates()
+    )
     breadcrumb = conformed.select(
         "tstamp", "latitude", "longitude", "direction", "speed", "trip_id"
     )

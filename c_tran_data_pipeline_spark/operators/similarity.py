@@ -847,6 +847,9 @@ def _assign_cells_arrow(
     produces."""
     import numpy as np
 
+    # Id order is what makes the stable argsort below break ties like the
+    # JVM probe; callers may pass centroids in any order.
+    cents = sorted(cents, key=lambda c: c[0])
     cids_sorted = [int(c) for c, _ in cents]
     C = np.array([cv for _, cv in cents], dtype=np.float64)  # (nlist, dim)
     cdim = C.shape[1] if len(cents) else 0

@@ -22,14 +22,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def insert_if_absent(existing: DataFrame, incoming: DataFrame, keys: list[str]) -> DataFrame:
-    """K4/J3: first-writer-wins keyed insert (ON CONFLICT DO NOTHING,
-    topic_consumer.py:203). Returns existing ∪ (incoming ∖ existing-by-key),
-    deduping incoming on the key first (the reference's set-based A2 dedup
-    feeds this). The anti-join's build side is existing[keys] only."""
+def absent_rows(existing: DataFrame, incoming: DataFrame, keys: list[str]) -> DataFrame:
+    """K4/J3: the rows a first-writer-wins keyed insert (ON CONFLICT DO
+    NOTHING, topic_consumer.py:203) adds — incoming ∖ existing-by-key,
+    one row per key. ``first_wins`` over every column picks that row, so
+    identical incoming tuples (the reference's set-based A2 dedup)
+    collapse here too. The anti-join's build side is existing[keys] only."""
     incoming_first = first_wins(incoming, keys, order_by=incoming.columns)
-    new_rows = incoming_first.join(existing.select(*keys), on=keys, how="left_anti")
-    return existing.unionByName(new_rows)
+    return incoming_first.join(existing.select(*keys), on=keys, how="left_anti")
+
+
+def insert_if_absent(existing: DataFrame, incoming: DataFrame, keys: list[str]) -> DataFrame:
+    """existing ∪ absent_rows(existing, incoming, keys): the table after
+    the insert, for stores that commit whole snapshots."""
+    return existing.unionByName(absent_rows(existing, incoming, keys))
 
 
 def first_wins(df: DataFrame, keys: list[str], order_by: list[str]) -> DataFrame:

@@ -2315,8 +2315,8 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Three exact ANSI quintile scores in ONE fused pass
     # (operators/rank.py global_ntile_multi, round 10): one sampling
     # pass for all three boundaries, one bookkeeping aggregate at the
-    # joint (r, f, m)-bucket grain, three broadcast offset joins and
-    # three in-bucket rank windows over the SAME persisted
+    # joint (r, f, m)-bucket grain, per-bucket offsets attached as
+    # literal maps and three in-bucket rank windows over the SAME persisted
     # customer-grain frame — the chained form re-persisted and re-joined
     # an ever-wider frame per dimension (29 Exchanges → see
     # plans/r10/q_rfm_segments_*.txt). Bucket values are bit-identical

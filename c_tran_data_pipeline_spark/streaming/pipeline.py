@@ -39,7 +39,7 @@ from c_tran_data_pipeline_spark.functions.transforms import (
 )
 from c_tran_data_pipeline_spark.functions.validation import validate
 from c_tran_data_pipeline_spark.operators.fence import eval_once
-from c_tran_data_pipeline_spark.operators.upsert import first_wins, insert_if_absent, merge_update
+from c_tran_data_pipeline_spark.operators.upsert import absent_rows, first_wins, merge_update
 
 
 def read_breadcrumb_stream_kafka(spark: SparkSession, brokers: str, topic: str) -> DataFrame:
@@ -299,13 +299,20 @@ def run_stop_event_pipeline(
 
 
 class _TableStore:
-    """Minimal upsert-able table backed by parquet snapshots.
+    """Minimal upsert-able table backed by a directory of parquet files.
 
     With Delta/Iceberg on the classpath this would be MERGE INTO on a
-    transactional table; those jars aren't in this image (guide §Sources),
-    so the same semantics run as read-modify-overwrite of a snapshot dir —
-    fine for a dim-sized table (Trip ≈ 44.6k rows in the reference), while
-    the high-volume fact table only ever appends (no rewrite)."""
+    transactional table; those jars aren't in this image (guide §Sources).
+    Inserts only ever append: ``upsert`` (K4) writes just the rows whose
+    key is absent, and ``append`` (K3) writes the batch, so neither
+    touches existing files and per-batch cost does not grow with the
+    table. Each insert adds a file per written partition — at most one
+    per micro-batch once AQE coalesces the small batch — until the next
+    ``merge``. Only ``merge`` (K5) rewrites the snapshot, because it
+    updates rows; that rewrite also compacts the files appends added
+    (the scan packs small files into about one split per core). It reads
+    and rewrites the whole table, which is fine for a dim-sized table
+    (Trip ≈ 44.6k rows in the reference)."""
 
     def __init__(self, spark: SparkSession, path: str, schema):
         self.spark = spark
@@ -313,10 +320,11 @@ class _TableStore:
         self.schema = schema
 
     def read(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self.path)
-        except Exception:
+        # The store's schema, not footer inference: no job per read, and
+        # a corrupt or unreadable file raises when the read executes.
+        if not os.path.exists(self.path):
             return self.spark.createDataFrame([], self.schema)
+        return self.spark.read.schema(self.schema).parquet(self.path)
 
     def _overwrite(self, df: DataFrame) -> None:
         # The new snapshot is derived FROM the current one, so it must be
@@ -337,7 +345,9 @@ class _TableStore:
         shutil.rmtree(old, ignore_errors=True)
 
     def upsert(self, incoming: DataFrame, keys: list[str]) -> None:
-        self._overwrite(insert_if_absent(self.read(), incoming, keys))
+        # Written here, not through self.append, so a subclass can tell
+        # dim inserts from fact appends.
+        absent_rows(self.read(), incoming, keys).write.mode("append").parquet(self.path)
 
     def merge(self, updates: DataFrame, keys: list[str], set_cols: list[str]) -> None:
         self._overwrite(merge_update(self.read(), updates, keys, set_cols))

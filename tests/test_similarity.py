@@ -589,7 +589,8 @@ def test_arrow_cell_assignment_matches_jvm_probe_order(spark):
     probe, including EXACT distance ties (symmetric centroids around an
     equidistant vector -> lower cid wins), NaN elements (NaN distances
     sort last, ties by cid), and malformed rows (NULL / short / long
-    vectors -> first nprobe cids in id order)."""
+    vectors -> first nprobe cids in id order). A centroid list passed
+    out of id order gives the same cells."""
     from c_tran_data_pipeline_spark.operators.similarity import (
         _as_double,
         _assign_cells_arrow,
@@ -626,3 +627,10 @@ def test_arrow_cell_assignment_matches_jvm_probe_order(spark):
             for r in _assign_cells_arrow(df, "vec_id", "embedding", cents, nprobe).collect()
         }
         assert arrow == jvm, (nprobe, arrow, jvm)
+        unsorted = {
+            r["vec_id"]: r["__cells"]
+            for r in _assign_cells_arrow(
+                df, "vec_id", "embedding", cents[::-1], nprobe
+            ).collect()
+        }
+        assert unsorted == jvm, (nprobe, unsorted, jvm)

@@ -5,13 +5,19 @@ availableNow (the reference's idle-timeout shutdown, T2)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import Row
 
 from c_tran_data_pipeline_spark import schemas
+from c_tran_data_pipeline_spark.functions.transforms import split_star
+from c_tran_data_pipeline_spark.functions.validation import referential_check
+from c_tran_data_pipeline_spark.operators.upsert import absent_rows
 from c_tran_data_pipeline_spark.streaming.pipeline import (
     _TableStore,
+    breadcrumb_upsert_batch,
+    conform_validate_stream,
     run_breadcrumb_pipeline,
     run_stop_event_pipeline,
 )
@@ -82,6 +88,146 @@ def test_breadcrumb_pipeline_end_to_end(spark, tmpdirs):
     q2 = run_breadcrumb_pipeline(raw, trip_store, crumb_store, tmpdirs["ckpt2"] + "_replay")
     q2.awaitTermination(120)
     assert spark.read.parquet(tmpdirs["trip"]).count() == 2
+
+
+def _part_files(path: str) -> set[str]:
+    return {f for f in os.listdir(path) if f.endswith(".parquet")}
+
+
+class _ListingStore(_TableStore):
+    """Trip store that records its part files after every insert."""
+
+    def __init__(self, *args):
+        super().__init__(*args)
+        self.listings: list[set[str]] = []
+
+    def upsert(self, incoming, keys):
+        super().upsert(incoming, keys)
+        self.listings.append(_part_files(self.path))
+
+
+def test_breadcrumb_multibatch_trip_insert_appends(spark, tmpdirs):
+    """Two micro-batches (maxFilesPerTrigger=1) sharing trip 101, with
+    identical tuples inside each batch: Trip keeps one row per trip_id
+    with the first-wins values of the first batch that saw it, written
+    by appending — batch 1's Trip files survive batch 2 — and a replay
+    from a fresh checkpoint changes nothing."""
+    batch1 = [
+        GOOD,
+        dict(GOOD),  # identical tuple (A2)
+        dict(GOOD, ACT_TIME="36005", VEHICLE_ID="4010"),
+        dict(GOOD, VELOCITY="500"),  # V4 reject
+    ]
+    batch2 = [
+        # trip 101 again; vehicle 4001 would win a batch-level first-wins
+        dict(GOOD, ACT_TIME="36010", VEHICLE_ID="4001"),
+        dict(GOOD, EVENT_NO_TRIP="102", VEHICLE_ID="4009"),
+        dict(GOOD, EVENT_NO_TRIP="102", VEHICLE_ID="4009"),
+        dict(GOOD, EVENT_NO_TRIP="102", VEHICLE_ID="4011", OPD_DATE="26-SEP-20"),
+        dict(GOOD, EVENT_NO_TRIP=""),  # V1 reject
+    ]
+    for i, rows in enumerate((batch1, batch2)):
+        f = tmpdirs["in"] / f"batch{i}.json"
+        f.write_text("\n".join(json.dumps(r) for r in rows))
+        os.utime(f, (1_000_000 + i, 1_000_000 + i))  # file-stream order
+
+    raw = (
+        spark.readStream.schema(schemas.RAW_BREADCRUMB)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(tmpdirs["in"]))
+    )
+    trip_store = _ListingStore(spark, tmpdirs["trip"], schemas.TRIP)
+    crumb_store = _TableStore(spark, tmpdirs["crumb"], schemas.BREADCRUMB)
+    run_breadcrumb_pipeline(raw, trip_store, crumb_store, tmpdirs["ckpt1"]).awaitTermination(120)
+
+    assert len(trip_store.listings) == 2
+    assert trip_store.listings[0] <= trip_store.listings[1]  # nothing rewritten
+
+    def stored_trips():
+        rows = spark.read.parquet(tmpdirs["trip"]).collect()
+        return len(rows), {r.trip_id: (r.vehicle_id, r.service_key, r.route_id, r.direction) for r in rows}
+
+    expected = (
+        2,
+        {
+            101: (4008, "Weekday", 0, "Out"),  # batch 1's first-wins, not 4001
+            102: (4009, "Weekday", 0, "Out"),
+        },
+    )
+    assert stored_trips() == expected
+
+    static = spark.read.schema(schemas.RAW_BREADCRUMB).json(str(tmpdirs["in"]))
+    _, valid = split_star(conform_validate_stream(static))
+    crumbs = spark.read.parquet(tmpdirs["crumb"])
+    assert crumbs.count() == 7  # 9 in − 2 rejected
+    assert crumbs.exceptAll(valid).isEmpty() and valid.exceptAll(crumbs).isEmpty()
+    assert referential_check(crumbs, spark.read.parquet(tmpdirs["trip"]), ["trip_id"]).isEmpty()
+
+    run_breadcrumb_pipeline(raw, trip_store, crumb_store, tmpdirs["ckpt2"]).awaitTermination(120)
+    assert stored_trips() == expected
+
+
+def test_merge_raises_on_unreadable_trip_file(spark, tmpdirs):
+    """A Trip part file with a truncated footer makes ``merge`` raise and
+    leaves the snapshot directory as it was — not an empty-based rewrite."""
+    trip_store = _TableStore(spark, tmpdirs["trip"], schemas.TRIP)
+    seed = spark.createDataFrame(
+        [Row(trip_id=101, route_id=0, vehicle_id=4008, service_key="Weekday", direction="Out")],
+        schema=schemas.TRIP,
+    )
+    seed.coalesce(1).write.parquet(tmpdirs["trip"])
+    (part,) = _part_files(tmpdirs["trip"])
+    path = os.path.join(tmpdirs["trip"], part)
+    with open(path, "r+b") as fh:
+        fh.truncate(os.path.getsize(path) // 2)
+
+    def snapshot():
+        out = {}
+        for f in sorted(os.listdir(tmpdirs["trip"])):
+            with open(os.path.join(tmpdirs["trip"], f), "rb") as fh:
+                out[f] = fh.read()
+        return out
+
+    before = snapshot()
+    updates = spark.createDataFrame([Row(trip_id=101, route_id=65, direction="Back")])
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        trip_store.merge(updates, keys=["trip_id"], set_cols=["route_id", "direction"])
+    assert snapshot() == before
+
+
+def test_breadcrumb_batch_job_shape(spark, tmpdirs):
+    """Plan-shape guard for the breadcrumb micro-batch body: reading a
+    store runs no Spark job (the store's schema, no footer inference),
+    one body over a non-empty Trip store runs at most four jobs (window
+    shuffle-map, key broadcast, Trip append, crumb append), and the Trip
+    side has no whole-tuple Aggregate (A2 rides the insert's first-wins)."""
+    sc = spark.sparkContext
+    for name, rows in (("b1.json", [GOOD]), ("b2.json", [GOOD, dict(GOOD, EVENT_NO_TRIP="102")])):
+        (tmpdirs["in"] / name).write_text("\n".join(json.dumps(r) for r in rows))
+    trip_store = _TableStore(spark, tmpdirs["trip"], schemas.TRIP)
+    crumb_store = _TableStore(spark, tmpdirs["crumb"], schemas.BREADCRUMB)
+    body = breadcrumb_upsert_batch(trip_store, crumb_store)
+
+    def batch(name):
+        raw = spark.read.schema(schemas.RAW_BREADCRUMB).json(str(tmpdirs["in"] / name))
+        return conform_validate_stream(raw)
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(prop, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    body(batch("b1.json"), 0)
+    assert jobs("job_shape_read", trip_store.read) == 0
+    assert jobs("job_shape_body", lambda: body(batch("b2.json"), 1)) <= 4
+
+    trip, _ = split_star(batch("b2.json"))
+    plan = absent_rows(trip_store.read(), trip, ["trip_id"])._jdf.queryExecution().optimizedPlan()
+    assert "Aggregate" not in plan.toString()
 
 
 def test_stop_event_enrichment_merge(spark, tmpdirs):

