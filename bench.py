@@ -31,6 +31,8 @@ if _REPO not in sys.path:
 # Queries that exercise the distinct physical shapes: broadcast join + agg,
 # scan-heavy 8-agg group-by, two-level window, JSON conform + validate,
 # top-k window, plus (as the registry grows) dedup/similarity/text passes.
+# New entries go at the end: the first 20 are round 1's set, which
+# r01_comparable_total sums.
 HEADLINE = [
     "q_flagship_hotspot",
     "q_pricing_summary",
@@ -179,135 +181,6 @@ HEADLINE = [
     "q_ann_ivfpq_append",
 ]
 
-# Queries added to the headline set after round 1; excluded from the
-# round-over-round comparable subtotal.
-_POST_R01 = (
-    "q_ann_neardup_lsh",
-    "q_decontaminate",
-    "q_chunk_documents",
-    "q_label_centroids",
-    "q_boilerplate_scrub",
-    "q_ann_topk_int8",
-    "q_shipping_priority",
-    "q_lm_score",
-    "q_ann_pq_search",
-    "q_incremental_agg",
-    "q_hotspot_grid",
-    "q_quantize_embeddings",
-    "q_kernel_smooth",
-    "q_ann_mrl_topk",
-    "q_waiting_orders",
-    "q_knn_label",
-    "q_rolling_actives",
-    "q_incremental_neardup",
-    "q_ann_ivfpq_search",
-    "q_scd2_history",
-    "q_moving_average_24h",
-    "q_temperature_sample",
-    "q_volume_shipping",
-    "q_retrieval_metrics",
-    "q_ann_ivf_search",
-    "q_bm25_rank",
-    "q_table_diff",
-    "q_bm25_rank_pruned",
-    "q_bloom_prefilter_join",
-    "q_phrase_search",
-    "q_pagerank",
-    "q_triangle_count",
-    "q_cms_heavy_hitters",
-    "q_hits",
-    "q_label_prop",
-    "q_skyline_orders",
-    "q_mmr_rerank",
-    "q_kcore",
-    "q_event_transitions",
-    "q_sorted_neighborhood",
-    "q_region_trend",
-    "q_dedup_prefix_filter",
-    "q_benford_audit",
-    "q_seasonal_index",
-    "q_sssp_weighted",
-    "q_corr_matrix",
-    "q_degree_assortativity",
-    "q_assoc_rules",
-    "q_cusum_changepoint",
-    "q_image_ahash_neardup",
-    "q_trimmed_mean",
-    "q_attribution",
-    "q_pca_project",
-    "q_zipf_fit",
-    "q_autocorr_daily",
-    "q_theilsen_trend",
-    "q_user_entropy",
-    "q_session_ngrams",
-    "q_chi2_independence",
-    "q_rfm_segments",
-    "q_ks_test",
-    "q_large_orders",
-    "q_top_supplier_share",
-    "q_clustering_coeff",
-    "q_repeated_ngrams",
-    "q_dup_span_fraction",
-    "q_dedup_span_cut",
-    "q_yoy_growth",
-    "q_modal_priority",
-    "q_interarrival_stats",
-    "q_mann_whitney",
-    "q_cramers_v",
-    "q_conversion_latency",
-    "q_cdc_chunks",
-    "q_linkage_score",
-    "q_quantile_norm",
-    "q_lorenz_curve",
-    "q_bpe_token_counts",
-    "q_forecast_revenue",
-    "q_market_share",
-    "q_product_profit",
-    "q_returned_revenue",
-    "q_variant_props",
-    "q_quality_deciles",
-    "q_global_shuffle_shards",
-    "q_lm_mix_weights",
-    "q_feature_hashing",
-    "q_lm_heldout",
-    "q_source_jsd",
-    "q_semantic_dedup",
-    "q_incremental_semantic_dedup",
-    "q_survival_curve",
-    "q_incremental_cdc",
-    "q_dataset_card",
-    "q_lm_score_kn",
-    "q_lsh_quality",
-    "q_dsir_weights",
-    "q_dsir_resample",
-    "q_length_bucket_padding",
-    "q_audio_dsp",
-    "q_late_shipment_priority",
-    "q_dominant_supplier",
-    "q_ccnet_buckets",
-    "q_quality_classifier",
-    "q_classifier_filter",
-    "q_dp_counts",
-    "q_dedup_lines",
-    "q_image_phash_neardup",
-    "q_tokenizer_fertility",
-    "q_audio_mfcc",
-    "q_kanon_audit",
-    "q_hll_vocab_union",
-    "q_ltv_recursive",
-    "q_hard_negatives",
-    "q_hard_negatives_lsh",
-    "q_source_overlap",
-    "q_ltv_fold",
-    "q_video_mjpeg_features",
-    "q_frame_sample_mjpeg",
-    "q_audio_features_adpcm",
-    "q_pair_curation_crossmodal",
-    "q_incremental_image_neardup",
-    "q_crossmodal_clusters",
-)
-
-
 def _warm_page_cache(sf_dir: str) -> None:
     """Read every fixture parquet byte-for-byte BEFORE rep 1 so OS
     page-cache state stops dominating cross-boot comparisons (VERDICT r7
@@ -432,10 +305,10 @@ def main() -> None:
         query_cal[name] = round(statistics.median([lo, hi]), 3)
 
     total = round(sum(timings.values()), 3)
-    # The headline set grew past round 1's 20 queries (every _POST_R01
-    # name is new since); r01_comparable_total sums only the original 20
-    # so round-over-round totals compare like-for-like.
-    r01_set = [n for n in HEADLINE if n not in _POST_R01]
+    # The headline set grew past round 1's 20 queries by appending, so
+    # its first 20 entries are round 1's set; r01_comparable_total sums
+    # only those so round-over-round totals compare like-for-like.
+    r01_set = HEADLINE[:20]
     summary = {
         "metric": "headline_total",
         "value": total,

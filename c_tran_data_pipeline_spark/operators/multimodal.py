@@ -1259,15 +1259,16 @@ def crossmodal_joint_neardup(
     )
     # Narrow semi-join (never a broadcast of ids — candidate ids are
     # bounded by the cap but still grow with the corpus, the round-9
-    # maxResultSize lesson); the surviving slice is candidate-bounded,
-    # the same class the incremental operator broadcasts, so the
-    # shingle joins below need no shuffle_hash pin.
+    # maxResultSize lesson). The surviving caption slice grows with the
+    # corpus too (nearly every doc is a candidate when photo families
+    # are small), so the shingle joins keep the shuffle_hash pin: AQE
+    # must not promote a corpus-sized shingle side to a broadcast.
     caps = persist_once(
         pairs.select("asset_id", "caption").join(
             ids.hint("shuffle_hash"), "asset_id", "left_semi"
         )
     )
-    return _caption_joint_verdict(img, caps, ngram, joint_num, joint_den, hint=None)
+    return _caption_joint_verdict(img, caps, ngram, joint_num, joint_den, hint="shuffle_hash")
 
 
 def _caption_joint_verdict(

@@ -17,13 +17,16 @@ bit-identical results (pinned in tests/test_olap.py):
   by orders-per-customer (the document-grain class), no per-level jobs.
   This is the 100 TB shape for functional chains.
 
-``max_depth`` is the documented switch: the operator measures the true
-maximum chain length with one column-pruned aggregate over the already-
-materialized seq (an AQE-style runtime plan decision, O(customers)
-intermediate) and routes chains deeper than the threshold to the fold.
-The default of 64 keeps headroom under Spark's 100-level recursion
-limit while letting shallow relational chains exercise the native
-recursive surface.
+``max_depth`` is the documented switch. When it is positive the
+operator materializes seq, measures the true maximum chain length with
+one column-pruned aggregate over it (an AQE-style runtime plan decision,
+O(customers) intermediate) and routes chains deeper than the threshold
+to the fold. ``max_depth=0`` asks for the fold outright: no recursion is
+possible, so nothing is materialized or measured and the operator
+returns one lazy plan that runs no job before it is collected. The
+default of 64 keeps headroom under Spark's 100-level recursion limit
+while letting shallow relational chains exercise the native recursive
+surface.
 
 No reference-parity citation: the reference pipeline
 (/root/reference) has no recursive computation; this operator exists
@@ -52,28 +55,29 @@ def decayed_ltv(orders: DataFrame, decay: str = "0.98", max_depth: int = 64) -> 
     positive decimals), so both physical paths — and DuckDB's recursive
     oracle — hash bit-identically.
 
-    The windowed seq is localCheckpoint'ed (eager) rather than persisted:
-    each recursion level joins the frontier against seq, and without
-    materialization Spark re-evaluates the window-over-orders lineage at
-    EVERY level (measured 12.0 s vs ~7 s at sf0.1). localCheckpoint's
-    RDD is released by the ContextCleaner once the result is collected
-    and dropped — unlike a CacheManager persist, repeated bench
-    invocations in one session cannot accumulate cached copies
-    (ADVICE r6). The temp view backing the recursive SQL gets a
+    When ``max_depth > 0`` the windowed seq is localCheckpoint'ed (eager)
+    rather than persisted and its max ``rn`` is collected to pick the
+    path: each recursion level joins the frontier against seq, and
+    without materialization Spark re-evaluates the window-over-orders
+    lineage at EVERY level (measured 12.0 s vs ~7 s at sf0.1).
+    localCheckpoint's RDD is released by the ContextCleaner once the
+    result is collected and dropped — unlike a CacheManager persist,
+    repeated bench invocations in one session cannot accumulate cached
+    copies (ADVICE r6). The temp view backing the recursive SQL gets a
     process-unique name and is dropped as soon as the plan is analyzed.
+    ``max_depth=0`` skips both: the fold reads seq once, so it needs no
+    materialization, and it slices each chain by its in-group
+    ``count(1)`` instead of the measured depth.
     """
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    seq = (
-        orders.select(
-            "o_custkey",
-            F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
-            F.row_number().over(w).alias("rn"),
-        )
-        .localCheckpoint(eager=True)
+    seq = orders.select(
+        "o_custkey",
+        F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
+        F.row_number().over(w).alias("rn"),
     )
-    depth = seq.agg(F.max("rn")).collect()[0][0] or 0
-
-    if depth <= max_depth:
+    if max_depth > 0:
+        seq = seq.localCheckpoint(eager=True)
+    if max_depth > 0 and (seq.agg(F.max("rn")).collect()[0][0] or 0) <= max_depth:
         spark = orders.sparkSession
         view = f"__decayed_ltv_seq_{next(_VIEW_SEQ)}"
         seq.createOrReplaceTempView(view)
@@ -102,7 +106,7 @@ def decayed_ltv(orders: DataFrame, decay: str = "0.98", max_depth: int = 64) -> 
     return seq.groupBy("o_custkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         F.expr(
-            f"CAST(aggregate(slice(array_sort(collect_list(struct(rn, price))), 2, {depth}),"
+            "CAST(aggregate(slice(array_sort(collect_list(struct(rn, price))), 2, CAST(count(1) AS INT)),"
             " array_sort(collect_list(struct(rn, price)))[0].price,"
             f" (acc, x) -> CAST(round(acc * CAST({decay} AS DECIMAL(4,2)) + x.price, 2)"
             "             AS DECIMAL(18,2))) AS DOUBLE)"

@@ -1920,8 +1920,9 @@ def q_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(DuckDB refuses DECIMAL(18)×DECIMAL(18) without a widening cast; "
     "integers sidestep engine decimal-width rules entirely). The six "
     "upper-triangle correlations are fixed-shape scalar IEEE "
-    "expressions over the localCheckpoint'ed 1-row stats relation "
-    "(no per-pair rescan), rounded to 12 — the q_region_trend "
+    "expressions over ONE aggregate row, inlined into six rows in "
+    "the same lazy plan (no per-pair rescan, no job before "
+    "collect), rounded to 12 — the q_region_trend "
     "single-pass policy.",
     tags=("olap", "agg", "stats"),
 )
@@ -1932,44 +1933,34 @@ def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d": "l_discount",
         "t": "l_tax",
     }
-    li = load_table(spark, sf_dir, "lineitem").select(
-        *[
-            F.round(F.col(c) * 100).cast("long").alias(k)
-            for k, c in cols.items()
-        ]
-    )
     keys = list(cols)
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for k in keys:
-        aggs.append(F.sum(F.col(k).cast("decimal(38,0)")).cast("double").alias(f"s_{k}"))
-    for i, a in enumerate(keys):
-        for b in keys[i:]:
-            aggs.append(
-                F.sum((F.col(a) * F.col(b)).cast("decimal(38,0)"))
-                .cast("double")
-                .alias(f"s_{a}{b}")
-            )
-    s = li.agg(*aggs).localCheckpoint(eager=True)
-    nd = F.col("n").cast("double")
-    parts = []
+    # Expressions go in as SQL text: one call per expression, where the
+    # Column API costs one driver round-trip per operator (most of this
+    # builder's time).
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
+        *[f"CAST(round({c} * 100) AS BIGINT) AS {k}" for k, c in cols.items()]
+    )
+    aggs = ["count(1) AS n"]
+    aggs += [f"CAST(sum(CAST({k} AS DECIMAL(38,0))) AS DOUBLE) AS s_{k}" for k in keys]
+    aggs += [
+        f"CAST(sum(CAST({a} * {b} AS DECIMAL(38,0))) AS DOUBLE) AS s_{a}{b}"
+        for i, a in enumerate(keys)
+        for b in keys[i:]
+    ]
+    nd = "CAST(n AS DOUBLE)"
+    pairs = []
     for i, a in enumerate(keys):
         for b in keys[i + 1 :]:
-            num = nd * F.col(f"s_{a}{b}") - F.col(f"s_{a}") * F.col(f"s_{b}")
-            den = F.sqrt(
-                (nd * F.col(f"s_{a}{a}") - F.col(f"s_{a}") * F.col(f"s_{a}"))
-                * (nd * F.col(f"s_{b}{b}") - F.col(f"s_{b}") * F.col(f"s_{b}"))
+            num = f"{nd} * s_{a}{b} - s_{a} * s_{b}"
+            den = (
+                f"sqrt(({nd} * s_{a}{a} - s_{a} * s_{a})"
+                f" * ({nd} * s_{b}{b} - s_{b} * s_{b}))"
             )
-            parts.append(
-                s.select(
-                    F.lit(cols[a]).alias("var_x"),
-                    F.lit(cols[b]).alias("var_y"),
-                    F.round(num / den, 12).alias("corr"),
-                )
+            pairs.append(
+                f"named_struct('var_x', '{cols[a]}', 'var_y', '{cols[b]}',"
+                f" 'corr', round(({num}) / {den}, 12))"
             )
-    out = parts[0]
-    for p_ in parts[1:]:
-        out = out.unionByName(p_)
-    return out
+    return li.selectExpr(*aggs).selectExpr(f"inline(array({', '.join(pairs)}))")
 
 
 @query(
@@ -3229,7 +3220,9 @@ _LTV_RECURSIVE_SQL = """
     "paths are pinned bit-equal at two SFs in tests/test_olap.py::"
     "test_ltv_recursive_equals_one_shuffle_fold, so the recursion "
     "surface and the scale shape can never drift. The seq "
-    "materialization is a localCheckpoint (each recursion level joins "
+    "materialization (only when max_depth > 0, as here; q_ltv_fold's "
+    "max_depth=0 skips it and the depth probe) is a localCheckpoint "
+    "(each recursion level joins "
     "against it; without it every level re-evaluated the window "
     "lineage, measured 12.0 s vs ~7 s at sf0.1) — ContextCleaner "
     "releases it after collection, so repeated bench runs in one "
@@ -3256,7 +3249,12 @@ def q_ltv_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     "semantics, but forced onto the ONE-SHUFFLE array fold "
     "(max_depth=0 routes every chain to array_sort + aggregate() with "
     "the identical per-step DECIMAL round) instead of native WITH "
-    "RECURSIVE's one-engine-job-per-level. Cost is bounded by "
+    "RECURSIVE's one-engine-job-per-level. With recursion ruled out "
+    "there is no seq checkpoint and no max-depth probe: each chain is "
+    "sliced by its in-group count(1), so the builder returns one lazy "
+    "plan that runs no job before collect (pinned with native "
+    "recursion at sf0.001 by tests/test_olap.py::"
+    "test_ltv_lazy_fold_equals_native_recursion). Cost is bounded by "
     "orders-per-customer, not chain depth × scheduler latency — this "
     "is the plan you'd run on a 1000-executor cluster, and the bench "
     "headline should price it, while q_ltv_recursive stays the "

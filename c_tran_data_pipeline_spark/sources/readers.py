@@ -39,14 +39,54 @@ TABLES = (
 _NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
+# Inferred scan schema per (session, file version): see load_table.
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def _file_version(path: str) -> tuple | None:
+    """What identifies one version of a local parquet table: its real
+    path, size and mtime, plus every file's relative name, size and
+    mtime when it is a directory (an overwrite writes new part files, a
+    replaced part file changes size or mtime). None when the driver
+    cannot stat the path (a remote URI) or it changes while listed."""
+    try:
+        real = os.path.realpath(path)
+        st = os.stat(real)
+        files = []
+        for root, dirs, names in os.walk(real):  # yields nothing for a file
+            dirs.sort()
+            for n in sorted(names):
+                f = os.path.join(root, n)
+                fst = os.stat(f)
+                files.append((os.path.relpath(f, real), fst.st_size, fst.st_mtime_ns))
+    except OSError:
+        return None
+    return (real, st.st_size, st.st_mtime_ns, tuple(files))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table from ``sf_dir``. Plain parquet scan —
-    filters/projections applied by the caller push down into it."""
+    filters/projections applied by the caller push down into it.
+
+    A bare ``spark.read.parquet`` runs a footer-inference job on every
+    call. The schema inferred on the first load of a file version is
+    kept per session and passed to later loads of the same version, so
+    they build their plan without running any job. A rewritten table
+    is a new version and is inferred again; a path the driver cannot
+    stat is always inferred."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Date-part semantics (hour/dayofweek) must match the UTC-naive oracle
     # even when the caller's session (e.g. the driver's) isn't ours.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    version = _file_version(path)
+    key = (spark.sparkContext.applicationId, version)
+    if version is not None and key in _SCHEMAS:
+        df = spark.read.schema(_SCHEMAS[key]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if version is not None:
+            _SCHEMAS[key] = df.schema
     dtypes = dict(df.dtypes)
     for c in _NANOS_TS_COLS.get(name, ()):
         if dtypes.get(c) == "bigint":

@@ -19,3 +19,15 @@ SF_ORACLE = "/root/testdata/sf0.01"
 def spark():
     s = get_spark("pytest")
     yield s
+
+
+def run_counting_jobs(sc, group: str, fn):
+    """Run ``fn()`` under Spark job group ``group``; return its result
+    and the number of Spark jobs it ran."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

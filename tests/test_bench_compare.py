@@ -61,3 +61,16 @@ def test_entries_carry_calibrated_values():
     assert [e["query"] for e in r["regressed"]] == ["a"]
     assert r["regressed"][0]["old_cal"] == 2.0  # 1.0 / 0.5
     assert r["regressed"][0]["new_cal"] == 4.0  # 4.0 / 1.0
+
+
+def test_r01_subtotal_is_the_first_twenty_headline_queries():
+    """r01_comparable_total sums HEADLINE[:20]. The headline list only
+    grows at the end, so queries added after round 1 stay out of it,
+    the two newest included."""
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    from bench import HEADLINE
+
+    r01 = HEADLINE[:20]
+    assert len(set(r01)) == 20
+    assert "q_corpus_prep_crossmodal" not in r01
+    assert "q_ann_ivfpq_append" not in r01

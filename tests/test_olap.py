@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 from c_tran_data_pipeline_spark.plans.olap_queries import q_approx_distinct
-from tests.conftest import SF_ORACLE, SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE, run_counting_jobs
 
 
 def test_approx_distinct_error_bound(spark):
@@ -842,6 +842,64 @@ def test_sql_scripting_while_loop_convergence(spark):
     assert (got.k, got.covered, got.total) == (want_k, acc, total)
 
 
+def test_ltv_lazy_fold_equals_native_recursion(spark):
+    """max_depth=0 is the path q_ltv_fold takes: no checkpoint, no depth
+    probe, each chain sliced by its in-group count(1). It must stay
+    bit-equal to native WITH RECURSIVE (max_depth=64; the fixture's
+    chains are 25 deep)."""
+    from c_tran_data_pipeline_spark.operators.recursion import decayed_ltv
+    from c_tran_data_pipeline_spark.sources.readers import load_table
+
+    orders = load_table(spark, SF_SMOKE, "orders")
+    rec = {r.o_custkey: (r.n_orders, r.decayed_ltv)
+           for r in decayed_ltv(orders, max_depth=64).collect()}
+    fold = {r.o_custkey: (r.n_orders, r.decayed_ltv)
+            for r in decayed_ltv(orders, max_depth=0).collect()}
+    assert rec and rec == fold
+    assert max(n for n, _ in rec.values()) > 1
+
+
+# The reads-workload builders other than q_rfm_segments and
+# q_quality_deciles (whose approxQuantile / offsets collects are eager by
+# design): once the fixture's schemas are known, building them runs no
+# Spark job.
+_LAZY_READS_BUILDERS = (
+    "q_flagship_hotspot",
+    "q_flagship_hotspot_pm",
+    "q_conform_validate",
+    "q_breadcrumb_conform",
+    "q_enrich_merge",
+    "q_sessionize",
+    "q_window_hourly",
+    "q_asof_prev_purchase",
+    "q_top3_orders_per_customer",
+    "q_pricing_summary",
+    "q_ltv_fold",
+    "q_corr_matrix",
+)
+
+
+def test_reads_builders_run_no_jobs_and_leave_no_pins(spark):
+    """Job-shape guard: after one warm load of the fixture, building
+    each lazy reads query runs 0 Spark jobs, and q_corr_matrix and
+    q_ltv_fold leave no persisted RDD behind once collected."""
+    from c_tran_data_pipeline_spark.plans.registry import all_queries
+    from c_tran_data_pipeline_spark.sources.readers import load_tables
+
+    sc = spark.sparkContext
+    reg = all_queries()
+    load_tables(spark, SF_SMOKE)
+    for name in _LAZY_READS_BUILDERS:
+        pins = sc._jsc.getPersistentRDDs().size()
+        df, n = run_counting_jobs(
+            sc, f"lazy_build_{name}", lambda: reg[name].builder(spark, SF_SMOKE)
+        )
+        assert n == 0, name
+        if name in ("q_corr_matrix", "q_ltv_fold"):
+            assert df.collect()
+            assert sc._jsc.getPersistentRDDs().size() == pins, name
+
+
 @pytest.mark.slow
 def test_ltv_recursive_equals_one_shuffle_fold(spark):
     """The operator's max_depth switch routes between two physically
@@ -863,10 +921,12 @@ def test_ltv_recursive_equals_one_shuffle_fold(spark):
         # max_depth=64: fixture chains are 25 deep → native recursion.
         rec = {r.o_custkey: (r.n_orders, r.decayed_ltv)
                for r in decayed_ltv(orders, max_depth=64).collect()}
-        # max_depth=1: every chain is 'deep' → the fold branch.
-        fold = {r.o_custkey: (r.n_orders, r.decayed_ltv)
-                for r in decayed_ltv(orders, max_depth=1).collect()}
-        assert rec == fold, sf
+        # max_depth=1: every chain is 'deep' → the fold branch over the
+        # checkpointed seq; max_depth=0: the lazy fold q_ltv_fold runs.
+        for depth in (1, 0):
+            fold = {r.o_custkey: (r.n_orders, r.decayed_ltv)
+                    for r in decayed_ltv(orders, max_depth=depth).collect()}
+            assert rec == fold, (sf, depth)
 
     sf = "/root/testdata/sf0.01"
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -889,6 +949,7 @@ def test_ltv_recursive_equals_one_shuffle_fold(spark):
         )
     )
     want = {r.o_custkey: (r.n_orders, r.decayed_ltv) for r in indep.collect()}
-    got = {r.o_custkey: (r.n_orders, r.decayed_ltv)
-           for r in decayed_ltv(load_table(spark, sf, "orders"), max_depth=1).collect()}
-    assert got == want
+    for depth in (1, 0):
+        got = {r.o_custkey: (r.n_orders, r.decayed_ltv)
+               for r in decayed_ltv(load_table(spark, sf, "orders"), max_depth=depth).collect()}
+        assert got == want, depth

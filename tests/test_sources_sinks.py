@@ -16,7 +16,7 @@ from c_tran_data_pipeline_spark.sources.kafka import read_ccloud_config, to_kafk
 from c_tran_data_pipeline_spark.sources.readers import load_table, read_json_records
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, run_counting_jobs
 
 PAGE = """
 <html><body>
@@ -201,6 +201,67 @@ def test_read_evolving_parquet_unions_schemas(spark, tmp_path):
     assert len(rows) == 3
     assert rows[1]["lang"] is None and rows[1]["quality"] is None
     assert rows[3]["lang"] == "en" and rows[3]["quality"] == 0.9
+
+
+def test_load_table_reuses_schema_and_never_serves_a_stale_one(spark, tmp_path):
+    """A second load of an unchanged file runs no Spark job (the
+    inferred schema is reused); overwriting the same path, as a single
+    file or as a part file inside a table directory, is a new version
+    whose new column comes back with its values. The events ``ts``
+    normalization still yields a TIMESTAMP on the reused-schema path,
+    for micros- and nanos-typed drops alike."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sc = spark.sparkContext
+    d = str(tmp_path)
+
+    path = tmp_path / "orders.parquet"
+    pq.write_table(pa.table({"o_orderkey": pa.array([1, 2], pa.int64())}), path)
+    load_table(spark, d, "orders")
+    df, n = run_counting_jobs(sc, "load_table_reuse_file", lambda: load_table(spark, d, "orders"))
+    assert n == 0
+    assert sorted(r.o_orderkey for r in df.collect()) == [1, 2]
+
+    pq.write_table(
+        pa.table({"o_orderkey": pa.array([3, 4], pa.int64()), "o_comment": ["x", "y"]}), path
+    )
+    got = load_table(spark, d, "orders")
+    assert got.columns == ["o_orderkey", "o_comment"]
+    assert sorted(tuple(r) for r in got.collect()) == [(3, "x"), (4, "y")]
+
+    part = tmp_path / "events.parquet" / "part-00000.parquet"
+    part.parent.mkdir()
+    t0 = dt.datetime(2024, 1, 1, 12, 30)
+    pq.write_table(
+        pa.table({"user_id": pa.array([7], pa.int64()), "ts": pa.array([t0], pa.timestamp("us"))}),
+        part,
+    )
+    load_table(spark, d, "events")
+    ev, n = run_counting_jobs(sc, "load_table_reuse_dir", lambda: load_table(spark, d, "events"))
+    assert n == 0
+    assert dict(ev.dtypes)["ts"] == "timestamp"
+    assert ev.select(F.unix_micros("ts")).first()[0] == 1704112200 * 10**6
+
+    for unit in ("us", "ns"):
+        pq.write_table(
+            pa.table(
+                {
+                    "user_id": pa.array([8], pa.int64()),
+                    "ts": pa.array([t0], pa.timestamp(unit)),
+                    "event_type": ["view"],
+                }
+            ),
+            part,
+        )
+        load_table(spark, d, "events")
+        ev = load_table(spark, d, "events")
+        assert ev.columns == ["user_id", "ts", "event_type"], unit
+        assert dict(ev.dtypes)["ts"] == "timestamp", unit
+        r = ev.select("user_id", F.unix_micros("ts"), "event_type").first()
+        assert tuple(r) == (8, 1704112200 * 10**6, "view"), unit
 
 
 def test_http_json_datasource_partitions_per_url(spark, tmp_path):

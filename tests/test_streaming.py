@@ -21,6 +21,7 @@ from c_tran_data_pipeline_spark.streaming.pipeline import (
     run_breadcrumb_pipeline,
     run_stop_event_pipeline,
 )
+from tests.conftest import run_counting_jobs
 
 
 @pytest.fixture()
@@ -212,18 +213,9 @@ def test_breadcrumb_batch_job_shape(spark, tmpdirs):
         raw = spark.read.schema(schemas.RAW_BREADCRUMB).json(str(tmpdirs["in"] / name))
         return conform_validate_stream(raw)
 
-    def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            for prop in ("spark.jobGroup.id", "spark.job.description"):
-                sc.setLocalProperty(prop, None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
     body(batch("b1.json"), 0)
-    assert jobs("job_shape_read", trip_store.read) == 0
-    assert jobs("job_shape_body", lambda: body(batch("b2.json"), 1)) <= 4
+    assert run_counting_jobs(sc, "job_shape_read", trip_store.read)[1] == 0
+    assert run_counting_jobs(sc, "job_shape_body", lambda: body(batch("b2.json"), 1))[1] <= 4
 
     trip, _ = split_star(batch("b2.json"))
     plan = absent_rows(trip_store.read(), trip, ["trip_id"])._jdf.queryExecution().optimizedPlan()
