@@ -134,12 +134,6 @@ def _book_lit(book: list[tuple[int, list[float]]]) -> Column:
     return F.expr(f"array({rows})")
 
 
-def _cid_lit(book: list[tuple[int, list[float]]]) -> Column:
-    return F.expr(
-        "array(" + ",".join(str(cid) for cid, _ in sorted(book)) + ")"
-    ).cast("array<bigint>")
-
-
 def _sub_scores(v_sub: Column, book: list[tuple[int, list[float]]]) -> Column:
     """Array of squared L2 distances from one sub-vector to every
     sub-centroid, ordered by centroid id — one transform over the

@@ -342,15 +342,12 @@ def hyperplane_lsh_buckets(
     )
 
 
-def _plane_signs(j: int, v: Column, dim: int | None = None) -> Column:
-    """±1 sign vector for plane j. With ``dim`` known, the whole vector is
-    a literal array (signs are row-invariant — see _sign_value); without
-    it, falls back to per-row md5 expressions. NB: the dynamic path must
-    use a 1-arg lambda — PySpark treats a 2-arg transform lambda as
-    (element, index), so a default-arg closure (`lambda d, _j=j: ...`)
-    silently binds the plane to the array index instead."""
-    if dim is not None:
-        return F.array(*[F.lit(_sign_value(j, d)) for d in range(dim)])
+def _plane_signs(j: int, v: Column) -> Column:
+    """±1 sign vector for plane j as per-row md5 expressions over
+    ``v``'s own length. NB: this must use a 1-arg lambda — PySpark
+    treats a 2-arg transform lambda as (element, index), so a
+    default-arg closure (`lambda d, _j=j: ...`) silently binds the
+    plane to the array index instead."""
 
     def sign_at(d: Column) -> Column:
         return hyperplane_sign(F.lit(j), d)
@@ -403,10 +400,6 @@ def _sign_rows_sql(planes: int, plane_offset: int, dim: int) -> str:
     return f"array({rows})"
 
 
-def _sign_rows_lit(planes: int, plane_offset: int, dim: int) -> Column:
-    return F.expr(_sign_rows_sql(planes, plane_offset, dim))
-
-
 def _flat_dot_sql(a: str, b: str, dim: int) -> str:
     """⟨a, b⟩ as flat codegen'd SQL when both arrays have exactly
     ``dim`` elements, falling back to the interpreted aggregate fold
@@ -427,100 +420,16 @@ def _flat_dot_sql(a: str, b: str, dim: int) -> str:
 
 def _bucket_expr(v: Column, planes: int, plane_offset: int = 0, dim: int | None = None) -> Column:
     if dim is not None:
-        return _bucket_from_sign_rows(v, _sign_rows_lit(planes, plane_offset, dim), planes)
+        return _bucket_from_sign_rows(v, F.expr(_sign_rows_sql(planes, plane_offset, dim)), planes)
     acc = F.lit(0).cast("bigint")
     for j in range(planes):
         proj = F.aggregate(
-            F.zip_with(v, _plane_signs(plane_offset + j, v, dim), lambda x, s: x * s),
+            F.zip_with(v, _plane_signs(plane_offset + j, v), lambda x, s: x * s),
             F.lit(0.0).cast("double"),
             lambda a, x: a + x,
         )
         acc = acc + F.when(proj > 0, F.lit(1 << j).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
     return acc
-
-
-def _flat_proj_sql(vcol: str, plane: int, dim: int) -> str:
-    """⟨v, signs(plane)⟩ unrolled to flat codegen arithmetic: the ±1
-    multiplications fold into +/- operators (IEEE-exact — x*1.0 ≡ x,
-    x*(-1.0) ≡ -x, and a - b ≡ a + (-b) bit-for-bit), left-associated in
-    dim order starting from 0.0, so every partial sum is bit-identical
-    to the interpreted zip_with/aggregate fold in
-    :func:`_bucket_from_sign_rows` (pinned in tests/test_similarity.py).
-    Meaningful ONLY when ``size(v) == dim`` — callers guard per row;
-    element access is ``get()`` (NULL on out-of-bounds) rather than
-    ``[]`` because these columns evaluate EAGERLY for every row,
-    including malformed ones the guard routes elsewhere, and ANSI mode
-    makes ``[]`` throw on a short array."""
-    parts = ["0.0D"]
-    for d in range(dim):
-        op = "+" if _sign_value(plane, d) > 0 else "-"
-        parts.append(f"{op} get(`{vcol}`, {d})")
-    return " ".join(parts)
-
-
-def _lambda_bucket_array(v: Column, planes: int, tables: int, dim: int) -> Column:
-    """The round-9 interpreted shape: the tables×planes×dim sign tensor
-    as ONE Literal, the bucket array as one transform over it
-    (constant-size plan no matter the table count — see
-    _bucket_from_sign_rows)."""
-    signs3 = F.expr(
-        "array(" + ",".join(_sign_rows_sql(planes, t * planes, dim) for t in range(tables)) + ")"
-    )
-    return F.transform(signs3, lambda sign_rows: _bucket_from_sign_rows(v, sign_rows, planes))
-
-
-def _multi_table_lsh_buckets_lambda(
-    df: DataFrame, planes: int, tables: int, key: str, vec: str, dim: int
-) -> DataFrame:
-    """Round-9 interpreted-HOF bucket pass, kept callable for A/B
-    comparisons (scripts/lsh_shape_ab.py) and as the semantics anchor
-    the flat shape is pinned against."""
-    v = _as_double(F.col(vec))
-    return df.select(
-        F.col(key), F.col(vec),
-        F.posexplode(_lambda_bucket_array(v, planes, tables, dim)).alias("table", "bucket"),
-    )
-
-
-def _multi_table_lsh_buckets_flat(
-    df: DataFrame, planes: int, tables: int, key: str, vec: str, dim: int
-) -> DataFrame:
-    """The JIT-able split-projection shape (round 10, VERDICT r9 #2):
-    every (table, plane) projection is its OWN column in a Project
-    below the posexplode Generate, so whole-stage codegen emits one
-    small method per projection (a fused tables×planes×dim expression
-    falls out of JIT — the round-9 finding), and the Generate barrier
-    keeps CollapseProject from re-fusing them into the generator.
-    Per-row guard: rows whose vector length ≠ dim route through the
-    interpreted lambda form — bit-identical semantics for malformed
-    lengths and NULLs (the flat sum is itself bit-identical for
-    well-formed rows, see _flat_proj_sql). Execution is ~5× the
-    interpreted form per row; the Catalyst-analysis cost of the
-    ~tables×planes×dim-node tree is paid once per (input plan, banding)
-    per session via the analyzed-plan cache in multi_table_lsh_buckets."""
-    v = _as_double(F.col(vec))
-    base = df.select(F.col(key), F.col(vec), v.alias("__mt_v"))
-    proj_cols = [
-        F.expr(_flat_proj_sql("__mt_v", t * planes + j, dim)).alias(f"__mt_p_{t}_{j}")
-        for t in range(tables)
-        for j in range(planes)
-    ]
-    proj = base.select(F.col(key), F.col(vec), F.col("__mt_v"), *proj_cols)
-    flat_tables = []
-    for t in range(tables):
-        terms = [
-            F.when(F.col(f"__mt_p_{t}_{j}") > 0, F.lit(1 << j).cast("bigint")).otherwise(
-                F.lit(0).cast("bigint")
-            )
-            for j in range(planes)
-        ]
-        flat_tables.append(sum(terms[1:], terms[0]))
-    buckets = F.when(F.size("__mt_v") == dim, F.array(*flat_tables)).otherwise(
-        _lambda_bucket_array(F.col("__mt_v"), planes, tables, dim)
-    )
-    return proj.select(
-        F.col(key), F.col(vec), F.posexplode(buckets).alias("table", "bucket")
-    )
 
 
 def _multi_table_lsh_buckets_arrow(
@@ -531,8 +440,9 @@ def _multi_table_lsh_buckets_arrow(
     (tables·planes)×dim ±1 sign matrix is a closed-over numpy constant;
     projections accumulate SEQUENTIALLY over the dim axis (vectorized
     across rows and planes), so every partial sum is the same IEEE
-    float64 add chain as the interpreted zip_with/aggregate fold and the
-    flat SQL — bit-identical buckets (pinned in tests/test_similarity.py).
+    float64 add chain as the interpreted zip_with/aggregate fold of
+    hyperplane_lsh_buckets — bit-identical buckets (pinned in
+    tests/test_similarity.py).
     Rows whose vector is NULL or whose length ≠ dim get bucket 0 in
     every table, exactly what the null-poisoned JVM fold produces.
     Plan is constant-size (no Catalyst analysis growth, no codegen
@@ -598,28 +508,18 @@ def multi_table_lsh_buckets(
     tables buy recall, planes buy precision (smaller candidate sets).
     One scan, no shuffle, on every shape.
 
-    With ``dim`` known the projections run in the ARROW/numpy shape
-    (_multi_table_lsh_buckets_arrow) — adopted in round 10 after a
-    three-way interleaved A/B at the fixture and a 10× corpus rung
-    (LSH_SHAPE_AB_r10.json, scripts/lsh_shape_ab.py):
-
-      rung 20k (9 planes × 36 tables), min-of-3, same session:
-        construction  lambda 0.63 s · flat 5.31 s · arrow 0.07 s
-        execution     lambda 2.88 s · flat 4.33 s · arrow 1.12 s
-
-    The round-9 interpreted-HOF ``lambda`` shape keeps a tiny plan but
-    pays µs-per-element interpreted folds at execution; the round-9
-    "adopt next round" ``flat`` split-projection shape was built, plus
-    an analyzed-plan cache per (input, banding) — and still LOSES: the
-    ~tables×planes×dim-node tree pays Catalyst optimization + codegen
-    per ACTION (not just analysis per construction, which the cache did
-    erase — see construct_warm in the A/B record), and its 100-column
-    Project breaks whole-stage codegen (janino InternalCompilerException
-    → per-expression fallback). The arrow shape is bit-identical by
-    construction (sequential float64 fold — tests pin all three shapes
-    equal), has a constant-size plan, and hands the projection GEMM-
-    shaped work to numpy (guide §4.2). The HOF shapes stay callable for
-    the A/B harness and as the semantics anchor."""
+    With ``dim`` known the projections run in the Arrow/numpy shape
+    (_multi_table_lsh_buckets_arrow). Two interpreted shapes were
+    measured against it and deleted (LSH_SHAPE_AB_r10.json): one
+    transform over a tables×planes×dim sign literal, and one flat SQL
+    column per projection. At the 20k-vector rung (9 planes × 36
+    tables, min-of-3) construction took 0.63 / 5.31 / 0.07 s and
+    execution 2.88 / 4.33 / 1.12 s (transform / flat / Arrow): the
+    Arrow plan is constant-size and numpy runs the projections at batch
+    grain, while the flat tree pays Catalyst and codegen per action.
+    Buckets equal ``tables`` runs of hyperplane_lsh_buckets with
+    ``plane_offset=t*planes`` (tests pin this). Without ``dim`` the
+    interpreted per-row fold of _bucket_expr is the only path."""
     if dim is None:
         v = _as_double(F.col(vec))
         buckets = F.array(*[_bucket_expr(v, planes, t * planes, dim) for t in range(tables)])

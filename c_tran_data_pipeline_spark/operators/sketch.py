@@ -41,13 +41,8 @@ CMS_B = (17, 29, 47, 71)
 
 def cms_bucket(key: Column, row: int, width: int) -> Column:
     """Bucket of ``key`` in sketch row ``row`` — portable integer hash,
-    identical arithmetic to the SQL twin."""
+    identical arithmetic to the SQL twin (plans.scale_queries._cms_probe_sql)."""
     return ((key % CMS_P) * CMS_A[row] + CMS_B[row]) % CMS_P % width
-
-
-def cms_bucket_sql(key_sql: str, row: int, width: int) -> str:
-    """DuckDB twin of :func:`cms_bucket` (same literals, same order)."""
-    return f"((({key_sql}) % {CMS_P}) * {CMS_A[row]} + {CMS_B[row]}) % {CMS_P} % {width}"
 
 
 def build_cms(df: DataFrame, key: str, width: int = 1024, depth: int = 4) -> DataFrame:

@@ -17,8 +17,11 @@ and the pytest suite carries the real assertion.
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -52,83 +55,39 @@ def query(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = 
     return deco
 
 
-# Names the external correctness gate should evaluate FIRST, in this
-# order. The gate records rows for exactly the first 50 names of
-# ``all_queries()`` ordering per round (a hard cap or time budget), so
-# dict ordering decides which queries get hard evidence each round.
-# Round 3 closed the never-gated backlog; from round 4 on the list
-# ROTATES STALE EVIDENCE (VERDICT.md r3 item 3): each round gates the
-# 50 queries whose latest driver row is oldest, with new registrations
-# (evidence-free by construction) leading.
-_GATE_FIRST: tuple[str, ...] = (
-    # ROUND-10 ROTATION (VERDICT.md r9 #1/#6 discipline; the freshness
-    # test makes the stale cohort mandatory). Order: (a) the seven
-    # exact-oracle queries whose PHYSICAL PLANS changed in this round's
-    # optimizations (fused multi-NTILE, Arrow LSH bucket pass,
-    # candidate-restricted caption shingling) — values hash-verified
-    # unchanged at BOTH SFs in this repo's sweeps, fresh driver rows
-    # close the loop; then (b) every exact query whose latest committed
-    # driver row is >5 rounds old (the r04-cohort remainder —
-    # tests/test_evidence_freshness.py fails unless all are here); then
-    # (c) the alphabetically-first 27 of the age-5 cohort, filling the
-    # 50-row budget.
-    # (a) round-10 plan-changed exact queries:
-    "q_rfm_segments",
-    "q_ann_neardup_lsh",
-    "q_ann_lsh_topk",
-    "q_hard_negatives_lsh",
-    "q_pair_curation_crossmodal",
-    "q_corpus_prep_crossmodal",
-    "q_crossmodal_clusters",
-    # (b) every exact query with evidence >5 rounds old:
-    "q_quantile_norm",
-    "q_region_trend",
-    "q_repeated_ngrams",
-    "q_seasonal_index",
-    "q_session_ngrams",
-    "q_sorted_neighborhood",
-    "q_source_jsd",
-    "q_sssp_weighted",
-    "q_survival_curve",
-    "q_theilsen_trend",
-    "q_top_supplier_share",
-    "q_triangle_count",
-    "q_trimmed_mean",
-    "q_user_entropy",
-    "q_yoy_growth",
-    "q_zipf_fit",
-    # (c) alphabetically-first 27 of the age-5 cohort:
-    "q_asof_prev_purchase",
-    "q_asof_tolerance",
-    "q_binary_meta",
-    "q_bloom_prefilter_join",
-    "q_bm25_rank_pruned",
-    "q_cms_heavy_hitters",
-    "q_constraint_audit",
-    "q_corpus_prep",
-    "q_corpus_prep_neardup",
-    "q_cube_order_matrix",
-    "q_dedup_canonical",
-    "q_dedup_clusters",
-    "q_dedup_exact",
-    "q_dedup_minhash_lsh",
-    "q_dedup_minhash_sig",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_simhash_pairs",
-    "q_dedup_span_cut",
-    "q_domain_cap",
-    "q_feature_hashing",
-    "q_forecast_revenue",
-    "q_grouping_sets_shipping",
-    "q_incremental_ingest",
-    "q_interpolate_linear",
-    "q_khop_reach",
-    "q_lm_heldout",
-    "q_lm_mix_weights",
-)
+_RECORDS = Path(__file__).resolve().parents[2]  # repo root: CORRECTNESS_r{N}.json
+
+
+def _gate_evidence() -> tuple[dict[str, int], dict[str, int]]:
+    """→ (latest passing round, latest recorded round) per query name,
+    from the committed ``CORRECTNESS_r{N}.json`` records. A rows-only
+    query's row (``err: no_oracle``, rows_match false) counts as recorded
+    but not as passed."""
+    passed: dict[str, int] = {}
+    recorded: dict[str, int] = {}
+    for f in _RECORDS.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f.name)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        for name, row in json.loads(f.read_text()).items():
+            recorded[name] = max(recorded.get(name, 0), rnd)
+            if row.get("rows_match"):
+                passed[name] = max(passed.get(name, 0), rnd)
+    return passed, recorded
 
 
 def all_queries() -> dict[str, QuerySpec]:
+    """Every registered query, stalest gate evidence first.
+
+    The external correctness gate records rows for the first 50 names
+    of this order each round. The order is a stable sort of the
+    registry by the committed records: names with no recorded row, then
+    exact-oracle queries by latest passing round (never passed = round
+    0), then rows-only queries; with no records (an installed copy) it
+    is registration order. tests/test_evidence_freshness.py checks the
+    window. Not derived yet: leading with queries whose plan changed
+    since their last recorded row, which needs committed plan fingerprints."""
     # Import side-effect modules that register their specs.
     from c_tran_data_pipeline_spark.plans import (  # noqa: F401
         analytics,
@@ -146,6 +105,13 @@ def all_queries() -> dict[str, QuerySpec]:
         warehouse_queries,
     )
 
-    front = [n for n in _GATE_FIRST if n in _REGISTRY]
-    rest = [n for n in _REGISTRY if n not in _GATE_FIRST]
-    return {n: _REGISTRY[n] for n in [*front, *rest]}
+    passed, recorded = _gate_evidence()
+
+    def staleness(name: str) -> tuple[int, int]:
+        if name not in recorded:
+            return (0, 0)
+        if _REGISTRY[name].oracle is not None:
+            return (1, passed.get(name, 0))
+        return (2, 0)
+
+    return {n: _REGISTRY[n] for n in sorted(_REGISTRY, key=staleness)}

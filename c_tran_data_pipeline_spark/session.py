@@ -10,8 +10,14 @@ match columnar stores (and the DuckDB oracle) exactly.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+#: The directory holding this package. Python workers are separate
+#: processes started from the JVM, so they only find the package on
+#: their PYTHONPATH, whatever the Spark driver's cwd or sys.path.
+_PACKAGE_PARENT = str(Path(__file__).resolve().parents[1])
 
 
 def get_spark(app_name: str = "c-tran-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -41,6 +47,10 @@ def get_spark(app_name: str = "c-tran-spark", shuffle_partitions: int | None = N
         # --- Python interop: Arrow batches for any pandas-UDF path ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(filter(None, [_PACKAGE_PARENT, os.environ.get("PYTHONPATH")])),
+        )
         # --- quieter driver in tests ---
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -399,8 +399,9 @@ _ALLOWED_PYTHON = {
     "q_incremental_image_neardup",
     # multi-table LSH bucket pass = Arrow mapInPandas numpy sequential
     # fold (round 10 — LSH_SHAPE_AB_r10.json: 2.6× over the interpreted
-    # HOF shape at the 10× rung, bit-identical by the pinned three-shape
-    # test); candidate joins + re-rank stay pure relational
+    # HOF shape at the 10× rung, bit-identical to per-table
+    # hyperplane_lsh_buckets by the pinned test); candidate joins +
+    # re-rank stay pure relational
     "q_ann_neardup_lsh",
     "q_ann_lsh_topk",
     "q_hard_negatives_lsh",

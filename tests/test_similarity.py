@@ -549,19 +549,20 @@ def test_flat_dot_sql_equals_hof_dot(spark):
 
 
 def test_lsh_bucket_shapes_bit_identical(spark):
-    """The three multi-table bucket-pass shapes — interpreted HOF
-    (lambda), split-projection flat SQL, Arrow/numpy sequential fold
-    (the round-10 default) — emit IDENTICAL (key, vec, table, bucket)
-    bags, including malformed rows (NULL / short / long / empty vectors
-    → bucket 0 in every table, the null-poisoned-fold semantics)."""
+    """The Arrow/numpy multi-table bucket pass emits the IDENTICAL
+    (key, vec, table, bucket) bag as the single-table operator run once
+    per table on its own plane set (plane_offset = t·planes), including
+    malformed rows (NULL / short / long / empty vectors → bucket 0 in
+    every table, the null-poisoned-fold semantics)."""
+    from functools import reduce
+
     from c_tran_data_pipeline_spark.operators.similarity import (
         _multi_table_lsh_buckets_arrow,
-        _multi_table_lsh_buckets_flat,
-        _multi_table_lsh_buckets_lambda,
+        hyperplane_lsh_buckets,
         multi_table_lsh_buckets,
     )
 
-    dim = 8
+    dim, planes, tables = 8, 3, 4
     rows = [
         (1, [0.1 * (d + 1) * (-1) ** d for d in range(dim)]),
         (2, [1e-300] * dim),            # sign decisions near zero
@@ -572,15 +573,22 @@ def test_lsh_bucket_shapes_bit_identical(spark):
         (7, [0.1] * (dim + 2)),         # longer than dim
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    base = _multi_table_lsh_buckets_lambda(df, 3, 4, "vec_id", "embedding", dim)
+    base = reduce(
+        lambda a, b: a.unionByName(b),
+        [
+            hyperplane_lsh_buckets(df, planes, plane_offset=t * planes, dim=dim).select(
+                "vec_id", "embedding", F.lit(t).alias("table"), "bucket"
+            )
+            for t in range(tables)
+        ],
+    )
     for alt in (
-        _multi_table_lsh_buckets_flat(df, 3, 4, "vec_id", "embedding", dim),
-        _multi_table_lsh_buckets_arrow(df, 3, 4, "vec_id", "embedding", dim),
-        multi_table_lsh_buckets(df, 3, 4, dim=dim),
+        _multi_table_lsh_buckets_arrow(df, planes, tables, "vec_id", "embedding", dim),
+        multi_table_lsh_buckets(df, planes, tables, dim=dim),
     ):
         assert base.exceptAll(alt).count() == 0
         assert alt.exceptAll(base).count() == 0
-        assert alt.count() == len(rows) * 4
+        assert alt.count() == len(rows) * tables
 
 
 def test_arrow_cell_assignment_matches_jvm_probe_order(spark):
