@@ -2,7 +2,7 @@
 # The oracle corpus is verified at BOTH sf0.01 (the driver's gate SF)
 # and sf0.1 (the bench SF); VERIFICATION.md records the latest results.
 
-.PHONY: test test-all oracle oracle-sf01 bench bench-compare perf verify
+.PHONY: test test-all oracle oracle-sf01 bench bench-compare perf ab verify
 
 # Default profile: slow-marked E2E/property/audit tests deselected
 # (pytest.ini addopts) so a time-budgeted run finishes with a verdict.
@@ -40,5 +40,11 @@ bench-compare:
 perf:
 	python3 perfbench/run.py --workload ingest --seed 1 --seconds 12
 	python3 perfbench/run.py --workload reads --seed 1 --seconds 12
+
+# Interleaved A/B of two git revisions over BENCHMARK.json's workloads,
+# 10 pairs each, judged against its bounds:
+#   make ab PARENT=<rev> CHANGE=<rev>
+ab:
+	python3 scripts/ab.py $(PARENT) $(CHANGE)
 
 verify: test oracle oracle-sf01 bench bench-compare

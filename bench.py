@@ -3,6 +3,13 @@ sf0.1) on local[$SPARK_GRAFT_CPUS]; prints one JSON line PER QUERY
 followed by the ONE headline JSON line (the headline line is last, so
 tail-window consumers keep parsing exactly what they always did).
 
+    python bench.py               # every HEADLINE query
+    python bench.py QUERY ...     # only the named registered queries
+
+Named queries run the same timed loop as the headline set, so two trees
+compare on them query by query (``scripts/ab.py`` does so); the record
+then covers only those queries.
+
 Each query is built from the same registry the driver's correctness gate
 uses, timed end-to-end (plan + execute + collect). The metric is total
 wall seconds across the headline set; per-query medians/mins/raw runs
@@ -17,6 +24,7 @@ records it distorts instead of being missed by endpoint-only sampling.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -181,6 +189,13 @@ HEADLINE = [
     "q_ann_ivfpq_append",
 ]
 
+# Timed runs per query, calibration runs before the first query, and
+# queries per interleaved calibration group (see main).
+REPS = 3
+CAL_REPS = 3
+CAL_GROUP = 15
+
+
 def _warm_page_cache(sf_dir: str) -> None:
     """Read every fixture parquet byte-for-byte BEFORE rep 1 so OS
     page-cache state stops dominating cross-boot comparisons (VERDICT r7
@@ -219,15 +234,21 @@ def _calibration_run(spark) -> float:
     return time.perf_counter() - t0
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("queries", nargs="*", help="registered query names (default: HEADLINE)")
+    args = ap.parse_args(argv)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
 
     from c_tran_data_pipeline_spark.plans import all_queries
     from c_tran_data_pipeline_spark.session import get_spark
 
-    spark = get_spark("bench")
     registry = all_queries()
+    unknown = [n for n in args.queries if n not in registry]
+    if unknown:
+        ap.error(f"unknown queries: {' '.join(unknown)}")
+    spark = get_spark("bench")
 
     # Warm the JVM/catalog once so per-query numbers measure the queries,
     # not session bring-up; then fault in every fixture page so rep 1 of
@@ -235,10 +256,9 @@ def main() -> None:
     registry["q_summaries"].builder(spark, sf_dir).collect()
     _warm_page_cache(sf_dir)
 
-    # Calibration: one untimed JIT warm-up, then reps timed runs.
-    cal_reps = int(os.environ.get("SPARK_GRAFT_BENCH_CAL_REPS", "3"))
+    # Calibration: one untimed JIT warm-up, then CAL_REPS timed runs.
     _calibration_run(spark)
-    calibration_runs = [round(_calibration_run(spark), 3) for _ in range(cal_reps)]
+    calibration_runs = [round(_calibration_run(spark), 3) for _ in range(CAL_REPS)]
     calibration = round(statistics.median(calibration_runs), 3)
 
     # Median-of-REPS per query: measured cross-boot noise on this host is
@@ -246,15 +266,13 @@ def main() -> None:
     # single-shot number cannot be compared round over round. The median
     # absorbs one bad run; the min is kept as the "machine-best" figure.
     # One UNTIMED warm-up run per query pays any build-once cost (e.g. the
-    # persisted IVF-PQ index) so the timed reps — even at reps=1 — measure
-    # the amortized production path.
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
+    # persisted IVF-PQ index) so the timed reps measure the amortized
+    # production path.
     # Interleaved calibration (round 10, VERDICT r9 #1b): one fixed-work
     # unit between every CAL_GROUP queries. Endpoint-only sampling missed
     # a mid-run host stall entirely in round 9 (26 untouched queries
     # flagged while both endpoint samples read fast); bracketing samples
     # make such stalls self-adjudicating per query group.
-    cal_group = int(os.environ.get("SPARK_GRAFT_BENCH_CAL_GROUP", "15"))
     cal_marks: list[float] = [calibration]  # sample before query group 0
     timings: dict[str, float] = {}
     timings_min: dict[str, float] = {}
@@ -263,7 +281,7 @@ def main() -> None:
     group_index: dict[str, int] = {}
     failed: list[str] = []
     n_run = 0
-    for name in HEADLINE:
+    for name in args.queries or HEADLINE:
         spec = registry.get(name)
         if spec is None:
             continue
@@ -274,14 +292,14 @@ def main() -> None:
             # correctness anchors — neither is a throughput claim, so
             # neither is part of the headline metric (VERDICT r8 #3).
             continue
-        if n_run and n_run % cal_group == 0:
+        if n_run and n_run % CAL_GROUP == 0:
             cal_marks.append(round(_calibration_run(spark), 3))
-        group_index[name] = n_run // cal_group
+        group_index[name] = n_run // CAL_GROUP
         n_run += 1
         runs: list[float] = []
         try:
             spec.builder(spark, sf_dir).collect()  # warm-up, untimed
-            for _ in range(reps):
+            for _ in range(REPS):
                 t0 = time.perf_counter()
                 spec.builder(spark, sf_dir).collect()
                 runs.append(time.perf_counter() - t0)
@@ -314,7 +332,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "n_queries": len(timings),
-        "reps": reps,
+        "reps": REPS,
         "r01_comparable_total": round(sum(timings.get(n, 0.0) for n in r01_set), 3),
         "calibration_sec": calibration,
         "sf": sf,
@@ -334,7 +352,7 @@ def main() -> None:
             "failed": failed,
             "calibration_runs": calibration_runs,
             "calibration_post": calibration_post,
-            # Interleaved fixed-work samples (one before each ~cal_group
+            # Interleaved fixed-work samples (one before each CAL_GROUP
             # query group, plus the post sample) and each query's local
             # unit = median of its bracketing samples (VERDICT r9 #1b).
             "calibration_marks": cal_marks,

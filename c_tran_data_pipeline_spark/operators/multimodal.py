@@ -888,6 +888,9 @@ def image_ahash(assets: DataFrame, codec: str = "fake", grid: int = 8) -> DataFr
                 out["ahash"].append(hv)
                 out["width"].append(w)
                 out["height"].append(h)
+            # A None among the hashes would make pandas type the column
+            # float64, which keeps only 53 of the 64 bits.
+            out["ahash"] = pd.array(out["ahash"], dtype="Int64")
             yield pd.DataFrame(out)
 
     return assets.select("asset_id", "payload").mapInPandas(batches, AHASH_SCHEMA)
@@ -957,6 +960,8 @@ def image_phash(assets: DataFrame, codec: str = "fake", size: int = 32) -> DataF
                 out["phash"].append(hv)
                 out["width"].append(w)
                 out["height"].append(h)
+            # Int64 for the same reason as in image_ahash.
+            out["phash"] = pd.array(out["phash"], dtype="Int64")
             yield pd.DataFrame(out)
 
     return assets.select("asset_id", "payload").mapInPandas(batches, PHASH_SCHEMA)

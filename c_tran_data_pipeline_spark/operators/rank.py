@@ -239,11 +239,7 @@ def _with_buckets(
     if n <= 1:  # one bucket: no boundaries, no sampling pass
         return df.withColumn(_PID, F.lit(0)), sort_cols
     if bounds is None:
-        # One column-pruned sampling pass; ≤ n-1 doubles of driver state.
-        rk = _range_key(df, lead)
-        probs = [i / n for i in range(1, n)]
-        err = max(1.0 / (4 * n), 1e-4)
-        bounds = df.select(rk.alias("__gr_rk")).approxQuantile("__gr_rk", probs, err)
+        bounds = range_bounds(df, [lead], n)[0]
     bounds = sorted(set(bounds))
     return df.withColumn(_PID, _bucket_column(df, info, bounds)), sort_cols
 

@@ -29,6 +29,9 @@ import argparse
 import json
 import sys
 
+#: A query regressed when its calibrated min grew by more than this factor.
+REGRESSION_THRESHOLD = 1.5
+
 
 def _load(path: str) -> dict:
     with open(path) as fh:
@@ -100,7 +103,7 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("old")
     ap.add_argument("new")
-    ap.add_argument("--threshold", type=float, default=1.5)
+    ap.add_argument("--threshold", type=float, default=REGRESSION_THRESHOLD)
     args = ap.parse_args()
     result = compare(_load(args.old), _load(args.new), args.threshold)
     print(json.dumps(result, indent=1))
