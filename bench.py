@@ -3,12 +3,8 @@ sf0.1) on local[$SPARK_GRAFT_CPUS]; prints one JSON line PER QUERY
 followed by the ONE headline JSON line (the headline line is last, so
 tail-window consumers keep parsing exactly what they always did).
 
-    python bench.py               # every HEADLINE query
-    python bench.py QUERY ...     # only the named registered queries
-
-Named queries run the same timed loop as the headline set, so two trees
-compare on them query by query (``scripts/ab.py`` does so); the record
-then covers only those queries.
+    python bench.py               # the HEADLINE queries
+    python bench.py QUERY ...     # only the named queries (scripts/ab.py)
 
 Each query is built from the same registry the driver's correctness gate
 uses, timed end-to-end (plan + execute + collect). The metric is total
@@ -245,7 +241,8 @@ def main(argv: list[str] | None = None) -> None:
     from c_tran_data_pipeline_spark.session import get_spark
 
     registry = all_queries()
-    unknown = [n for n in args.queries if n not in registry]
+    names = args.queries or HEADLINE
+    unknown = [n for n in names if n not in registry]
     if unknown:
         ap.error(f"unknown queries: {' '.join(unknown)}")
     spark = get_spark("bench")
@@ -281,10 +278,8 @@ def main(argv: list[str] | None = None) -> None:
     group_index: dict[str, int] = {}
     failed: list[str] = []
     n_run = 0
-    for name in args.queries or HEADLINE:
-        spec = registry.get(name)
-        if spec is None:
-            continue
+    for name in names:
+        spec = registry[name]
         if "baseline" in spec.tags or "surface-pin" in spec.tags:
             # O(n²) oracle baselines are correctness fixtures, and
             # surface-pins (q_ltv_recursive's native WITH RECURSIVE

@@ -3,23 +3,15 @@
     python3 scripts/ab.py PARENT CHANGE              # BENCHMARK.json workloads
     python3 scripts/ab.py PARENT CHANGE QUERY ...    # named bench.py queries
 
-Each revision is extracted with ``git archive`` into a fresh temporary
-directory, removed on exit. The two trees must carry the same
-``BENCHMARK.json``; its workloads, ``run_seconds`` and end-to-end metrics
-(``better``, ``bound``) define the comparison. There are ``PAIRS`` pairs;
-pair i uses seed i, and the parent runs first in odd pairs, the change in
-even ones, so a drift in host speed lands on both sides alike.
+Each revision is extracted with ``git archive`` into a temporary directory.
+Both must carry the same ``BENCHMARK.json``, whose workloads, run length and
+end-to-end metric bounds define the comparison. Pair i uses seed i; the
+parent runs first in odd pairs, so host-speed drift hits both sides alike.
+Query mode compares each query's min / local calibration unit from
+``bench.py`` against bench_compare's regression threshold.
 
-Workload mode runs the benchmark command from ``BENCHMARK.json`` once per
-side, workload and pair. Query mode runs ``bench.py QUERY ...`` once per
-side and pair and compares each query's calibrated min (min / local
-calibration unit); its regression bound is bench_compare's threshold.
-
-Prints one JSON line per run as it finishes, then one summary line per
-workload (or per query) with, per metric, both sides' median and
-interquartile range, the change's wins over the pairs (ties count for
-neither side) and a verdict (see ``summarize``). Exits 1 iff a verdict is
-"worse".
+Prints one JSON line per run, then one summary line per workload or query
+(see ``summarize``). Exits 1 iff a verdict is "worse".
 """
 
 from __future__ import annotations
@@ -37,7 +29,6 @@ from bench_compare import REGRESSION_THRESHOLD
 
 REPO = Path(__file__).resolve().parent.parent
 PAIRS = 10
-# A gain needs the change to win this share of the pairs.
 GAIN_WINS = 0.9
 
 
@@ -62,17 +53,12 @@ def summarize(
     """
     if better not in ("higher", "lower"):
         raise ValueError(f"better must be 'higher' or 'lower', not {better!r}")
-    if len(parent_values) != len(change_values):
-        raise ValueError("parent and change need one value per pair")
     sign = 1.0 if better == "higher" else -1.0
     p_med, p_iqr = _median_iqr(parent_values)
     c_med, c_iqr = _median_iqr(change_values)
     wins = sum(sign * (c - p) > 0 for p, c in zip(parent_values, change_values))
     gap = sign * (c_med - p_med)  # > 0: the change's median is better
-    if better == "higher":
-        dominates = min(change_values) > max(parent_values)
-    else:
-        dominates = max(change_values) < min(parent_values)
+    dominates = all(sign * (c - p) > 0 for c in change_values for p in parent_values)
     if wins >= GAIN_WINS * len(parent_values) and gap > p_iqr:
         verdict = "gain"
     elif -gap > bound * abs(p_med):
@@ -115,13 +101,10 @@ def _run(cmd: list[str], cwd: Path) -> str:
         out, err = proc.communicate()
     finally:
         if proc.poll() is None:
-            # SIGTERM first: perfbench/run.py then stops its own child group.
+            # SIGTERM, not SIGKILL: perfbench/run.py then stops its own
+            # child process group before it exits.
             os.killpg(proc.pid, signal.SIGTERM)
-            try:
-                proc.wait(timeout=30)
-            except subprocess.TimeoutExpired:
-                os.killpg(proc.pid, signal.SIGKILL)
-                proc.wait()
+            proc.wait()
     if proc.returncode != 0:
         raise RuntimeError(f"{' '.join(cmd)} in {cwd} exited {proc.returncode}:\n{err[-4000:]}")
     return out
@@ -134,14 +117,11 @@ def _pairs():
             yield i, side
 
 
-def _emit(line: dict) -> None:
-    print(json.dumps(line), flush=True)
-
-
 def run_workloads(trees: dict[str, Path], bench: dict) -> list[dict]:
     metrics = bench["end_to_end"]
-    runs = {w["name"]: {"parent": [], "change": []} for w in bench["workloads"]}
-    for workload, sides in runs.items():
+    summaries = []
+    for workload in (w["name"] for w in bench["workloads"]):
+        sides = {"parent": [], "change": []}
         for pair, side in _pairs():
             cmd = bench["command"] + [
                 "--workload", workload, "--seed", str(pair),
@@ -149,16 +129,14 @@ def run_workloads(trees: dict[str, Path], bench: dict) -> list[dict]:
             ]
             result = json.loads(_run(cmd, trees[side]).strip().splitlines()[-1])
             line = {
-                "workload": workload, "pair": pair, "seed": pair, "side": side,
+                "workload": workload, "pair": pair, "side": side,
                 "correct": result["correct"],
                 "failed": result["failed"],
                 "attempted": result["attempted"],
                 "metrics": {m["name"]: result["metrics"][m["name"]]["value"] for m in metrics},
             }
             sides[side].append(line)
-            _emit(line)
-    summaries = []
-    for workload, sides in runs.items():
+            print(json.dumps(line), flush=True)
         summary = {"workload": workload}
         for side, lines in sides.items():
             summary[side] = {
@@ -187,7 +165,8 @@ def run_queries(trees: dict[str, Path], queries: list[str]) -> list[dict]:
         if missing:
             raise RuntimeError(f"bench.py in {trees[side]} timed no {missing}")
         values[side].append(per_query)
-        _emit({"pair": pair, "side": side, "min_cal": {q: round(per_query[q], 4) for q in queries}})
+        min_cal = {q: round(per_query[q], 4) for q in queries}
+        print(json.dumps({"pair": pair, "side": side, "min_cal": min_cal}), flush=True)
     return [
         {
             "query": q,
@@ -212,8 +191,8 @@ def main(argv: list[str]) -> int:
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(1))
     with tempfile.TemporaryDirectory(prefix="ab-") as tmp:
         trees = {"parent": Path(tmp, "parent"), "change": Path(tmp, "change")}
-        stage(parent_rev, trees["parent"])
-        stage(change_rev, trees["change"])
+        for rev, tree in zip((parent_rev, change_rev), trees.values()):
+            stage(rev, tree)
         bench_json = [(t / "BENCHMARK.json").read_bytes() for t in trees.values()]
         if bench_json[0] != bench_json[1]:
             print("ab: the two revisions' BENCHMARK.json differ", file=sys.stderr)
@@ -223,7 +202,7 @@ def main(argv: list[str]) -> int:
         else:
             summaries = run_workloads(trees, json.loads(bench_json[0]))
     for summary in summaries:
-        _emit(summary)
+        print(json.dumps(summary), flush=True)
     verdicts = [m["verdict"] for s in summaries for m in s["metrics"].values()]
     return 1 if "worse" in verdicts else 0
 
