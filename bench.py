@@ -7,15 +7,15 @@ tail-window consumers keep parsing exactly what they always did).
     python bench.py QUERY ...     # only the named queries (scripts/ab.py)
 
 Each query is built from the same registry the driver's correctness gate
-uses, timed end-to-end (plan + execute + collect). The metric is total
-wall seconds across the headline set; per-query medians/mins/raw runs
-are printed as individual ``{"query": ...}`` lines (round 10, VERDICT
-r9 #1 — so the driver can compute per-query round-over-round deltas
-itself) and also land in BENCH_DETAIL.json. A fixed-work calibration
-unit runs INTERLEAVED between every ~15-query group (not just at the
-endpoints), and each query's record carries the median of its
-bracketing samples — a mid-run host stall is now visible in the very
-records it distorts instead of being missed by endpoint-only sampling.
+uses and timed end-to-end (plan + execute + collect). The metric is total
+wall seconds across the headline set. Per-query medians, mins and raw
+runs are printed as ``{"query": ...}`` lines and land in
+BENCH_DETAIL.json, each with the local unit of a fixed-work calibration
+run interleaved between ~15-query groups, so a mid-run host stall shows
+in the records it distorts. After its timed reps each query runs once
+more, untimed, for its ``profile`` block in BENCH_DETAIL.json: jobs,
+stages and tasks, build seconds and build jobs, residual cache pins and
+the executed plan's operator counts.
 """
 
 from __future__ import annotations
@@ -23,6 +23,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import statistics
 import sys
 import time
@@ -193,11 +194,10 @@ CAL_GROUP = 15
 
 
 def _warm_page_cache(sf_dir: str) -> None:
-    """Read every fixture parquet byte-for-byte BEFORE rep 1 so OS
-    page-cache state stops dominating cross-boot comparisons (VERDICT r7
-    #1c). A Spark ``count()`` would NOT do this — parquet count-star is
-    answered from row-group metadata without touching data pages. The
-    whole sf0.1 fixture is ~17 MB, so this costs tens of milliseconds."""
+    """Read every fixture parquet byte-for-byte before rep 1 so OS
+    page-cache state does not dominate cross-boot comparisons. A Spark
+    ``count()`` would not: parquet count-star reads only row-group
+    metadata. The sf0.1 fixture is ~17 MB, tens of milliseconds."""
     for p in sorted(Path(sf_dir).glob("*.parquet")):
         with open(p, "rb") as fh:
             while fh.read(1 << 20):
@@ -205,14 +205,11 @@ def _warm_page_cache(sf_dir: str) -> None:
 
 
 def _calibration_run(spark) -> float:
-    """One FIXED-WORK, data-independent unit: md5 + modular-hash key over
-    3M generated rows → shuffle → hash aggregate → scalar. Exercises the
-    same machinery the queries pay for (codegen, exchange, agg) with
-    ZERO file I/O, so its time tracks the host's momentary speed
-    (thermal state, co-tenants, JVM luck) and nothing else. Per-query
-    times divided by the run's calibration median become comparable
-    across boots — the mechanical noise-adjudication VERDICT r7 asked
-    for (scripts/bench_compare.py consumes it)."""
+    """One fixed-work, data-independent unit: md5 + modular-hash key over
+    3M generated rows → shuffle → hash aggregate → scalar. It exercises
+    codegen, exchange and aggregation with no file I/O, so its time
+    tracks the host's momentary speed; per-query times divided by it
+    compare across boots (scripts/bench_compare.py)."""
     from pyspark.sql import functions as F
 
     t0 = time.perf_counter()
@@ -228,6 +225,95 @@ def _calibration_run(spark) -> float:
         .collect()
     )
     return time.perf_counter() - t0
+
+
+def executed_nodes(plan) -> list[str]:
+    """One line per operator that ran, walking a JVM SparkPlan through
+    AQE's final plan, query stages and subqueries; an InMemoryTableScan
+    is a leaf. The plan string also prints AQE's Initial Plan and every
+    cached frame's plan, the latter at indents that do not nest."""
+    lines, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            todo.append(node.plan())
+        else:
+            lines.append(node.simpleString(1000))
+            for seq in (node.children(), node.subqueries()):
+                todo.extend(seq.apply(i) for i in range(seq.size()))
+    return lines
+
+
+def audit_plan(nodes: list[str]) -> dict:
+    """Operator counts over one-line node strings. A ``ReusedExchange``
+    (whose line names the exchange it reuses) is no new shuffle."""
+
+    def count(pattern: str) -> int:
+        return sum(1 for n in nodes if re.match(pattern, n))
+
+    return {
+        "exchanges": count(r"Exchange (hash|range|Single|RoundRobin)"),
+        "broadcasts": count("BroadcastExchange"),
+        "codegen_spans": count("WholeStageCodegen"),
+        "pushed_filters": count(r"FileScan .*PushedFilters: \[(?!\])"),
+        "scans": count("FileScan parquet"),
+        "sorts": count(r"Sort \["),
+        "python_udfs": count("BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas"),
+    }
+
+
+def _census(sc, group: str) -> tuple[int, int, int]:
+    """(jobs, stages, tasks) Spark ran under job group ``group``."""
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = tasks = 0
+    for jid in jobs:
+        info = tracker.getJobInfo(jid)
+        for sid in info.stageIds if info is not None else ():
+            stage = tracker.getStageInfo(sid)
+            if stage is not None:
+                stages += 1
+                tasks += stage.numTasks
+    return len(jobs), stages, tasks
+
+
+def pinned_rdds(sc) -> set[int]:
+    """Ids of the RDDs the session holds persisted."""
+    return set(sc._jsc.getPersistentRDDs().keys())
+
+
+def profile(spark, name: str, build, pins_before: set[int]) -> dict:
+    """One untimed build + collect of query ``name``. Job group
+    ``<name>-build`` covers ``build()`` and ``<name>-exec`` the collect,
+    as in perfbench/reads.py. ``residual_pins`` counts persisted RDDs not
+    in ``pins_before``; a count difference would net out the checkpoints
+    of earlier queries that the context cleaner drops meanwhile."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(f"{name}-build", name)
+        t0 = time.perf_counter()
+        df = build()
+        build_s = time.perf_counter() - t0
+        sc.setJobGroup(f"{name}-exec", name)
+        df.collect()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    build_jobs, build_stages, build_tasks = _census(sc, f"{name}-build")
+    jobs, stages, tasks = _census(sc, f"{name}-exec")
+    plan = df._jdf.queryExecution().executedPlan()
+    return {
+        "jobs": build_jobs + jobs,
+        "stages": build_stages + stages,
+        "tasks": build_tasks + tasks,
+        "build_s": round(build_s, 3),
+        "build_jobs": build_jobs,
+        "residual_pins": len(pinned_rdds(sc) - pins_before),
+        **audit_plan(executed_nodes(plan)),
+    }
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -258,46 +344,40 @@ def main(argv: list[str] | None = None) -> None:
     calibration_runs = [round(_calibration_run(spark), 3) for _ in range(CAL_REPS)]
     calibration = round(statistics.median(calibration_runs), 3)
 
-    # Median-of-REPS per query: measured cross-boot noise on this host is
-    # up to 2× on unchanged code (VERIFICATION.md r02 33.5→70→44 s), so a
-    # single-shot number cannot be compared round over round. The median
-    # absorbs one bad run; the min is kept as the "machine-best" figure.
-    # One UNTIMED warm-up run per query pays any build-once cost (e.g. the
-    # persisted IVF-PQ index) so the timed reps measure the amortized
-    # production path.
-    # Interleaved calibration (round 10, VERDICT r9 #1b): one fixed-work
-    # unit between every CAL_GROUP queries. Endpoint-only sampling missed
-    # a mid-run host stall entirely in round 9 (26 untouched queries
-    # flagged while both endpoint samples read fast); bracketing samples
-    # make such stalls self-adjudicating per query group.
+    # Median-of-REPS per query (cross-boot noise on unchanged code reaches
+    # 2×); the min is the machine-best figure. One untimed warm-up per
+    # query pays build-once costs (e.g. the persisted IVF-PQ index), and
+    # one fixed-work calibration unit runs between every CAL_GROUP
+    # queries so each query is normalised by the samples bracketing it.
     cal_marks: list[float] = [calibration]  # sample before query group 0
     timings: dict[str, float] = {}
     timings_min: dict[str, float] = {}
     raw_runs: dict[str, list[float]] = {}
     query_cal: dict[str, float] = {}  # median of each query's bracketing samples
+    profiles: dict[str, dict] = {}
     group_index: dict[str, int] = {}
     failed: list[str] = []
     n_run = 0
     for name in names:
         spec = registry[name]
         if "baseline" in spec.tags or "surface-pin" in spec.tags:
-            # O(n²) oracle baselines are correctness fixtures, and
-            # surface-pins (q_ltv_recursive's native WITH RECURSIVE
-            # path, bit-equal to the q_ltv_fold headline entry) are API
-            # correctness anchors — neither is a throughput claim, so
-            # neither is part of the headline metric (VERDICT r8 #3).
+            # O(n²) oracle baselines and API surface-pins (e.g.
+            # q_ltv_recursive, bit-equal to q_ltv_fold) are correctness
+            # anchors, not throughput claims.
             continue
         if n_run and n_run % CAL_GROUP == 0:
             cal_marks.append(round(_calibration_run(spark), 3))
         group_index[name] = n_run // CAL_GROUP
         n_run += 1
         runs: list[float] = []
+        pins = pinned_rdds(spark.sparkContext)
         try:
             spec.builder(spark, sf_dir).collect()  # warm-up, untimed
             for _ in range(REPS):
                 t0 = time.perf_counter()
                 spec.builder(spark, sf_dir).collect()
                 runs.append(time.perf_counter() - t0)
+            profiles[name] = profile(spark, name, lambda: spec.builder(spark, sf_dir), pins)
         except Exception as exc:  # one broken query must not lose the whole run
             failed.append(name)
             print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
@@ -306,8 +386,7 @@ def main(argv: list[str] | None = None) -> None:
         timings_min[name] = round(min(runs), 3)
         raw_runs[name] = [round(r, 3) for r in runs]
 
-    # Post-run calibration: closes the final group's bracket (and the
-    # pre-vs-post pair stays the coarse drift diagnostic it always was).
+    # Post-run calibration closes the final group's bracket.
     calibration_post = round(_calibration_run(spark), 3)
     cal_marks.append(calibration_post)
     for name, g in group_index.items():
@@ -318,9 +397,7 @@ def main(argv: list[str] | None = None) -> None:
         query_cal[name] = round(statistics.median([lo, hi]), 3)
 
     total = round(sum(timings.values()), 3)
-    # The headline set grew past round 1's 20 queries by appending, so
-    # its first 20 entries are round 1's set; r01_comparable_total sums
-    # only those so round-over-round totals compare like-for-like.
+    # The headline set only grows at the end: its first 20 are round 1's.
     r01_set = HEADLINE[:20]
     summary = {
         "metric": "headline_total",
@@ -332,12 +409,8 @@ def main(argv: list[str] | None = None) -> None:
         "calibration_sec": calibration,
         "sf": sf,
     }
-    # Full per-query breakdown goes to a sidecar file: the driver's record
-    # keeps only a ~2000-char tail window of stdout. Round 3's line
-    # (queries + queries_min, ~4 KB) overflowed it and recorded
-    # `parsed: null`; by 76 headline queries even a medians-only dict
-    # is 2.2 KB, so the printed line carries NO per-query dict at all —
-    # per-query medians/mins/raw runs live in BENCH_DETAIL.json.
+    # The headline line carries no per-query dict: consumers that keep a
+    # ~2,000-character tail of stdout must still parse it.
     detail = dict(summary)
     detail.update(
         {
@@ -347,17 +420,12 @@ def main(argv: list[str] | None = None) -> None:
             "failed": failed,
             "calibration_runs": calibration_runs,
             "calibration_post": calibration_post,
-            # Interleaved fixed-work samples (one before each CAL_GROUP
-            # query group, plus the post sample) and each query's local
-            # unit = median of its bracketing samples (VERDICT r9 #1b).
+            # One sample before each query group plus the post sample;
+            # a query's local unit is the median of its bracketing pair.
             "calibration_marks": cal_marks,
             "query_cal": query_cal,
-            # Calibrated per-query figures: seconds of FIXED-WORK units,
-            # i.e. min/calibration — the number scripts/bench_compare.py
-            # compares across rounds (regressed iff new calibrated min
-            # > 1.5× committed calibrated min). Uses each query's LOCAL
-            # bracketing unit where available (round 10); the session
-            # median remains the fallback.
+            "profile": profiles,
+            # min / local unit: what scripts/bench_compare.py compares.
             "queries_min_calibrated": {
                 n: round(v / query_cal.get(n, calibration), 3)
                 for n, v in timings_min.items()
@@ -366,23 +434,11 @@ def main(argv: list[str] | None = None) -> None:
     )
     with open(os.path.join(_REPO, "BENCH_DETAIL.json"), "w") as fh:
         json.dump(detail, fh, indent=1, sort_keys=True)
-    # Per-query one-line JSONs BEFORE the headline line (VERDICT r9 #1a):
-    # additive — the headline line keeps its exact shape and stays LAST,
-    # so a tail-window consumer parses what it always parsed, while a
-    # full-stdout consumer now gets per-query medians/mins/raw runs and
-    # the local calibration unit without reading BENCH_DETAIL.json.
+    # Per-query lines come before the headline line, which stays last.
     for name in timings:
-        print(
-            json.dumps(
-                {
-                    "query": name,
-                    "median": timings[name],
-                    "min": timings_min[name],
-                    "runs": raw_runs[name],
-                    "cal": query_cal.get(name, calibration),
-                }
-            )
-        )
+        rec = {"query": name, "median": timings[name], "min": timings_min[name],
+               "runs": raw_runs[name], "cal": query_cal.get(name, calibration)}
+        print(json.dumps(rec))
     print(json.dumps(summary))
 
 

@@ -79,13 +79,10 @@ def validate_with_audit(
     ``observe`` — no second job, works identically under streaming."""
     rules = rules if rules is not None else breadcrumb_rules()
     metrics = [F.count(F.lit(1)).alias("rows_in")]
-    pred = None
     for name, c in rules.items():
         metrics.append(F.sum(F.when(~F.coalesce(c, F.lit(False)), 1).otherwise(0)).alias(f"failed_{name}"))
-        pred = c if pred is None else (pred & c)
     obs = Observation("validation")
-    observed = df.observe(obs, *metrics)
-    return (observed.filter(pred) if pred is not None else observed), obs
+    return validate(df.observe(obs, *metrics), rules), obs
 
 
 def referential_check(fact: DataFrame, dim: DataFrame, keys: list[str]) -> DataFrame:

@@ -2309,9 +2309,10 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joint (r, f, m)-bucket grain, per-bucket offsets attached as
     # literal maps and three in-bucket rank windows over the SAME persisted
     # customer-grain frame — the chained form re-persisted and re-joined
-    # an ever-wider frame per dimension (29 Exchanges → see
-    # plans/r10/q_rfm_segments_*.txt). Bucket values are bit-identical
-    # per dimension (same rank arithmetic, pinned in tests/test_rank.py).
+    # an ever-wider frame per dimension (plan dumps of both forms:
+    # git show 48ae092:plans/r10/q_rfm_segments_{before,after}.txt).
+    # Bucket values are bit-identical per dimension (same rank
+    # arithmetic, pinned in tests/test_rank.py).
     scored = global_ntile_multi(
         agg,
         5,

@@ -43,19 +43,6 @@ def kafka_stream(spark: SparkSession, brokers: str, topic: str, starting: str = 
     )
 
 
-def kafka_batch(spark: SparkSession, brokers: str, topic: str) -> DataFrame:
-    """Batch twin (the reference's load_inserts/update_inserts re-read
-    dumped files; with Kafka retention the batch read IS the dump)."""
-    return (
-        spark.read.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-        .option("endingOffsets", "latest")
-        .load()
-    )
-
-
 def to_kafka_sink(df: DataFrame, key_literal: str) -> DataFrame:
     """K1: value = JSON of all columns, constant key (the reference keys
     every crumb message 'reading' / stop message 'stop_event' —

@@ -122,12 +122,6 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE
     return {n: load_table(spark, sf_dir, n) for n in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register fixture tables as temp views for ``spark.sql`` plans."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def read_json_records(
     spark: SparkSession, path: str, schema: T.StructType, multi_line: bool = True
 ) -> DataFrame:

@@ -40,20 +40,14 @@ from c_tran_data_pipeline_spark.functions.transforms import (
 from c_tran_data_pipeline_spark.functions.validation import validate
 from c_tran_data_pipeline_spark.operators.fence import eval_once
 from c_tran_data_pipeline_spark.operators.upsert import absent_rows, first_wins, merge_update
+from c_tran_data_pipeline_spark.sources.kafka import kafka_stream
 
 
 def read_breadcrumb_stream_kafka(spark: SparkSession, brokers: str, topic: str) -> DataFrame:
     """E1 source: Kafka crumb_topic (reference producer key 'reading',
     JSON value — producer.py:81-84). startingOffsets=earliest mirrors the
     reference's auto.offset.reset (topic_consumer.py:222)."""
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-        .load()
-    )
-    return decode_breadcrumb_messages(raw)
+    return decode_breadcrumb_messages(kafka_stream(spark, brokers, topic))
 
 
 def decode_breadcrumb_messages(kafka_df: DataFrame) -> DataFrame:

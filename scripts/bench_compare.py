@@ -18,6 +18,10 @@ Old records cut before calibration landed (≤ r07) carry no
 the tool says so in the output (``old_calibrated: false``) — the first
 calibrated-vs-calibrated comparison is r08 vs r09.
 
+When both records carry bench.py's per-query ``profile`` block, each
+REGRESSED or IMPROVED entry also lists the profile fields whose values
+differ as ``[old, new]``: the layer that moved.
+
 Prints one JSON line: classification counts + the offending queries, and
 exits 1 iff any query is REGRESSED. Designed so the judge can run it
 instead of reading three JSONs and prose noise arguments.
@@ -58,6 +62,8 @@ def compare(old: dict, new: dict, threshold: float) -> dict:
     # poisoned-rerun failure mode).
     old_qcal = old.get("query_cal") or {}
     new_qcal = new.get("query_cal") or {}
+    old_prof = old.get("profile") or {}
+    new_prof = new.get("profile") or {}
 
     regressed, improved, stable = [], [], []
     for name in sorted(set(old_min) & set(new_min)):
@@ -76,6 +82,10 @@ def compare(old: dict, new: dict, threshold: float) -> dict:
             # new_cal / old_cal to rounding).
             entry["old_cal"] = round(o, 4)
             entry["new_cal"] = round(n, 4)
+        o_prof, n_prof = old_prof.get(name), new_prof.get(name)
+        if o_prof and n_prof:
+            pairs = {k: [o_prof.get(k), n_prof.get(k)] for k in sorted(o_prof.keys() | n_prof.keys())}
+            entry["profile"] = {k: v for k, v in pairs.items() if v[0] != v[1]}
         if ratio > threshold:
             regressed.append(entry)
         elif ratio < 1.0 / threshold:

@@ -63,6 +63,24 @@ def test_entries_carry_calibrated_values():
     assert r["regressed"][0]["new_cal"] == 4.0  # 4.0 / 1.0
 
 
+def test_moved_entries_name_the_profile_fields_that_differ():
+    """With a profile block on both sides, a moved query's entry lists
+    each differing field as [old, new]; without one it stays as is."""
+    old = {
+        "queries_min": {"a": 1.0, "b": 1.0},
+        "profile": {"a": {"jobs": 2, "build_jobs": 0, "exchanges": 1}, "b": {"jobs": 2}},
+    }
+    new = {
+        "queries_min": {"a": 3.0, "b": 1.0},
+        "profile": {"a": {"jobs": 6, "build_jobs": 4, "exchanges": 1}, "b": {"jobs": 9}},
+    }
+    r = compare(old, new, 1.5)
+    assert r["regressed"][0]["profile"] == {"build_jobs": [0, 4], "jobs": [2, 6]}
+    assert r["n_stable"] == 1  # 'b' moved layers but not time: no entry
+    bare = compare({"queries_min": old["queries_min"]}, new, 1.5)
+    assert "profile" not in bare["regressed"][0]
+
+
 def test_r01_subtotal_is_the_first_twenty_headline_queries():
     """r01_comparable_total sums HEADLINE[:20]. The headline list only
     grows at the end, so queries added after round 1 stay out of it,

@@ -5,8 +5,8 @@ The external driver gates the first 50 names of ``all_queries()`` per
 round and commits the rows as ``CORRECTNESS_r{N}.json``. This test
 parses the committed union and fails if any exact-oracle query's latest
 green row is more than ``MAX_AGE`` rounds old AND is not scheduled in
-the current round's gate window — so whoever edits ``_GATE_FIRST`` for a
-round is mechanically forced to lead with the stalest cohort. No Spark
+the current round's gate window — the order ``all_queries()`` derives
+from those records must lead with the stalest cohort. No Spark
 session needed (``all_queries()`` only registers specs)."""
 
 from __future__ import annotations
@@ -67,7 +67,7 @@ def test_no_exact_query_evidence_older_than_max_age():
     assert not overdue, (
         f"{len(overdue)} exact queries have driver evidence >{MAX_AGE} "
         f"rounds old and are NOT in this round's 50-name gate window — "
-        f"lead _GATE_FIRST with them: {sorted(overdue)[:20]}"
+        f"all_queries()'s derived order must lead with them: {sorted(overdue)[:20]}"
     )
 
 

@@ -450,7 +450,6 @@ def _walk_registry_plans(spark) -> list[tuple[str, str]]:
     return plans
 
 
-@pytest.mark.slow
 def test_no_unexpected_nested_loop_joins(spark):
     offenders = [
         n
@@ -542,7 +541,6 @@ def _single_partition_windows(plan: str) -> list[str]:
     return hits
 
 
-@pytest.mark.slow
 def test_no_unbounded_single_partition_windows(spark):
     offenders = []
     for name, plan in _registry_plans(spark):
@@ -557,7 +555,6 @@ def test_no_unbounded_single_partition_windows(spark):
     )
 
 
-@pytest.mark.slow
 def test_no_unexpected_python_in_plans(spark):
     markers = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
     offenders = [
@@ -668,7 +665,6 @@ _BOUNDED_BROADCAST_NOTES = {
 }
 
 
-@pytest.mark.slow
 def test_broadcast_build_sides_bounded(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
