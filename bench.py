@@ -15,7 +15,8 @@ run interleaved between ~15-query groups, so a mid-run host stall shows
 in the records it distorts. After its timed reps each query runs once
 more, untimed, for its ``profile`` block in BENCH_DETAIL.json: jobs,
 stages and tasks, build seconds and build jobs, residual cache pins and
-the executed plan's operator counts.
+the executed plan's operator counts. The record also carries its core
+count (``cores``), which scripts/bench_compare.py checks.
 """
 
 from __future__ import annotations
@@ -414,6 +415,7 @@ def main(argv: list[str] | None = None) -> None:
     detail = dict(summary)
     detail.update(
         {
+            "cores": spark.sparkContext.defaultParallelism,
             "queries": timings,
             "queries_min": timings_min,
             "runs": raw_runs,

@@ -36,6 +36,7 @@ from c_tran_data_pipeline_spark.operators.similarity import (
     _as_double,
     _l2sq,
 )
+from c_tran_data_pipeline_spark.session import atomic_write, read_json
 
 Codebooks = list[list[tuple[int, list[float]]]]
 
@@ -268,8 +269,8 @@ def ivfpq_topk(
     Physical shape: ONE corpus projection emits (id, cell, codes) — the
     centroid table and codebooks are literal expressions, so neither
     assignment nor encoding joins or shuffles anything (persist this
-    projection ``partitionBy('centroid_id')`` at scale, exactly like
-    write_ivf_index, and searches read nprobe cells' directories). The
+    projection ``partitionBy('centroid_id')`` at scale with
+    write_ivfpq_index, and searches read nprobe cells' directories). The
     query side broadcasts (probes × ADC tables); the only shuffles are
     the candidate equi-join on centroid_id and the two top-k windows.
 
@@ -428,8 +429,8 @@ def write_ivfpq_index(
     path: str,
     meta: dict | None = None,
 ) -> None:
-    """Persist an IVF-PQ index: encoded corpus partitioned BY CELL (the
-    same storage-layer nprobe/nlist pruning as write_ivf_index) plus
+    """Persist an IVF-PQ index: encoded corpus partitioned BY CELL (so a
+    search's nprobe/nlist pruning happens at the storage layer) plus
     centroids + codebooks as an underscore-prefixed JSON sidecar (Spark
     readers skip ``_`` files). The sidecar is written LAST and doubles
     as the commit marker: a crash mid-write leaves parquet without the
@@ -449,11 +450,8 @@ def write_ivfpq_index(
     didn't is invisible — the sidecar stays the single commit marker
     for builds AND appends.
 
-    LOCAL-FILESYSTEM CONTRACT: ``path`` must be a local path — the
-    parquet half goes through Spark but the sidecar uses
-    open()/os.replace(), so on HDFS/S3 the commit-marker protocol would
-    not hold. Route the sidecar through the Hadoop FileSystem API before
-    pointing this at remote storage."""
+    LOCAL-FILESYSTEM CONTRACT: the sidecar commits through
+    ``session.atomic_write``, whose rename is not atomic on HDFS/S3."""
     import json
     import os
 
@@ -466,20 +464,15 @@ def write_ivfpq_index(
         str(r["centroid_id"]): r["n"]
         for r in encoded.groupBy("centroid_id").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    tmp = os.path.join(path, "_ivfpq_meta.json.__tmp__")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "centroids": cents,
-                "codebooks": books,
-                "meta": meta,
-                "generations": [gen0],
-                "base_counts": counts,
-                "cell_counts": counts,
-            },
-            f,
-        )
-    os.replace(tmp, os.path.join(path, "_ivfpq_meta.json"))
+    sidecar = {
+        "centroids": cents,
+        "codebooks": books,
+        "meta": meta,
+        "generations": [gen0],
+        "base_counts": counts,
+        "cell_counts": counts,
+    }
+    atomic_write(os.path.join(path, "_ivfpq_meta.json"), json.dumps(sidecar))
 
 
 def read_ivfpq_index(
@@ -500,21 +493,10 @@ def read_ivfpq_index(
     scan as a parquet PartitionFilter), so a torn append — parquet
     written, sidecar bump lost — is simply never read. Legacy sidecars
     without ``generations`` fall back to the flat root-scan layout."""
-    import json
     import os
     from functools import reduce
 
-    meta = _read_ivfpq_sidecar(path)
-    if expect_meta is not None and meta.get("meta") != expect_meta:
-        raise ValueError(
-            f"IVF-PQ index at {path} was built with different metadata "
-            f"(stored {meta.get('meta')!r}, expected {expect_meta!r}) — rebuild"
-        )
-    cents = [(int(cid), [float(x) for x in cvec]) for cid, cvec in meta["centroids"]]
-    books: Codebooks = [
-        [(int(cid), [float(x) for x in cent]) for cid, cent in book]
-        for book in meta["codebooks"]
-    ]
+    meta, cents, books = _read_ivfpq_sidecar(path, expect_meta)
     gens = meta.get("generations")
     if gens:
         scans = [spark.read.parquet(os.path.join(path, g)) for g in gens]
@@ -524,8 +506,12 @@ def read_ivfpq_index(
     return cents, books, encoded
 
 
-def _read_ivfpq_sidecar(path: str) -> dict:
-    import json
+def _read_ivfpq_sidecar(
+    path: str, expect_meta: dict | None = None
+) -> tuple[dict, list[tuple[int, list[float]]], Codebooks]:
+    """(sidecar, centroids, codebooks) of a committed index; raises
+    FileNotFoundError without a sidecar and ValueError when it is torn
+    or its stored ``meta`` differs from ``expect_meta``."""
     import os
 
     meta_path = os.path.join(path, "_ivfpq_meta.json")
@@ -534,8 +520,13 @@ def _read_ivfpq_sidecar(path: str) -> dict:
             f"no committed IVF-PQ index at {path} (missing _ivfpq_meta.json "
             f"sidecar — torn or absent write)"
         )
-    with open(meta_path) as f:
-        return json.load(f)
+    meta = read_json(meta_path, expect_meta)
+    cents = [(int(cid), [float(x) for x in cvec]) for cid, cvec in meta["centroids"]]
+    books: Codebooks = [
+        [(int(cid), [float(x) for x in cent]) for cid, cent in book]
+        for book in meta["codebooks"]
+    ]
+    return meta, cents, books
 
 
 class IndexStaleError(ValueError):
@@ -585,23 +576,13 @@ def ivfpq_append(
     import os
     import shutil
 
-    meta = _read_ivfpq_sidecar(path)
-    if expect_meta is not None and meta.get("meta") != expect_meta:
-        raise ValueError(
-            f"IVF-PQ index at {path} was built with different metadata "
-            f"(stored {meta.get('meta')!r}, expected {expect_meta!r}) — rebuild"
-        )
+    meta, cents, books = _read_ivfpq_sidecar(path, expect_meta)
     gens = meta.get("generations")
     if not gens:
         raise ValueError(
             f"IVF-PQ index at {path} uses the pre-generation flat layout — "
             f"rebuild with write_ivfpq_index before appending"
         )
-    cents = [(int(cid), [float(x) for x in cvec]) for cid, cvec in meta["centroids"]]
-    books: Codebooks = [
-        [(int(cid), [float(x) for x in cent]) for cid, cent in book]
-        for book in meta["codebooks"]
-    ]
 
     encoded = encode_ivfpq(new_vectors, cents, books, key=key, vec=vec)
     new_counts = {
@@ -649,10 +630,7 @@ def ivfpq_append(
     meta["generations"] = [*gens, gen]
     meta["cell_counts"] = projected
     meta["stale"] = bool(stale)
-    tmp = os.path.join(path, "_ivfpq_meta.json.__tmp__")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, "_ivfpq_meta.json"))
+    atomic_write(os.path.join(path, "_ivfpq_meta.json"), json.dumps(meta))
     return {
         "generation": gen_n,
         "appended": appended,

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c_tran_data_pipeline_spark.session import atomic_write, read_json
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -836,39 +838,6 @@ def ivf_index(
     return cents, assigned
 
 
-def write_ivf_index(
-    index: tuple[list[tuple[int, list[float]]], DataFrame], path: str
-) -> None:
-    """Persist an IVF index: the cell-assigned corpus partitioned BY CELL
-    (``partitionBy('centroid_id')``) plus the centroid table as an
-    underscore-prefixed JSON sidecar (Spark readers skip ``_``-files).
-    The layout is the point: a later search that filters on probed cells
-    reads only those cells' directories — partition pruning does the
-    nprobe/nlist work reduction at the STORAGE layer."""
-    import json
-    import os
-
-    cents, assigned = index
-    assigned.write.partitionBy("centroid_id").mode("overwrite").parquet(path)
-    with open(os.path.join(path, "_centroids.json"), "w") as f:
-        json.dump(cents, f)
-
-
-def read_ivf_index(
-    spark: SparkSession, path: str
-) -> tuple[list[tuple[int, list[float]]], DataFrame]:
-    """Load a persisted IVF index (see write_ivf_index). The returned
-    corpus DataFrame is the partitioned-by-cell scan; pass it to
-    ivf_search with ``static_cell_pruning=True`` so only probed cell
-    partitions are read."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_centroids.json")) as f:
-        cents = [(int(cid), [float(x) for x in cvec]) for cid, cvec in json.load(f)]
-    return cents, spark.read.parquet(path)
-
-
 def ivf_search(
     index: tuple[list[tuple[int, list[float]]], DataFrame],
     queries: DataFrame,
@@ -884,9 +853,11 @@ def ivf_search(
 
     ``static_cell_pruning``: collect the probed-cell union (≤ nlist ids;
     the query batch is small by contract) and push it as a literal IN
-    filter on the corpus side. Against a write_ivf_index layout this
-    becomes a parquet PartitionFilter — the scan physically reads only
-    the probed cells' directories instead of relying on runtime DPP."""
+    filter on the corpus side. Against a persisted partitionBy(centroid_id)
+    layout (read_ivfpq_index's encoded corpus, as q_ann_ivf_search reads
+    it) this becomes a parquet PartitionFilter — the scan physically
+    reads only the probed cells' directories instead of relying on
+    runtime DPP."""
     cents, corpus_cells = index
     # norms once per assignment row / probe row, never per candidate
     # pair (see cosine_topk)
@@ -1447,15 +1418,15 @@ def build_semantic_store(
 def _commit_semantic_sidecar(
     path: str, generations: list[str], centroids, meta: dict
 ) -> None:
-    """Atomically publish the store state (write-aside + os.replace):
-    readers see the old generation list or the new, never a torn one."""
+    """Atomically publish the store state: readers see the old
+    generation list or the new, never a torn one."""
     import json
     import os
 
-    tmp = os.path.join(path, "._semantic_store.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"generations": generations, "centroids": centroids, "meta": meta}, f)
-    os.replace(tmp, os.path.join(path, "_semantic_store.json"))
+    atomic_write(
+        os.path.join(path, "_semantic_store.json"),
+        json.dumps({"generations": generations, "centroids": centroids, "meta": meta}),
+    )
 
 
 def write_semantic_store(
@@ -1490,11 +1461,9 @@ def append_semantic_store(new_reps: DataFrame, path: str, gen: str) -> None:
     appends (the incremental contract: assignment against persisted
     centroids, zero training jobs). Appending ``gen`` twice is
     idempotent (overwrite + already-listed check)."""
-    import json
     import os
 
-    with open(os.path.join(path, "_semantic_store.json")) as f:
-        rec = json.load(f)
+    rec = read_json(os.path.join(path, "_semantic_store.json"))
     new_reps.write.partitionBy("cell").mode("overwrite").parquet(
         os.path.join(path, gen)
     )
@@ -1506,25 +1475,18 @@ def append_semantic_store(new_reps: DataFrame, path: str, gen: str) -> None:
 
 
 def read_semantic_store(
-    spark, path: str
+    spark, path: str, expect_meta: dict | None = None
 ) -> tuple[DataFrame, list[tuple[int, list[float]]], dict]:
     """Load a persisted store → (representatives, centroids, meta);
     reads ONLY sidecar-listed generations (an unlisted directory is a
-    torn append) and raises on a torn/uncommitted store (parquet
-    without sidecar). Pre-generation stores (sidecar without a
+    torn append) and raises ValueError on a torn/uncommitted store
+    (parquet without sidecar) or a stored meta other than
+    ``expect_meta``. Pre-generation stores (sidecar without a
     ``generations`` list, reps at the store root) still read — the
     legacy-compat contract write_ivfpq_index set."""
-    import json
     import os
 
-    sidecar = os.path.join(path, "_semantic_store.json")
-    try:
-        with open(sidecar) as f:
-            rec = json.load(f)
-    except (OSError, ValueError) as e:
-        raise ValueError(
-            f"semantic store at {path} is uncommitted or torn (no readable sidecar)"
-        ) from e
+    rec = read_json(os.path.join(path, "_semantic_store.json"), expect_meta)
     cents = [(int(c), [float(x) for x in v]) for c, v in rec["centroids"]]
     gens = rec.get("generations")
     if gens is None:  # legacy flat layout: reps partitioned at the root

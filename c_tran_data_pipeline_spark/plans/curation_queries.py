@@ -22,6 +22,7 @@ from c_tran_data_pipeline_spark.operators.curation import (
 )
 from c_tran_data_pipeline_spark.plans.registry import query
 from c_tran_data_pipeline_spark.plans.text_queries import langid_case_sql, quality_sql
+from c_tran_data_pipeline_spark.session import cached_artifact, read_json
 from c_tran_data_pipeline_spark.sources.readers import load_table, spread
 
 
@@ -1396,7 +1397,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Learned quality classifier: shared feature recipe, fingerprint-keyed
-# model cache (the _bpe_cache_path pattern — q_quality_classifier and
+# model cache (session.cached_artifact — q_quality_classifier and
 # q_classifier_filter previously trained the IDENTICAL model twice,
 # ~4 s of the 9.4 s pair at sf0.1), and a fully self-contained DuckDB
 # oracle that REPLAYS the training as a recursive CTE — converting both
@@ -1435,74 +1436,31 @@ def clf_features(docs: DataFrame, with_id: bool = False) -> DataFrame:
     return docs.select("doc_id", *cols) if with_id else docs.select(*cols)
 
 
-def _clf_cache_path(sf_dir: str) -> str:
-    import hashlib
-    import json as _json
-    import os
-
-    from c_tran_data_pipeline_spark.session import index_cache_dir
-
-    tag = hashlib.md5(
-        _json.dumps({"sf_dir": os.path.abspath(sf_dir), "params": _CLF_PARAMS},
-                    sort_keys=True).encode()
-    ).hexdigest()[:10]
-    base = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return os.path.join(index_cache_dir(), f"clf_{base}_{tag}.json")
-
-
-def _clf_fingerprint(sf_dir: str) -> dict:
-    import os
-
-    p = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    try:
-        st = os.stat(p)
-        return {"path": p, "mtime": st.st_mtime, "size": st.st_size}
-    except OSError:
-        return {"path": p}
-
-
 def _clf_model_for(spark: SparkSession, sf_dir: str) -> dict:
     """Cached (trajectory, standardization stats) if fresh, else
-    train+commit (atomic tmp+rename; fixture fingerprint in the payload
-    so a regenerated fixture forces retrain). Floats survive the JSON
-    round-trip bit-exactly (repr shortest-round-trip), so the cached
-    model is indistinguishable from a fresh training run."""
+    train+commit (session.cached_artifact: a regenerated fixture forces
+    retrain). Floats survive the JSON round-trip bit-exactly (repr
+    shortest-round-trip), so the cached model is indistinguishable from
+    a fresh training run."""
     import json as _json
-    import os
 
     from c_tran_data_pipeline_spark.operators.classifier import logreg_train, standardize
 
-    path = _clf_cache_path(sf_dir)
-    try:
-        with open(path) as f:
-            rec = _json.load(f)
-        if rec.get("fixture") == _clf_fingerprint(sf_dir):
-            return rec
-    except (OSError, ValueError):
-        pass
+    def build(tmp: str, meta: dict) -> str:
+        docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
+        std, stats = standardize(clf_features(docs), _CLF_FEATURES)
+        std = std.persist()
+        try:
+            traj = logreg_train(
+                std, _CLF_FEATURES, "label",
+                iters=_CLF_PARAMS["iters"], lr=_CLF_PARAMS["lr"],
+            )
+        finally:
+            std.unpersist()
+        stats = {c: list(stats[c]) for c in _CLF_FEATURES}
+        return _json.dumps({"trajectory": traj, "stats": stats, "meta": meta})
 
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    feats = clf_features(docs)
-    std, stats = standardize(feats, _CLF_FEATURES)
-    std = std.persist()
-    try:
-        traj = logreg_train(
-            std, _CLF_FEATURES, "label",
-            iters=_CLF_PARAMS["iters"], lr=_CLF_PARAMS["lr"],
-        )
-    finally:
-        std.unpersist()
-    rec = {
-        "trajectory": traj,
-        "stats": {c: list(stats[c]) for c in _CLF_FEATURES},
-        "fixture": _clf_fingerprint(sf_dir),
-    }
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.build-{os.getpid()}"
-    with open(tmp, "w") as f:
-        _json.dump(rec, f)
-    os.replace(tmp, path)
-    return rec
+    return cached_artifact("clf", sf_dir, "documents", _CLF_PARAMS, build, read_json)
 
 
 # --- DuckDB oracle: the WHOLE pipeline (features → decimal-grain
@@ -1646,8 +1604,8 @@ def _clf_filter_oracle() -> str:
     "and the 9-dp output round hides residual 1e-15 drift. Plan: ONE "
     "cached 5-column projection; each iteration is a width-6 "
     "partial-first aggregate (map-side combine, single-row exchange); "
-    "driver state = 5 doubles, cached per fixture fingerprint (the "
-    "_bpe_cache_path pattern) so q_classifier_filter reuses the model "
+    "driver state = 5 doubles, cached per fixture fingerprint "
+    "(session.cached_artifact) so q_classifier_filter reuses the model "
     "instead of retraining. At 100 TB the same gradient contract "
     "feeds mini-batch GD or L-BFGS; nothing at data grain ever leaves "
     "the executors.",

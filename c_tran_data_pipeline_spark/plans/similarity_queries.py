@@ -24,6 +24,7 @@ from c_tran_data_pipeline_spark.operators.similarity import (
     label_centroids,
 )
 from c_tran_data_pipeline_spark.plans.registry import query
+from c_tran_data_pipeline_spark.session import build_artifact, cached_artifact
 from c_tran_data_pipeline_spark.sources.readers import load_table
 
 _COS = "list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))"
@@ -1006,11 +1007,8 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The ONE recipe every persisted-index consumer shares. The cache path
-# embeds a hash of these params + the absolute fixture path, so changed
-# hyperparameters or two fixtures sharing a basename can never serve each
-# other's index; the sidecar stores the same record (plus the fixture's
-# mtime/size fingerprint) and is validated again at read time.
+# The ONE recipe every persisted-index consumer shares; the cache path
+# and the sidecar's meta are keyed on it (session.cached_artifact).
 # train_sample_mod=4: both quantizers train on a deterministic 1/4
 # hash-sample of the corpus (train-on-sample, assign-full-corpus — the
 # standard IVF recipe); encoding still covers every row.
@@ -1028,74 +1026,13 @@ _IVFPQ_PARAMS = {
 }
 
 
-def _ivfpq_fixture_fingerprint(sf_dir: str) -> dict:
-    """Identity of the corpus an index was built from: absolute path +
-    mtime + size of the embeddings parquet. Stored in the sidecar and
-    compared on every freshness check — a regenerated fixture (new
-    mtime/size) or a different directory invalidates the cache."""
-    import os
-
-    p = os.path.abspath(os.path.join(sf_dir, "embeddings.parquet"))
-    try:
-        st = os.stat(p)
-        return {"path": p, "mtime": st.st_mtime, "size": st.st_size}
-    except OSError:
-        # Unreadable/non-local fixture: identity is the path alone —
-        # freshness then never matches a fingerprint that carried
-        # mtime/size, forcing a rebuild rather than trusting blindly.
-        return {"path": p}
-
-
-def _ivfpq_meta(sf_dir: str) -> dict:
-    return {"params": _IVFPQ_PARAMS, "fixture": _ivfpq_fixture_fingerprint(sf_dir)}
-
-
-def _ivfpq_cache_path(sf_dir: str) -> str:
-    """Per-(fixture, recipe) cache location for the persisted IVF-PQ
-    index (under the system tmp dir — never inside the read-only fixture
-    tree). Keyed by a hash of the build params and the ABSOLUTE fixture
-    dir, so a recipe change or a basename collision gets a fresh path
-    instead of silently reusing a mismatched index."""
-    import hashlib
-    import json as _json
-    import os
-
-    tag = hashlib.md5(
-        _json.dumps(
-            {"sf_dir": os.path.abspath(sf_dir), "params": _IVFPQ_PARAMS},
-            sort_keys=True,
-        ).encode()
-    ).hexdigest()[:10]
-    base = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    from c_tran_data_pipeline_spark.session import index_cache_dir
-
-    return os.path.join(index_cache_dir(), f"ivfpq_{base}_{tag}")
-
-
-def _ivfpq_index_fresh(sf_dir: str, path: str) -> bool:
-    """True iff a COMMITTED index exists at ``path`` whose sidecar
-    records exactly the current recipe and the current fixture
-    fingerprint. Any read error, torn sidecar, or mismatch means
-    'unknown' → rebuild (never trust a cache blindly)."""
-    import json as _json
-    import os
-
-    try:
-        with open(os.path.join(path, "_ivfpq_meta.json")) as f:
-            rec = _json.load(f).get("meta") or {}
-        return rec == _ivfpq_meta(sf_dir)
-    except (OSError, ValueError):
-        return False
-
-
-def _ivfpq_index_for(spark: SparkSession, sf_dir: str):
-    """Build the shared index IN MEMORY with the canonical recipe —
-    the single source of truth the committed cache, the registered
+def _ivfpq_index_for(emb: DataFrame):
+    """Build an index over ``emb`` IN MEMORY with the canonical recipe —
+    the single source of truth both committed caches, the registered
     build query, and the row-identity test twins all derive from."""
     from c_tran_data_pipeline_spark.operators.pq import deterministic_sample, ivfpq_index
 
     p = _IVFPQ_PARAMS
-    emb = load_table(spark, sf_dir, "embeddings")
     return ivfpq_index(
         emb,
         m=p["m"],
@@ -1107,40 +1044,22 @@ def _ivfpq_index_for(spark: SparkSession, sf_dir: str):
     )
 
 
-def _build_ivfpq(spark: SparkSession, sf_dir: str) -> str:
-    """Build and COMMIT the shared index: write to a pid-unique temp
-    dir, then swap into the cache path — concurrent runs each build
-    their own temp and the last rename wins whole, so a reader never
-    sees a half-written directory at the committed path (worst case it
-    hits the swap window, finds no sidecar, and rebuilds)."""
-    import os
-    import shutil
+def _ivfpq_recipe(spark: SparkSession, sf_dir: str) -> tuple:
+    """Arguments of session.cached_artifact / build_artifact for the
+    shared index: built by _ivfpq_index_for, committed sidecar-last with
+    the recipe + fixture fingerprint as the sidecar's meta, read back
+    with that meta validated."""
+    from c_tran_data_pipeline_spark.operators.pq import read_ivfpq_index, write_ivfpq_index
 
-    from c_tran_data_pipeline_spark.operators.pq import write_ivfpq_index
+    emb = load_table(spark, sf_dir, "embeddings")
 
-    idx = _ivfpq_index_for(spark, sf_dir)
-    path = _ivfpq_cache_path(sf_dir)
-    tmp = f"{path}.build-{os.getpid()}"
-    write_ivfpq_index(idx, tmp, meta=_ivfpq_meta(sf_dir))
-    shutil.rmtree(path, ignore_errors=True)
-    os.rename(tmp, path)
-    return path
+    def build(tmp: str, meta: dict) -> None:
+        write_ivfpq_index(_ivfpq_index_for(emb), tmp, meta=meta)
 
+    def load(path: str, meta: dict):
+        return read_ivfpq_index(spark, path, expect_meta=meta)
 
-def _ensure_ivfpq(spark: SparkSession, sf_dir: str):
-    """Committed-index handle for the search queries: build if absent/
-    stale, read with sidecar-metadata validation, rebuild once if the
-    validation races a concurrent swap."""
-    from c_tran_data_pipeline_spark.operators.pq import read_ivfpq_index
-
-    path = _ivfpq_cache_path(sf_dir)
-    if not _ivfpq_index_fresh(sf_dir, path):
-        _build_ivfpq(spark, sf_dir)
-    try:
-        return read_ivfpq_index(spark, path, expect_meta=_ivfpq_meta(sf_dir))
-    except (FileNotFoundError, ValueError):
-        path = _build_ivfpq(spark, sf_dir)
-        return read_ivfpq_index(spark, path, expect_meta=_ivfpq_meta(sf_dir))
+    return "ivfpq", sf_dir, "embeddings", _IVFPQ_PARAMS, build, load
 
 
 @query(
@@ -1168,10 +1087,7 @@ def _ensure_ivfpq(spark: SparkSession, sf_dir: str):
     tags=("similarity", "quantize", "index-build"),
 )
 def q_ann_ivfpq_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from c_tran_data_pipeline_spark.operators.pq import read_ivfpq_index
-
-    path = _build_ivfpq(spark, sf_dir)
-    _, _, encoded = read_ivfpq_index(spark, path)
+    _, _, encoded = build_artifact(*_ivfpq_recipe(spark, sf_dir))
     return (
         encoded.groupBy("centroid_id")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
@@ -1203,7 +1119,7 @@ def q_ann_ivfpq_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from c_tran_data_pipeline_spark.operators.pq import ivfpq_search
 
-    idx = _ensure_ivfpq(spark, sf_dir)
+    idx = cached_artifact(*_ivfpq_recipe(spark, sf_dir))
     emb = load_table(spark, sf_dir, "embeddings")
     return ivfpq_search(
         idx, emb.filter(F.col("vec_id") < 20), k=3, nprobe=4, rerank_factor=8
@@ -1231,7 +1147,7 @@ def q_ann_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from c_tran_data_pipeline_spark.operators.pq import pq_topk
 
-    _, books, _ = _ensure_ivfpq(spark, sf_dir)
+    _, books, _ = cached_artifact(*_ivfpq_recipe(spark, sf_dir))
     emb = load_table(spark, sf_dir, "embeddings")
     return pq_topk(emb, emb.filter(F.col("vec_id") < 20), books, k=3, rerank_factor=8)
 
@@ -1257,7 +1173,7 @@ def q_ann_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from c_tran_data_pipeline_spark.operators.similarity import ivf_search
 
-    cents, _, encoded = _ensure_ivfpq(spark, sf_dir)
+    cents, _, encoded = cached_artifact(*_ivfpq_recipe(spark, sf_dir))
     index = (cents, encoded.select("neighbor_id", "__cv", "centroid_id"))
     emb = load_table(spark, sf_dir, "embeddings")
     return ivf_search(
@@ -1265,74 +1181,29 @@ def q_ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivfpq80_meta(sf_dir: str) -> dict:
-    return {
-        "params": _IVFPQ_PARAMS,
-        "fixture": _ivfpq_fixture_fingerprint(sf_dir),
-        "subset": "vec_id % 10 < 8",
-    }
-
-
-def _ivfpq80_cache_path(sf_dir: str) -> str:
-    import hashlib
-    import json as _json
-    import os
-
-    tag = hashlib.md5(
-        _json.dumps(
-            {"sf_dir": os.path.abspath(sf_dir), "params": _IVFPQ_PARAMS, "subset": 80},
-            sort_keys=True,
-        ).encode()
-    ).hexdigest()[:10]
-    base = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    from c_tran_data_pipeline_spark.session import index_cache_dir
-
-    return os.path.join(index_cache_dir(), f"ivfpq80_{base}_{tag}")
+_IVFPQ80_PARAMS = {**_IVFPQ_PARAMS, "subset": "vec_id % 10 < 8"}
 
 
 def _ensure_ivfpq80(spark: SparkSession, sf_dir: str) -> str:
     """Committed BASE index over the historical 80% of the corpus — the
     thing a daily-ingest user already has on disk before today's batch
-    arrives. Built/validated exactly like _ensure_ivfpq (pid-unique temp
-    + whole-directory swap, sidecar recipe + fixture fingerprint)."""
-    import json as _json
-    import os
-    import shutil
+    arrives. Built and validated like the shared index (same recipe on
+    the subset, session.cached_artifact)."""
+    from c_tran_data_pipeline_spark.operators.pq import _read_ivfpq_sidecar, write_ivfpq_index
 
-    from c_tran_data_pipeline_spark.operators.pq import (
-        deterministic_sample,
-        ivfpq_index,
-        write_ivfpq_index,
-    )
-
-    path = _ivfpq80_cache_path(sf_dir)
-    try:
-        with open(os.path.join(path, "_ivfpq_meta.json")) as f:
-            rec = _json.load(f)
+    def load(path: str, meta: dict) -> str:
         # only a pristine single-generation base is reusable (a prior
         # crashed run may have committed appends into the cache copy)
-        if rec.get("meta") == _ivfpq80_meta(sf_dir) and rec.get("generations") == [
-            "g000000"
-        ]:
-            return path
-    except (OSError, ValueError):
-        pass
-    p = _IVFPQ_PARAMS
-    base = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 10 < 8)
-    idx = ivfpq_index(
-        base,
-        m=p["m"],
-        ksub=p["ksub"],
-        nlist=p["nlist"],
-        iters=p["iters"],
-        dim=p["dim"],
-        train_df=deterministic_sample(base, mod=p["train_sample_mod"], key="vec_id"),
-    )
-    tmp = f"{path}.build-{os.getpid()}"
-    write_ivfpq_index(idx, tmp, meta=_ivfpq80_meta(sf_dir))
-    shutil.rmtree(path, ignore_errors=True)
-    os.rename(tmp, path)
-    return path
+        if _read_ivfpq_sidecar(path, meta)[0].get("generations") != ["g000000"]:
+            raise ValueError(f"IVF-PQ base index at {path} was appended to")
+        return path
+
+    base = load_table(spark, sf_dir, "embeddings").filter(_IVFPQ80_PARAMS["subset"])
+
+    def build(tmp: str, meta: dict) -> None:
+        write_ivfpq_index(_ivfpq_index_for(base), tmp, meta=meta)
+
+    return cached_artifact("ivfpq80", sf_dir, "embeddings", _IVFPQ80_PARAMS, build, load)
 
 
 @query(
@@ -1364,6 +1235,7 @@ def _ensure_ivfpq80(spark: SparkSession, sf_dir: str) -> str:
     tags=("similarity", "topk", "quantize", "incremental"),
 )
 def q_ann_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import glob
     import os
     import shutil
 
@@ -1374,13 +1246,22 @@ def q_ann_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     base_path = _ensure_ivfpq80(spark, sf_dir)
+    # The returned frame reads this run's copy, so it stays behind; the
+    # copies of processes that have exited are removed here.
+    for copy in glob.glob(f"{glob.escape(base_path)}.append-*"):
+        try:
+            os.kill(int(copy.rsplit("-", 1)[1]), 0)
+        except ProcessLookupError:
+            shutil.rmtree(copy, ignore_errors=True)
+        except (ValueError, PermissionError):
+            pass  # not a pid suffix, or a live process of another user
     work = f"{base_path}.append-{os.getpid()}"
     shutil.rmtree(work, ignore_errors=True)
     shutil.copytree(base_path, work)
     emb = load_table(spark, sf_dir, "embeddings")
     new = emb.filter(F.col("vec_id") % 10 >= 8)
     ivfpq_append(spark, work, new, drift_factor=8.0, allow_stale=True)
-    idx = read_ivfpq_index(spark, work, expect_meta=_ivfpq80_meta(sf_dir))
+    idx = read_ivfpq_index(spark, work)
     return ivfpq_search(
         idx, emb.filter(F.col("vec_id") < 20), k=3, nprobe=4, rerank_factor=8
     )
@@ -1572,9 +1453,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Persisted SemDeDup store — the _IVFPQ_PARAMS cache recipe applied to
-# semantic dedup: cache path keyed by a hash of build params + the
-# ABSOLUTE fixture dir; sidecar carries the same record + the fixture
-# mtime/size fingerprint, validated on every use; sidecar-last commit.
+# semantic dedup (session.cached_artifact).
 _SEM_STORE_PARAMS = {
     "threshold": 0.9,
     "nlist": 16,
@@ -1587,71 +1466,29 @@ _SEM_STORE_PARAMS = {
 }
 
 
-def _sem_store_meta(sf_dir: str) -> dict:
-    return {"params": _SEM_STORE_PARAMS, "fixture": _ivfpq_fixture_fingerprint(sf_dir)}
-
-
-def _sem_store_path(sf_dir: str) -> str:
-    import hashlib
-    import json as _json
-    import os
-
-    tag = hashlib.md5(
-        _json.dumps(
-            {"sf_dir": os.path.abspath(sf_dir), "params": _SEM_STORE_PARAMS},
-            sort_keys=True,
-        ).encode()
-    ).hexdigest()[:10]
-    base = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    from c_tran_data_pipeline_spark.session import index_cache_dir
-
-    return os.path.join(index_cache_dir(), f"semstore_{base}_{tag}")
-
-
-def _sem_store_fresh(sf_dir: str, path: str) -> bool:
-    import json as _json
-    import os
-
-    try:
-        with open(os.path.join(path, "_semantic_store.json")) as f:
-            rec = _json.load(f).get("meta") or {}
-        return rec == _sem_store_meta(sf_dir)
-    except (OSError, ValueError):
-        return False
-
-
-def _build_sem_store(spark: SparkSession, sf_dir: str) -> str:
-    """Build + COMMIT the base-corpus store (pid-unique temp dir, then
-    whole-directory swap — the _build_ivfpq crash/concurrency story)."""
-    import os
-    import shutil
-
+def _sem_store_for(spark: SparkSession, sf_dir: str, emb: DataFrame):
+    """(representatives, centroids) of the committed base-corpus store,
+    built from ``emb`` first if absent or stale."""
     from c_tran_data_pipeline_spark.operators.pq import deterministic_sample
     from c_tran_data_pipeline_spark.operators.similarity import (
         build_semantic_store,
+        read_semantic_store,
         write_semantic_store,
     )
 
     p = _SEM_STORE_PARAMS
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    base = emb.filter(F.col("vec_id") % 10 < p["base_mod"])
-    reps, cents = build_semantic_store(
-        base,
-        threshold=p["threshold"],
-        nlist=p["nlist"],
-        iters=p["iters"],
-        dim=p["dim"],
-        nprobe=p["nprobe"],
-        train_df=deterministic_sample(base, mod=p["train_sample_mod"], key="vec_id"),
-    )
-    path = _sem_store_path(sf_dir)
-    tmp = f"{path}.build-{os.getpid()}"
-    write_semantic_store(reps, cents, tmp, meta=_sem_store_meta(sf_dir))
-    shutil.rmtree(path, ignore_errors=True)
-    os.rename(tmp, path)
-    return path
+
+    def build(tmp: str, meta: dict) -> None:
+        base = emb.filter(F.col("vec_id") % 10 < p["base_mod"])
+        train = deterministic_sample(base, mod=p["train_sample_mod"], key="vec_id")
+        knobs = {k: p[k] for k in ("threshold", "nlist", "iters", "dim", "nprobe")}
+        reps, cents = build_semantic_store(base, train_df=train, **knobs)
+        write_semantic_store(reps, cents, tmp, meta=meta)
+
+    def load(path: str, meta: dict):
+        return read_semantic_store(spark, path, expect_meta=meta)[:2]
+
+    return cached_artifact("semstore", sf_dir, "embeddings", p, build, load)
 
 
 @query(
@@ -1684,10 +1521,7 @@ def _build_sem_store(spark: SparkSession, sf_dir: str) -> str:
     tags=("similarity", "dedup", "incremental"),
 )
 def q_incremental_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from c_tran_data_pipeline_spark.operators.similarity import (
-        incremental_semantic_dedup,
-        read_semantic_store,
-    )
+    from c_tran_data_pipeline_spark.operators.similarity import incremental_semantic_dedup
 
     p = _SEM_STORE_PARAMS
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -1713,14 +1547,7 @@ def q_incremental_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     new_batch = emb.filter(F.col("vec_id") % 10 >= p["base_mod"]).unionByName(twins)
-    path = _sem_store_path(sf_dir)
-    if not _sem_store_fresh(sf_dir, path):
-        _build_sem_store(spark, sf_dir)
-    try:
-        reps, cents, _meta = read_semantic_store(spark, path)
-    except ValueError:
-        path = _build_sem_store(spark, sf_dir)
-        reps, cents, _meta = read_semantic_store(spark, path)
+    reps, cents = _sem_store_for(spark, sf_dir, emb)
     flags, _updated = incremental_semantic_dedup(
         new_batch, reps, cents, threshold=p["threshold"], nprobe=p["nprobe"]
     )

@@ -19,6 +19,7 @@ from c_tran_data_pipeline_spark.functions.text import (
     words,
 )
 from c_tran_data_pipeline_spark.plans.registry import query
+from c_tran_data_pipeline_spark.session import build_artifact, cached_artifact, read_json
 from c_tran_data_pipeline_spark.sources.readers import load_table, spread
 
 
@@ -1693,66 +1694,22 @@ def q_dedup_span_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_PARAMS = {"num_merges": 16, "min_pair_count": 2}
 
 
-def _bpe_cache_path(sf_dir: str) -> str:
-    """Per-(fixture, recipe) cache for the learned merge table — the
-    _IVFPQ_PARAMS pattern: params-hash + absolute fixture dir in the
-    path, fixture fingerprint in the payload, atomic tmp+rename
-    commit."""
-    import hashlib
+def _bpe_recipe(spark: SparkSession, sf_dir: str) -> tuple:
+    """Arguments of session.cached_artifact / build_artifact for the
+    learned merge table: params-hash path, fixture fingerprint in the
+    payload, so a regenerated fixture forces retrain."""
     import json as _json
-    import os
-
-    tag = hashlib.md5(
-        _json.dumps({"sf_dir": os.path.abspath(sf_dir), "params": _BPE_PARAMS},
-                    sort_keys=True).encode()
-    ).hexdigest()[:10]
-    base = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    from c_tran_data_pipeline_spark.session import index_cache_dir
-
-    return os.path.join(index_cache_dir(), f"bpe_{base}_{tag}.json")
-
-
-def _bpe_fingerprint(sf_dir: str) -> dict:
-    import os
-
-    p = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    try:
-        st = os.stat(p)
-        return {"path": p, "mtime": st.st_mtime, "size": st.st_size}
-    except OSError:
-        return {"path": p}
-
-
-def _train_and_commit_bpe(spark: SparkSession, sf_dir: str) -> list[tuple[str, str, int]]:
-    import json as _json
-    import os
 
     from c_tran_data_pipeline_spark.operators.bpe import bpe_train
 
-    docs = load_table(spark, sf_dir, "documents").select("text")
-    merges = bpe_train(spread(docs), **_BPE_PARAMS)
-    path = _bpe_cache_path(sf_dir)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.build-{os.getpid()}"
-    with open(tmp, "w") as f:
-        _json.dump({"merges": merges, "fixture": _bpe_fingerprint(sf_dir)}, f)
-    os.replace(tmp, path)
-    return merges
+    def build(tmp: str, meta: dict) -> str:
+        docs = load_table(spark, sf_dir, "documents").select("text")
+        return _json.dumps({"merges": bpe_train(spread(docs), **_BPE_PARAMS), "meta": meta})
 
+    def load(path: str, meta: dict) -> list[tuple[str, str, int]]:
+        return [(a, b, int(n)) for a, b, n in read_json(path, meta)["merges"]]
 
-def _bpe_merges_for(spark: SparkSession, sf_dir: str) -> list[tuple[str, str, int]]:
-    """Cached merge table if fresh, else train+commit (read validates
-    the fixture fingerprint — a regenerated fixture forces retrain)."""
-    import json as _json
-
-    try:
-        with open(_bpe_cache_path(sf_dir)) as f:
-            rec = _json.load(f)
-        if rec.get("fixture") == _bpe_fingerprint(sf_dir):
-            return [(a, b, int(n)) for a, b, n in rec["merges"]]
-    except (OSError, ValueError):
-        pass
-    return _train_and_commit_bpe(spark, sf_dir)
+    return "bpe", sf_dir, "documents", _BPE_PARAMS, build, load
 
 
 # --- DuckDB replay of BPE training/encoding (round 7): the merge
@@ -1866,7 +1823,7 @@ def _bpe_encoded_vocab_ctes() -> str:
     tags=("text", "tokenizer", "training"),
 )
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    merges = _train_and_commit_bpe(spark, sf_dir)
+    merges = build_artifact(*_bpe_recipe(spark, sf_dir))
     return spark.createDataFrame(
         [(i + 1, a, b, n) for i, (a, b, n) in enumerate(merges)],
         "merge_rank int, left string, right string, pair_count bigint",
@@ -1907,7 +1864,7 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from c_tran_data_pipeline_spark.operators.bpe import bpe_token_counts
 
     docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    merges = _bpe_merges_for(spark, sf_dir)
+    merges = cached_artifact(*_bpe_recipe(spark, sf_dir))
     return bpe_token_counts(docs, merges)
 
 
@@ -2342,7 +2299,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     from c_tran_data_pipeline_spark.operators.bpe import bpe_encode_words
 
     docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text", "source"))
-    merges = _bpe_merges_for(spark, sf_dir)
+    merges = cached_artifact(*_bpe_recipe(spark, sf_dir))
     doc_words = docs.select(
         "source", F.explode(F.split(F.trim("text"), r"\s+")).alias("word")
     ).filter(F.col("word") != "")

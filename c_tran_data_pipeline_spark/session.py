@@ -9,7 +9,11 @@ match columnar stores (and the DuckDB oracle) exactly.
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
+import shutil
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -98,18 +102,18 @@ def persist_once_owned(df, level=None):
 
 
 def index_cache_dir() -> str:
-    """Per-user, mode-0700 directory for derived artifacts that FEED
-    QUERY OUTPUTS (trained classifier weights, BPE merge tables, IVF-PQ
-    codebooks, semantic-dedup centroid stores).
+    """Per-user, mode-0700 directory for the ``cached_artifact``
+    artifacts that FEED QUERY OUTPUTS: ``clf_*`` classifier weights,
+    ``bpe_*`` merge tables, ``ivfpq_*`` / ``ivfpq80_*`` IVF-PQ indexes
+    (plus ``q_ann_ivfpq_append``'s ``.append-<pid>`` working copies) and
+    ``semstore_*`` semantic-dedup stores.
 
-    Previously these lived under the world-writable shared
-    ``$TMPDIR/spark_graft_indexes``; on a multi-user host another user
-    could pre-create a fingerprint-matching weights file and silently
-    substitute model outputs (ADVICE r7). Scoping to
-    ``spark_graft_indexes_<uid>`` with 0o700 makes the trust boundary the
-    OS user, matching how any artifact that affects query results should
-    be trusted. Override with $SPARK_GRAFT_INDEX_DIR (e.g. to a cluster
-    scratch path); the override is created 0o700 as well."""
+    In a shared world-writable dir another user could pre-create a
+    fingerprint-matching weights file and silently substitute model
+    outputs (ADVICE r7), so the trust boundary is the OS user:
+    ``spark_graft_indexes_<uid>``, 0o700. Override with
+    $SPARK_GRAFT_INDEX_DIR (e.g. a cluster scratch path); the override
+    is created 0o700 as well."""
     import stat
     import tempfile
 
@@ -142,3 +146,108 @@ def index_cache_dir() -> str:
     if stat.S_IMODE(st.st_mode) != 0o700:
         os.chmod(path, 0o700)  # raises on failure — never a silent side door
     return path
+
+
+# The commit protocol for what the engine persists outside Spark's own
+# writers. Local filesystem only: rename is atomic there, not on HDFS/S3.
+
+
+def atomic_write(path: str, text: str) -> None:
+    """Commit ``text`` at ``path`` whole: write ``<path>.tmp-<pid>``,
+    fsync it, then ``os.replace``. The temp name starts with the
+    target's, so an ``_``-prefixed sidecar's temp stays hidden from
+    Spark's file listing too."""
+    tmp = f"{path}.tmp-{os.getpid()}"
+    with open(tmp, "w") as fh:
+        fh.write(text)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
+
+
+def read_json(path: str, meta: dict | None = None) -> dict:
+    """The JSON committed at ``path``. ValueError if it is absent or
+    torn, or if ``meta`` is given and differs from its stored meta."""
+    try:
+        with open(path) as fh:
+            rec = json.load(fh)
+    except (OSError, ValueError) as e:
+        raise ValueError(f"{path} is uncommitted or torn (no readable commit)") from e
+    if meta is not None and rec.get("meta") != meta:
+        raise ValueError(f"{path} is stale (built from another recipe or fixture)")
+    return rec
+
+
+def swap_dir(tmp: str, path: str) -> None:
+    """Replace the directory ``path`` (if any) by the finished ``tmp``:
+    rename the old one aside to ``<path>.old-<pid>``, rename ``tmp`` in,
+    remove the old one. A reader between the renames finds no
+    directory, never a mix of old and new files."""
+    old = f"{path}.old-{os.getpid()}"
+    shutil.rmtree(old, ignore_errors=True)  # left by a crashed swap
+    try:
+        os.rename(path, old)
+    except FileNotFoundError:
+        pass
+    os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _artifact(kind: str, sf_dir: str, table: str, params: dict) -> tuple[str, dict]:
+    root = os.path.abspath(sf_dir)
+    key = json.dumps({"sf_dir": root, "params": params}, sort_keys=True).encode()
+    base = os.path.basename(sf_dir.rstrip("/")) or "sf"
+    src = os.path.join(root, f"{table}.parquet")
+    try:
+        st = os.stat(src)
+        fixture = {"path": src, "mtime": st.st_mtime, "size": st.st_size}
+    except OSError:
+        fixture = {"path": src}
+    path = os.path.join(index_cache_dir(), f"{kind}_{base}_{hashlib.md5(key).hexdigest()[:10]}")
+    return path, {"params": params, "fixture": fixture}
+
+
+def _publish(path: str, meta: dict, build: Callable) -> None:
+    tmp = f"{path}.build-{os.getpid()}"
+    text = build(tmp, meta)
+    if text is None:
+        swap_dir(tmp, path)
+    else:
+        atomic_write(path, text)
+
+
+def cached_artifact(
+    kind: str, sf_dir: str, table: str, params: dict, build: Callable, load: Callable
+):
+    """``load(path, meta)`` the artifact derived from
+    ``<sf_dir>/<table>.parquet`` by the recipe ``params``; when ``load``
+    raises OSError or ValueError (absent, torn, or stored meta !=
+    ``meta``), build and publish it first, and once more if that load
+    races a concurrent swap.
+
+    The path hashes the ABSOLUTE fixture dir and ``params``, so two
+    recipes or same-named fixtures never share an artifact. ``meta`` is
+    ``{"params", "fixture"}``, the fixture being the table's path, mtime
+    and size (the path alone if stat fails, which never matches).
+    ``build(tmp, meta)`` fills a directory ``tmp`` (``<path>.build-<pid>``,
+    published by ``swap_dir``) and returns None, or returns a file
+    artifact's text (published by ``atomic_write``)."""
+    path, meta = _artifact(kind, sf_dir, table, params)
+    for attempt in range(3):
+        if attempt:
+            _publish(path, meta, build)
+        try:
+            return load(path, meta)
+        except (OSError, ValueError):
+            if attempt == 2:
+                raise
+
+
+def build_artifact(
+    kind: str, sf_dir: str, table: str, params: dict, build: Callable, load: Callable
+):
+    """``cached_artifact`` that always builds: for a query that
+    measures the build itself."""
+    path, meta = _artifact(kind, sf_dir, table, params)
+    _publish(path, meta, build)
+    return load(path, meta)

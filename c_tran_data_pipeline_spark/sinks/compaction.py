@@ -18,12 +18,11 @@ Strategy — measure, then repartition by the real ratio:
 3. Rewrite with ``repartition(n)`` (round-robin — even output sizes
    regardless of input skew; a ``sort_by`` option instead range-sorts
    so min/max stats stay selective, the q_zorder_cells layout note).
-4. Write to a temp sibling directory, then atomically swap directories
-   — a reader never sees a half-compacted table (the
-   sinks/versioned.py commit discipline; crash before the swap leaves
-   the original untouched).
+4. Write to a temp sibling directory, then swap directories
+   (``session.swap_dir``) — a reader never sees a half-compacted table
+   (crash before the swap leaves the original untouched).
 
-Contract: local-filesystem paths (os.rename swap — the same documented
+Contract: local-filesystem paths (rename swap — the same documented
 contract as write_ivfpq_index's sidecar; an object-store deployment
 would swap via the table format's transaction log instead).
 
@@ -36,9 +35,10 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from c_tran_data_pipeline_spark.session import swap_dir
 
 
 def parquet_file_census(path: str) -> tuple[int, int]:
@@ -75,7 +75,7 @@ def compact_parquet(
     sort_by: list[str] | None = None,
     force: bool = False,
 ) -> dict:
-    """Compact the parquet table at ``path`` in place (atomic directory
+    """Compact the parquet table at ``path`` in place (directory
     swap). Returns the plan dict plus ``compacted``/``n_files_after``.
 
     ``sort_by``: range-sort the rewrite on these columns instead of
@@ -95,9 +95,6 @@ def compact_parquet(
     )
     tmp = f"{path}.compact-{os.getpid()}"
     out.write.mode("overwrite").parquet(tmp)
-    old = f"{path}.precompact-{os.getpid()}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    swap_dir(tmp, path)
     n_after, _ = parquet_file_census(path)
     return {**plan, "compacted": True, "n_files_after": n_after}

@@ -16,9 +16,9 @@ funnelling a big DataFrame through one process.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
+
+from c_tran_data_pipeline_spark.session import atomic_write
 
 
 def write_json_array(df: DataFrame, path: str, max_rows: int = 100_000) -> int:
@@ -27,8 +27,8 @@ def write_json_array(df: DataFrame, path: str, max_rows: int = 100_000) -> int:
 
     Serialization happens executor-side (``toJSON`` maps rows to JSON
     strings in the JVM); only the finished strings cross to the driver,
-    which frames them with ``[ ... ]`` and commits via write-temp +
-    ``os.replace`` so readers never observe a half-written artifact.
+    which frames them with ``[ ... ]`` and commits via ``atomic_write``
+    so readers never observe a half-written artifact.
     ``max_rows`` enforces the small-result contract (raise, don't melt);
     pass a bigger cap explicitly when you mean it."""
     rows = df.limit(max_rows + 1).toJSON().collect()
@@ -38,10 +38,5 @@ def write_json_array(df: DataFrame, path: str, max_rows: int = 100_000) -> int:
             f"single-file small-result artifact — use the JSON-lines sink for "
             f"big outputs, or raise max_rows explicitly"
         )
-    tmp = path + ".__tmp__"
-    with open(tmp, "w") as fh:
-        fh.write("[\n")
-        fh.write(",\n".join(rows))
-        fh.write("\n]")
-    os.replace(tmp, path)
+    atomic_write(path, "[\n" + ",\n".join(rows) + "\n]")
     return len(rows)

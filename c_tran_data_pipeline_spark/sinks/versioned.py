@@ -15,7 +15,7 @@ Invariants the tests pin:
 - a COMMIT never mutates an existing snapshot dir — a reader that
   resolved version N keeps reading exactly N's files while N+1 commits
   (snapshot isolation without locks);
-- the pointer flips via write-temp + ``os.replace`` (atomic on POSIX),
+- the pointer flips via ``session.atomic_write`` (atomic on POSIX),
   so a crash mid-commit leaves a fully-written orphan snapshot and the
   OLD pointer — never a torn table (the orphan is vacuumed later);
 - time travel is just ``read(version=N)`` while N survives ``vacuum``.
@@ -34,6 +34,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from c_tran_data_pipeline_spark.operators.upsert import insert_if_absent, merge_update
+from c_tran_data_pipeline_spark.session import atomic_write
 
 
 class VersionedTableStore:
@@ -96,12 +97,7 @@ class VersionedTableStore:
         # leftover from a crashed attempt is safe to clobber (it was
         # never committed)
         df.write.mode("overwrite").parquet(target)
-        tmp = self._pointer() + ".__tmp__"
-        with open(tmp, "w") as fh:
-            fh.write(str(new_v))
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._pointer())  # atomic on POSIX
+        atomic_write(self._pointer(), str(new_v))
         return new_v
 
     def upsert(self, incoming: DataFrame, keys: list[str]) -> int:

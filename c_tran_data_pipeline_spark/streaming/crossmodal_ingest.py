@@ -25,7 +25,7 @@ Composition, not new machinery:
   directory.
 - "one transaction": both modality tables live under ONE store
   directory (``<gen>/slices`` + ``<gen>/captions``) committed by ONE
-  sidecar ``os.replace`` — there is no observable state where the
+  sidecar ``atomic_write`` — there is no observable state where the
   image index has absorbed a batch but the caption table hasn't.
 - delivery: at-least-once with an idempotent effect. Verdicts write to
   a DETERMINISTIC per-batch directory (``batch=<id>``) with overwrite
@@ -52,17 +52,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from c_tran_data_pipeline_spark.session import atomic_write, read_json
+
 _SIDECAR = "_crossmodal_store.json"
 
 
 def _commit_sidecar(path: str, generations: list[str], meta: dict) -> None:
-    """Atomically publish the generation list: write-aside + os.replace
-    (atomic on POSIX), so readers see either the old list or the new —
-    never a torn sidecar."""
-    tmp = os.path.join(path, f".{_SIDECAR}.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"generations": generations, "meta": meta}, f)
-    os.replace(tmp, os.path.join(path, _SIDECAR))
+    """Atomically publish the generation list, so readers see either
+    the old list or the new — never a torn sidecar."""
+    atomic_write(
+        os.path.join(path, _SIDECAR), json.dumps({"generations": generations, "meta": meta})
+    )
 
 
 def _write_generation(
@@ -98,14 +98,7 @@ def read_crossmodal_store(
     reads ONLY sidecar-listed generations (an unlisted directory is a
     torn append — invisible by design) and raises on a torn/uncommitted
     store (parquet without the sidecar)."""
-    sidecar = os.path.join(path, _SIDECAR)
-    try:
-        with open(sidecar) as f:
-            rec = json.load(f)
-    except (OSError, ValueError) as e:
-        raise ValueError(
-            f"crossmodal store at {path} is uncommitted or torn (no readable sidecar)"
-        ) from e
+    rec = read_json(os.path.join(path, _SIDECAR))
     gens = rec["generations"]
     return (
         spark.read.parquet(*[os.path.join(path, g, "slices") for g in gens]),

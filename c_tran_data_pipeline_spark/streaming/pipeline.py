@@ -24,7 +24,6 @@ downstream of the source boundary.
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +39,7 @@ from c_tran_data_pipeline_spark.functions.transforms import (
 from c_tran_data_pipeline_spark.functions.validation import validate
 from c_tran_data_pipeline_spark.operators.fence import eval_once
 from c_tran_data_pipeline_spark.operators.upsert import absent_rows, first_wins, merge_update
+from c_tran_data_pipeline_spark.session import swap_dir
 from c_tran_data_pipeline_spark.sources.kafka import kafka_stream
 
 
@@ -323,20 +323,13 @@ class _TableStore:
     def _overwrite(self, df: DataFrame) -> None:
         # The new snapshot is derived FROM the current one, so it must be
         # fully written before the dir it was read from is replaced.
-        # Write executor-side to a temp dir and atomically swap — the data
+        # Write executor-side to a temp dir and swap directories — the data
         # never funnels through the driver, so this holds at any table
         # size (vs. a collect()/createDataFrame round-trip, which caps the
         # table at driver memory).
         tmp = f"{self.path}.__tmp__"
-        old = f"{self.path}.__old__"
         df.write.mode("overwrite").parquet(tmp)
-        for p in (old,):
-            if os.path.exists(p):
-                shutil.rmtree(p)
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_dir(tmp, self.path)
 
     def upsert(self, incoming: DataFrame, keys: list[str]) -> None:
         # Written here, not through self.append, so a subclass can tell

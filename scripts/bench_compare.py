@@ -22,6 +22,12 @@ When both records carry bench.py's per-query ``profile`` block, each
 REGRESSED or IMPROVED entry also lists the profile fields whose values
 differ as ``[old, new]``: the layer that moved.
 
+Records carry bench.py's core count (``cores``). The calibration unit
+is CPU-parallel while fixture-scale queries are bound by job latency,
+so a unit measured on another core count does not cancel: when both
+records carry ``cores`` and the counts differ the tool refuses (exit 2);
+when either lacks it the output says ``cores_checked: false``.
+
 Prints one JSON line: classification counts + the offending queries, and
 exits 1 iff any query is REGRESSED. Designed so the judge can run it
 instead of reading three JSONs and prose noise arguments.
@@ -94,6 +100,7 @@ def compare(old: dict, new: dict, threshold: float) -> dict:
             stable.append(entry["query"])
     return {
         "threshold": threshold,
+        "cores_checked": "cores" in old and "cores" in new,
         "old_calibrated": bool(old_cal),
         "new_calibrated": bool(new_cal),
         "calibration_old": old_cal,
@@ -115,7 +122,16 @@ def main() -> None:
     ap.add_argument("new")
     ap.add_argument("--threshold", type=float, default=REGRESSION_THRESHOLD)
     args = ap.parse_args()
-    result = compare(_load(args.old), _load(args.new), args.threshold)
+    old, new = _load(args.old), _load(args.new)
+    cores = old.get("cores"), new.get("cores")
+    if None not in cores and cores[0] != cores[1]:
+        print(
+            f"bench_compare: records ran on different core counts (old {cores[0]}, "
+            f"new {cores[1]}); their calibrated times are not comparable",
+            file=sys.stderr,
+        )
+        sys.exit(2)
+    result = compare(old, new, args.threshold)
     print(json.dumps(result, indent=1))
     sys.exit(1 if result["n_regressed"] else 0)
 

@@ -92,3 +92,30 @@ def test_r01_subtotal_is_the_first_twenty_headline_queries():
     assert len(set(r01)) == 20
     assert "q_corpus_prep_crossmodal" not in r01
     assert "q_ann_ivfpq_append" not in r01
+
+
+def test_different_core_counts_refuse_with_exit_2(tmp_path, monkeypatch, capsys):
+    """A calibrated comparison across core counts compares cores, not
+    code: the CLI refuses with exit 2 and names both counts."""
+    import json
+
+    import bench_compare
+    import pytest
+
+    for name, cores in (("old", 32), ("new", 4)):
+        rec = {"cores": cores, "calibration_sec": 1.0, "queries_min": {"a": 1.0}}
+        (tmp_path / f"{name}.json").write_text(json.dumps(rec))
+    monkeypatch.setattr(sys, "argv", ["x", str(tmp_path / "old.json"), str(tmp_path / "new.json")])
+    with pytest.raises(SystemExit) as exc:
+        bench_compare.main()
+    err = capsys.readouterr().err
+    assert exc.value.code == 2 and "old 32" in err and "new 4" in err
+
+
+def test_core_counts_checked_only_when_both_records_carry_them():
+    """A record without ``cores`` compares as before and says so."""
+    old = {"cores": 4, "calibration_sec": 1.0, "queries_min": {"a": 1.0}}
+    new = {"cores": 4, "calibration_sec": 1.0, "queries_min": {"a": 2.0}}
+    assert compare(old, new, 1.5)["cores_checked"] is True
+    r = compare({k: v for k, v in old.items() if k != "cores"}, new, 1.5)
+    assert r["cores_checked"] is False and r["n_regressed"] == 1

@@ -171,9 +171,7 @@ def test_ivfpq_registered_build_then_search_uses_cache(spark, tmp_path, monkeypa
     finds it fresh (no rebuild) and returns the ivfpq_topk contract."""
     import c_tran_data_pipeline_spark.plans.similarity_queries as sq
 
-    monkeypatch.setattr(
-        sq, "_ivfpq_cache_path", lambda sf_dir: str(tmp_path / "idx")
-    )
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     from c_tran_data_pipeline_spark.plans import all_queries
 
     registry = all_queries()
@@ -182,7 +180,7 @@ def test_ivfpq_registered_build_then_search_uses_cache(spark, tmp_path, monkeypa
     assert len(hist) <= 16
     # index is now fresh → search must NOT rebuild (pin by poisoning the
     # build path: a rebuild would raise)
-    monkeypatch.setattr(sq, "_build_ivfpq", lambda *a: (_ for _ in ()).throw(AssertionError("rebuilt")))
+    monkeypatch.setattr(sq, "_ivfpq_index_for", lambda *a: (_ for _ in ()).throw(AssertionError("rebuilt")))
     out = registry["q_ann_ivfpq_search"].builder(spark, SF_SMOKE)
     rows = out.collect()
     assert out.columns == ["query_id", "neighbor_id", "rank", "dist"]
@@ -199,13 +197,13 @@ def test_pq_search_amortized_books_row_identical(spark, tmp_path, monkeypatch):
     import c_tran_data_pipeline_spark.plans.similarity_queries as sq
     from c_tran_data_pipeline_spark.operators.pq import pq_topk
 
-    monkeypatch.setattr(sq, "_ivfpq_cache_path", lambda sf_dir: str(tmp_path / "idx"))
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     from c_tran_data_pipeline_spark.plans import all_queries
 
     registry = all_queries()
     amortized = registry["q_ann_pq_search"].builder(spark, SF_SMOKE)
-    _, books, _ = sq._ivfpq_index_for(spark, SF_SMOKE)
     emb = load_table(spark, SF_SMOKE, "embeddings")
+    _, books, _ = sq._ivfpq_index_for(emb)
     twin = pq_topk(emb, emb.filter(F.col("vec_id") < 20), books, k=3, rerank_factor=8)
     assert sorted(map(tuple, amortized.collect())) == sorted(map(tuple, twin.collect()))
 
@@ -218,7 +216,7 @@ def test_ivf_search_from_shared_index_row_identical(spark, tmp_path, monkeypatch
     import c_tran_data_pipeline_spark.plans.similarity_queries as sq
     from c_tran_data_pipeline_spark.operators.similarity import ivf_search
 
-    monkeypatch.setattr(sq, "_ivfpq_cache_path", lambda sf_dir: str(tmp_path / "idx"))
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     from c_tran_data_pipeline_spark.plans import all_queries
 
     registry = all_queries()
@@ -227,8 +225,8 @@ def test_ivf_search_from_shared_index_row_identical(spark, tmp_path, monkeypatch
     assert "PartitionFilters" in plan
     assert "centroid_id" in plan.split("PartitionFilters", 1)[1][:300]
 
-    cents, _, encoded = sq._ivfpq_index_for(spark, SF_SMOKE)
     emb = load_table(spark, SF_SMOKE, "embeddings")
+    cents, _, encoded = sq._ivfpq_index_for(emb)
     twin = ivf_search(
         (cents, encoded.select("neighbor_id", "__cv", "centroid_id")),
         emb.filter(F.col("vec_id") < 20),
@@ -250,7 +248,7 @@ def test_sampled_training_recall_does_not_collapse(spark):
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
-    idx = sq._ivfpq_index_for(spark, SF_SMOKE)
+    idx = sq._ivfpq_index_for(emb)
     approx = ivfpq_search(idx, queries, k=3, nprobe=4, rerank_factor=8)
     a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     e = {(r.query_id, r.neighbor_id) for r in _exact_l2_topk(emb, queries).collect()}
@@ -416,3 +414,24 @@ def test_registered_append_query_row_identical_to_frozen_rebuild(spark, tmp_path
     # the same rows (no unbounded growth of the cached index)
     again = sorted(map(tuple, q_ann_ivfpq_append(spark, SF_SMOKE).collect()))
     assert again == got
+
+
+def test_append_query_removes_copies_of_exited_processes(spark, tmp_path, monkeypatch):
+    """q_ann_ivfpq_append leaves the ``<base>.append-<pid>`` copy its
+    frame reads; a later run removes only the copies of exited pids."""
+    import os
+    import subprocess
+    import sys
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
+    from c_tran_data_pipeline_spark.plans import similarity_queries as sq
+
+    exited = subprocess.Popen([sys.executable, "-c", "pass"])
+    exited.wait()
+    base = sq._ensure_ivfpq80(spark, SF_SMOKE)
+    dead, live = (f"{base}.append-{pid}" for pid in (exited.pid, os.getppid()))
+    for d in (dead, live):
+        os.makedirs(d)
+    sq.q_ann_ivfpq_append(spark, SF_SMOKE)
+    assert not os.path.exists(dead) and os.path.isdir(live)
+    assert os.path.isdir(f"{base}.append-{os.getpid()}")

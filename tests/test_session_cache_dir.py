@@ -2,15 +2,18 @@
 FEED QUERY OUTPUTS (classifier weights, BPE merges, IVF-PQ codebooks,
 semantic stores), so the dir must be provably ours — a pre-created dir
 owned by someone else, or a planted symlink/file, must raise instead of
-silently serving substituted results. No Spark session needed."""
+silently serving substituted results. The commit protocol that keeps
+those artifacts (cached_artifact, atomic_write, swap_dir) is pinned
+here too. No Spark session needed."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
 
-from c_tran_data_pipeline_spark.session import index_cache_dir
+from c_tran_data_pipeline_spark.session import atomic_write, cached_artifact, index_cache_dir
 
 
 @pytest.fixture()
@@ -59,3 +62,46 @@ def test_foreign_owner_refused(tmp_path, override_env, monkeypatch):
     monkeypatch.setattr(os, "getuid", lambda: real_getuid() + 1)
     with pytest.raises(RuntimeError, match="owned by uid"):
         index_cache_dir()
+
+
+def test_cached_artifact_builds_only_when_absent_torn_or_stale(tmp_path, override_env):
+    """A fresh artifact is loaded without a build; a touched fixture, a
+    garbage payload or new params each build once; publishing leaves no
+    temp, build or swap-aside entry behind. Params with ``file`` give a
+    file artifact (``atomic_write``), the others a directory with a
+    sidecar (``swap_dir``)."""
+    cache, sf = tmp_path / "idx", tmp_path / "sf0.001"
+    override_env(str(cache))
+    sf.mkdir()
+    (sf / "t.parquet").write_bytes(b"v1")
+    builds = []
+
+    def build(tmp, meta):
+        builds.append(tmp)
+        if meta["params"].get("file"):
+            return json.dumps(meta)
+        os.makedirs(tmp)
+        atomic_write(os.path.join(tmp, "_meta.json"), json.dumps(meta))
+
+    def load(path, meta):
+        with open(os.path.join(path, "_meta.json") if os.path.isdir(path) else path) as f:
+            if json.load(f) != meta:
+                raise ValueError("stale")
+        return path
+
+    def get(**params):
+        return cached_artifact("stub", str(sf), "t", params, build, load)
+
+    path = get(k=1)
+    assert len(builds) == 1 and os.path.basename(path).startswith("stub_sf0.001_")
+    assert get(k=1) == path and len(builds) == 1  # fresh: never builds
+    os.utime(sf / "t.parquet", ns=(1, 1))  # regenerated fixture: new mtime
+    assert get(k=1) == path and get(k=1) == path and len(builds) == 2
+    assert get(k=2) != path and len(builds) == 3  # changed recipe: own path
+    for artifact in (os.path.join(path, "_meta.json"), get(file=1)):
+        with open(artifact, "w") as f:
+            f.write("{garbage")  # torn payload
+    assert get(k=1) == path and get(file=1) and len(builds) == 6
+
+    left = [e for e in os.listdir(cache) if any(t in e for t in (".tmp-", ".build-", ".old-"))]
+    assert left + [e for e in os.listdir(path) if ".tmp-" in e] == []

@@ -208,37 +208,6 @@ def test_neardup_lsh_hot_bucket_cap_drops_degenerate_buckets(spark):
     assert out.count() == 0
 
 
-def test_ivf_index_persist_prune_roundtrip(spark, tmp_path):
-    """write_ivf_index partitions the corpus by cell; a pruned search on
-    the re-read index (a) returns exactly the in-memory results and
-    (b) carries a centroid_id PartitionFilter so the scan reads only the
-    probed cells' directories — the nprobe/nlist reduction enforced at
-    the storage layer."""
-    from c_tran_data_pipeline_spark.operators.similarity import (
-        ivf_index,
-        ivf_search,
-        read_ivf_index,
-        write_ivf_index,
-    )
-    from c_tran_data_pipeline_spark.sources.readers import load_table
-    from tests.conftest import SF_SMOKE
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    mem_idx = ivf_index(emb, nlist=8, iters=1, dim=64)
-    path = str(tmp_path / "ivf")
-    write_ivf_index(mem_idx, path)
-    disk_idx = read_ivf_index(spark, path)
-    assert disk_idx[0] == mem_idx[0]  # centroid table survives round-trip
-
-    expected = sorted(map(tuple, ivf_search(mem_idx, queries, k=3, nprobe=2).collect()))
-    pruned = ivf_search(disk_idx, queries, k=3, nprobe=2, static_cell_pruning=True)
-    assert sorted(map(tuple, pruned.collect())) == expected
-
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "centroid_id" in plan.split("PartitionFilters", 1)[1][:200]
-
-
 def test_label_centroids_match_numpy_and_partitioning_invariant(spark):
     import numpy as np
     from c_tran_data_pipeline_spark.operators.similarity import label_centroids

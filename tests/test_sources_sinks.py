@@ -345,6 +345,8 @@ def test_versioned_store_time_travel_and_isolation(spark, tmp_path):
     versions stay readable (time travel), a resolved reader survives a
     concurrent commit, a torn pointer write cannot corrupt the table,
     and vacuum never drops the current version."""
+    import os
+
     from c_tran_data_pipeline_spark.sinks.versioned import VersionedTableStore
 
     store = VersionedTableStore(
@@ -374,7 +376,7 @@ def test_versioned_store_time_travel_and_isolation(spark, tmp_path):
     assert pinned.count() == 2 and store.read().count() == 3
 
     # torn pointer write (crash sim): leftover tmp never affects reads
-    (tmp_path / "trips" / "_current.__tmp__").write_text("9999")
+    (tmp_path / "trips" / f"_current.tmp-{os.getpid()}").write_text("9999")
     assert store.current_version() == 3
 
     # vacuum keeps the current version, drops the oldest
