@@ -26,14 +26,13 @@ oracle-sf01:
 bench:
 	python bench.py
 
-# Round-over-round bench adjudication (VERDICT r8 #4): classify every
-# common query of the newest committed BENCH_DETAIL_r*.json vs the
-# fresh BENCH_DETAIL.json in calibrated fixed-work units (1.5x
-# threshold). Exits nonzero iff any query is REGRESSED, so an
-# unadjudicated slowdown gates the round mechanically; the per-round
-# classification is committed as BENCH_COMPARE_r{N}.json.
+# Bench adjudication (VERDICT r8 #4): classify every common query of
+# the committed BENCH_DETAIL.json (HEAD) vs the fresh one in calibrated
+# fixed-work units (1.5x threshold). Exits nonzero iff any query is
+# REGRESSED, so an unadjudicated slowdown gates mechanically; exits 2
+# when the two records ran on different core counts.
 bench-compare:
-	python scripts/bench_compare.py `ls BENCH_DETAIL_r*.json | sort | tail -1` BENCH_DETAIL.json
+	git show HEAD:BENCH_DETAIL.json | python scripts/bench_compare.py /dev/stdin BENCH_DETAIL.json
 
 # BENCHMARK.json's end-to-end workloads, one seed each (~1 min per run).
 # Add --trace 1 to a line for the per-layer metrics.

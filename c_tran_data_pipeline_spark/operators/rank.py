@@ -11,7 +11,7 @@ to ranking):
 1. **Deterministic range buckets.** Sample ~n quantile boundaries of
    the LEADING order column once (``approxQuantile`` — one
    column-pruned pass, bounded driver state), then assign each row
-   ``bucket = #boundaries ≤ key`` against the broadcast literal array.
+   ``bucket = #boundaries ≤ key`` against the literal boundaries.
    The bucket is a PURE FUNCTION OF THE ROW — every plan branch
    computes the same assignment by construction. (The tempting
    alternative, ``repartitionByRange`` + ``spark_partition_id()`` with
@@ -22,15 +22,14 @@ to ranking):
    on row→partition placement. It passes exactly when the payload
    happens to equal the sort key and corrupts ranks otherwise; we hit
    this at sf0.1.)
-2. A window partitioned by the bucket — ~n parallel window groups on a
-   hash exchange, never a single-partition sort.
-3. Per-bucket row counts (a tiny keyed aggregate, ≤ n rows) turned
-   into prefix-sum offsets and broadcast back; global rank = offset +
-   in-bucket row number.
-
-The only unpartitioned-looking window left runs over the ≤ n-row
-bucket-count frame — the bounded scalar-agg class (tests/test_scale.py
-recognizes it structurally by the ``__gr_pid`` aggregate key).
+2. Per-bucket bookkeeping (row counts, integral sums or maxima) from
+   ONE collected grouping-sets pass over the bucket table — ≤ n rows
+   per global order — turned into exclusive prefixes on the driver.
+3. The prefixes attached as a dense array literal indexed by bucket id
+   (``element_at(array(...), bucket + 1)``: no join, no broadcast, an
+   O(1) lookup per row), and a window partitioned by the bucket — ~n
+   parallel window groups on a hash exchange, never a single-partition
+   sort. Global rank = offset + in-bucket row number.
 
 Equal leading keys always share a bucket (the boundary comparison
 can't split a value), so in-bucket tie-break columns see every tied
@@ -43,10 +42,13 @@ Determinism contract (same as any row_number): ``order_by`` should be
 a TOTAL order (include a unique tie-break column) or ranks within ties
 are plan-dependent on any engine.
 
-Construction cost: building the plan triggers ONE boundary-sampling
-job over the leading key column (column-pruned). The operator persists
-its input (MEMORY_AND_DISK) so the sampling, bookkeeping, and ranked
-branches evaluate the input lineage once — see ``_materialize``.
+Construction cost: building the plan runs TWO jobs, whatever the
+number of global orders over the frame — one boundary-sampling pass
+over the leading key columns (column-pruned) and the bookkeeping
+collect. The operator persists its input (MEMORY_AND_DISK) so both
+and the windowed result evaluate the input lineage once — see
+``_materialize``. Driver state is ≤ n boundaries and ≤ n + 1
+bookkeeping values per global order.
 
 Reference parity: the C-Tran pipeline has no global-order operator (its
 reports sort ≤ day-grain aggregates); these back the training-data
@@ -57,20 +59,17 @@ corpus genuinely needs a global order.
 
 from __future__ import annotations
 
+import operator
 import re
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
-#: Internal column names — chosen greppable so the structural plan gate
-#: can classify the bounded counts-window by its aggregate key.
-_PID = "__gr_pid"
-_CNT = "__gr_cnt"
-_OFF = "__gr_off"
-_TOT = "__gr_total"
-_RESERVED = (_PID, _CNT, _OFF, _TOT, "__gr_rank")
+#: Every internal column starts with this prefix; input frames may not.
+_PREFIX = "__gr_"
 
 _SORT_SUFFIX = re.compile(
     r"^(?P<child>.+?) (?P<dir>ASC|DESC) NULLS (?P<nulls>FIRST|LAST)$"
@@ -79,10 +78,9 @@ _SORT_SUFFIX = re.compile(
 
 def _order_info(order_by) -> list[tuple[Column, Column, bool, bool]]:
     """Normalize order_by elements to (window sort Column, child
-    Column, is_desc, nulls_first). Accepts "name", ("name",
-    "asc"|"desc"), a plain Column, or a Column built with
-    .asc()/.desc()/F.desc/.asc_nulls_last()/... (parsed from its SQL
-    string form). nulls_first tracks the requested NULL placement
+    Column, is_desc, nulls_first). Accepts "name", a plain Column, or a
+    Column built with .asc()/.desc()/F.desc/.asc_nulls_last()/...
+    (parsed from its SQL string form). nulls_first tracks the requested NULL placement
     (defaults: ASC→FIRST, DESC→LAST, matching Spark and ANSI) so the
     bucket assignment sends null lead keys to the same end of the
     global order the in-bucket window will."""
@@ -90,12 +88,6 @@ def _order_info(order_by) -> list[tuple[Column, Column, bool, bool]]:
     for e in order_by:
         if isinstance(e, str):
             out.append((F.col(e), F.col(e), False, True))
-            continue
-        if isinstance(e, tuple):
-            name, d = e
-            desc = d.lower() == "desc"
-            c = F.col(name)
-            out.append((c.desc() if desc else c.asc(), F.col(name), desc, not desc))
             continue
         s = str(e)  # Column<'quality DESC NULLS LAST'> / Column<'id'>
         inner = s[len("Column<'"):-2] if s.startswith("Column<'") else s
@@ -135,42 +127,29 @@ def _range_key(df: DataFrame, child: Column) -> Column:
     )
 
 
-def range_bounds(
-    df: DataFrame, lead_cols: list[Column | str], partitions: int | None = None
-) -> list[list[float]]:
-    """Quantile boundaries for several leading order columns in ONE
-    sampling pass (``approxQuantile`` takes a column list) — pass each
-    result to the rank operators' ``bounds`` argument when a query runs
-    multiple global orders over the same frame (e.g. three NTILE
-    dimensions), so the per-operator boundary job collapses to one."""
-    n = partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    infos = _order_info(lead_cols)
+def _range_bounds(df: DataFrame, leads: list[Column], n: int) -> list[list[float]]:
+    """Deduped, sorted quantile boundaries for each leading order column
+    in ONE sampling pass (``approxQuantile`` takes a column list); no
+    pass at all for a single bucket."""
     if n <= 1:
-        return [[] for _ in infos]
-    df = _materialize(df)  # same cache entry the operator call will hit
+        return [[] for _ in leads]
     probs = [i / n for i in range(1, n)]
     err = max(1.0 / (4 * n), 1e-4)
-    proj = df.select(
-        *[
-            _range_key(df, child).alias(f"__gr_rk{i}")
-            for i, (_, child, _, _) in enumerate(infos)
-        ]
-    )
-    per_col = proj.approxQuantile([f"__gr_rk{i}" for i in range(len(infos))], probs, err)
+    proj = df.select(*[_range_key(df, c).alias(f"__gr_rk{i}") for i, c in enumerate(leads)])
+    per_col = proj.approxQuantile([f"__gr_rk{i}" for i in range(len(leads))], probs, err)
     return [sorted(set(b)) for b in per_col]
 
 
 def _materialize(df: DataFrame) -> DataFrame:
     """Persist the operator input so the three plan branches every rank
-    operator builds (boundary sampling, per-bucket bookkeeping
-    aggregate, final ranked join) evaluate the input lineage ONCE
-    instead of once per branch — at 100 TB a 3× corpus re-scan (or a
-    3× re-evaluation of an expensive scoring projection, as in
-    q_quality_deciles) is real money. MEMORY_AND_DISK so oversized
-    inputs spill instead of recomputing; Spark's CacheManager matches
-    by canonicalized plan, so a caller that persists the same frame
-    (or calls ``range_bounds`` then an operator on it) shares ONE cache
-    entry. Chained calls (q_rfm_segments' three NTILEs) each persist
+    operator builds (boundary sampling, bookkeeping collect, final
+    windowed frame) evaluate the input lineage ONCE instead of once per
+    branch — at 100 TB a 3× corpus re-scan (or a 3× re-evaluation of an
+    expensive scoring projection, as in q_quality_deciles) is real
+    money. MEMORY_AND_DISK so oversized inputs spill instead of
+    recomputing; Spark's CacheManager matches by canonicalized plan, so
+    a caller that persists the same frame shares ONE cache entry.
+    Chained calls (q_skyline_orders' two cummax sweeps) each persist
     their own level, cutting the otherwise-exponential lineage
     re-execution to one pass per level. Entries are narrow projections
     by call-site convention; cleanup is left to Spark's ContextCleaner
@@ -180,11 +159,10 @@ def _materialize(df: DataFrame) -> DataFrame:
     Skip the persist when the plan is ALREADY cached —
     ``df.storageLevel`` resolves through the CacheManager by
     canonicalized plan, so it also catches a caller that persisted an
-    equal plan (``range_bounds`` before the operator, or chained
-    ``global_ntile`` levels). Without the check each such call logged a
-    harmless 'CacheManager: Asked to cache already cached data' warning
-    — ~12 per bench run — which would mask a REAL double-persist the
-    day one appears (session.persist_once is the shared guard)."""
+    equal plan. Without the check each such call logged a harmless
+    'CacheManager: Asked to cache already cached data' warning — ~12
+    per bench run — which would mask a REAL double-persist the day one
+    appears (session.persist_once is the shared guard)."""
     from c_tran_data_pipeline_spark.session import persist_once
 
     return persist_once(df, StorageLevel.MEMORY_AND_DISK)
@@ -223,62 +201,75 @@ def _bucket_column(
     return F.when(rk.isNull(), null_bucket).otherwise(bucket)
 
 
-def _with_buckets(
-    df: DataFrame, order_by, partitions: int | None, bounds: list[float] | None = None
-) -> tuple[DataFrame, list[Column]]:
-    """df + ``__gr_pid`` (deterministic range-bucket id, monotone along
-    the global order) and the window sort columns."""
-    for c in _RESERVED:
+def _bookkeep(
+    df: DataFrame, orders: list, partitions: int | None, aggs: list[Column], outputs: list[str]
+) -> tuple[DataFrame, list[tuple[str, list[Column], list]]]:
+    """Steps 1–4 of the recipe for several global orders over ONE frame:
+    persist the input, sample every leading key in one pass, add one
+    bucket column per order and collect ONE grouping-sets pass of
+    ``aggs`` per (order, bucket). Returns the bucketed frame and, per
+    order, (bucket column, window sort columns, per agg the value of
+    each bucket id 0..#boundaries — None for an empty bucket)."""
+    for c in df.columns:
+        if c.startswith(_PREFIX):
+            raise ValueError(f"global rank/cumsum reserves column name prefix {_PREFIX}, got {c!r}")
+    for c in outputs:
         if c in df.columns:
-            raise ValueError(f"global rank/cumsum reserves column name {c!r}")
-    info = _order_info(order_by)
-    sort_cols = [w for w, _, _, _ in info]
-    _, lead, _, _ = info[0]
+            raise ValueError(f"global rank output column {c!r} already exists")
     df = _materialize(df)
+    infos = [_order_info(o) for o in orders]
     n = partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if n <= 1:  # one bucket: no boundaries, no sampling pass
-        return df.withColumn(_PID, F.lit(0)), sort_cols
-    if bounds is None:
-        bounds = range_bounds(df, [lead], n)[0]
-    bounds = sorted(set(bounds))
-    return df.withColumn(_PID, _bucket_column(df, info, bounds)), sort_cols
-
-
-def _offsets(counts: DataFrame, sum_cols: list[str], pid: str = _PID) -> DataFrame:
-    """Prefix-sum offsets + grand totals over the ≤ n-row bucket-count
-    frame. Partitioned by a DERIVED constant (pid % 1 — non-foldable,
-    so Catalyst keeps it): routes the bookkeeping rows through a normal
-    hash exchange instead of the warning-logging global-sort path."""
-    one = F.pmod(F.col(pid), F.lit(1))
-    w_prefix = Window.partitionBy(one).orderBy(pid).rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.partitionBy(one)
-    return counts.select(
-        pid,
-        *[
-            F.coalesce(F.sum(c).over(w_prefix), F.lit(0)).alias(f"__gr_off_{c}")
-            for c in sum_cols
-        ],
-        *[F.sum(c).over(w_all).alias(f"__gr_tot_{c}") for c in sum_cols],
+    bounds_list = _range_bounds(df, [info[0][1] for info in infos], n)
+    pids = [f"__gr_pid_{i}" for i in range(len(infos))]
+    parted = df.withColumns(
+        {p: _bucket_column(df, info, b) for p, info, b in zip(pids, infos, bounds_list)}
     )
+    # Bucket ids are never NULL, so the one non-NULL id column of a
+    # grouping-sets row names the order it belongs to.
+    stats = [[[None] * (len(b) + 1) for _ in aggs] for b in bounds_list]
+    for r in parted.groupingSets([[p] for p in pids], *pids).agg(*aggs).collect():
+        i = next(j for j in range(len(pids)) if r[j] is not None)
+        for j, v in enumerate(r[len(pids):]):
+            stats[i][j][r[i]] = v
+    return parted, [
+        (p, [w for w, _, _, _ in info], s) for p, info, s in zip(pids, infos, stats)
+    ]
 
 
-def _ranked(
-    df: DataFrame, order_by, partitions: int | None, bounds: list[float] | None = None
-) -> DataFrame:
-    """df + ``__gr_rank`` (1-based bigint global row number) +
-    ``__gr_total`` (bigint total row count), scale-safe plan."""
-    parted, sort_cols = _with_buckets(df, order_by, partitions, bounds)
-    counts = parted.groupBy(_PID).agg(F.count(F.lit(1)).alias(_CNT))
-    offs = _offsets(counts, [_CNT]).select(
-        _PID,
-        F.col(f"__gr_off_{_CNT}").cast("bigint").alias(_OFF),
-        F.col(f"__gr_tot_{_CNT}").cast("bigint").alias(_TOT),
-    )
-    w_local = Window.partitionBy(_PID).orderBy(*sort_cols)
-    return (
-        parted.join(F.broadcast(offs), _PID)
-        .withColumn("__gr_rank", (F.col(_OFF) + F.row_number().over(w_local)).cast("bigint"))
-    )
+def _prefix(values: list, combine: Callable, start=None) -> tuple[list, object]:
+    """Exclusive running ``combine`` over per-bucket values, skipping
+    NULLs as Spark's aggregates do: (the value before each bucket, the
+    value over all buckets), ``start`` while nothing precedes."""
+    out, acc = [], start
+    for v in values:
+        out.append(acc)
+        if v is not None:
+            acc = v if acc is None else combine(acc, v)
+    return out, acc
+
+
+def _spark_max(a, b):
+    """MAX of two non-NULL values in Spark's order: NaN is the greatest."""
+    return max(a, b, key=lambda v: (v != v, v))
+
+
+def _at(pid: str, values: list, dtype: T.DataType) -> Column:
+    """``values[bucket id]`` through a dense array literal — an O(1)
+    lookup per row, no join."""
+    arr = F.array(*[F.lit(v) for v in values]).cast(T.ArrayType(dtype))
+    return F.element_at(arr, F.col(pid) + 1)
+
+
+def _ranked(df: DataFrame, orders: list, partitions: int | None, outputs: list[str]):
+    """df + ``__gr_rank_<i>`` (1-based bigint global row number under
+    ``orders[i]``) for each order, and the total row count."""
+    parted, dims = _bookkeep(df, orders, partitions, [F.count(F.lit(1))], outputs)
+    for i, (pid, sort_cols, [counts]) in enumerate(dims):
+        # every order counts the same rows, so any order's total is N
+        offs, total = _prefix(counts, operator.add, 0)
+        row = F.row_number().over(Window.partitionBy(pid).orderBy(*sort_cols))
+        parted = parted.withColumn(f"__gr_rank_{i}", _at(pid, offs, T.LongType()) + row)
+    return parted, total
 
 
 def global_rank(
@@ -287,16 +278,16 @@ def global_rank(
     rank_col: str = "rank",
     partitions: int | None = None,
     total_col: str | None = None,
-    bounds: list[float] | None = None,
 ) -> DataFrame:
     """df + ``rank_col`` = exact global ``ROW_NUMBER() OVER (ORDER BY
     order_by)`` (1-based, bigint), computed with deterministic range
     buckets + per-bucket offsets instead of a single-partition window.
     Pass ``total_col`` to also get the total row count (the ``COUNT(*)
-    OVER ()`` companion) for free from the same bookkeeping aggregate."""
-    out = _ranked(df, order_by, partitions, bounds)
-    extra = [F.col(_TOT).alias(total_col)] if total_col else []
-    return out.select(*df.columns, F.col("__gr_rank").alias(rank_col), *extra)
+    OVER ()`` companion) for free from the same bookkeeping pass."""
+    extra = [total_col] if total_col else []
+    out, total = _ranked(df, [order_by], partitions, [rank_col, *extra])
+    tot = [F.lit(total).cast("bigint").alias(c) for c in extra]
+    return out.select(*df.columns, F.col("__gr_rank_0").alias(rank_col), *tot)
 
 
 def global_cumsum(
@@ -304,12 +295,13 @@ def global_cumsum(
     order_by: list[Column | str],
     cols: list[str],
     partitions: int | None = None,
-    bounds: list[float] | None = None,
 ) -> DataFrame:
     """df + ``<c>_cum`` (inclusive running total of ``c`` in global
     ``order_by`` order) + ``<c>_tot`` (grand total) for each ``c`` in
     ``cols`` — the scale-safe form of ``SUM(c) OVER (ORDER BY ...)`` +
-    ``SUM(c) OVER ()``, same recipe as :func:`global_rank`.
+    ``SUM(c) OVER ()``, same recipe as :func:`global_rank`. ``cols``
+    must be integral: the bucket prefixes are summed on the driver,
+    exactly only for integers.
 
     Tie semantics: the in-bucket frame is ROWS-based, so ``order_by``
     must be a total order (unique keys). Call sites that need
@@ -317,23 +309,23 @@ def global_cumsum(
     first — which is also what keeps the shuffled rows small.
     """
     for c in cols:
-        for out_name in (f"{c}_cum", f"{c}_tot"):
-            if out_name in df.columns:
-                raise ValueError(f"global cumsum output column {out_name!r} already exists")
-    parted, sort_cols = _with_buckets(df, order_by, partitions, bounds)
-    psums = parted.groupBy(_PID).agg(*[F.sum(c).alias(f"__gr_s_{c}") for c in cols])
-    offs = _offsets(psums, [f"__gr_s_{c}" for c in cols])
-    w_local = (
-        Window.partitionBy(_PID).orderBy(*sort_cols).rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = parted.join(F.broadcast(offs), _PID)
-    keep = [*df.columns]
-    for c in cols:
-        out = out.withColumn(
-            f"{c}_cum", F.col(f"__gr_off___gr_s_{c}") + F.sum(c).over(w_local)
-        ).withColumnRenamed(f"__gr_tot___gr_s_{c}", f"{c}_tot")
-        keep += [f"{c}_cum", f"{c}_tot"]
-    return out.select(*keep)
+        if not isinstance(df.schema[c].dataType, T.IntegralType):
+            raise ValueError(
+                f"global cumsum needs integral columns, got {c!r}: {df.schema[c].dataType}"
+            )
+    outputs = [f"{c}_{s}" for c in cols for s in ("cum", "tot")]
+    sums = [F.sum(c) for c in cols]
+    parted, [(pid, sort_cols, stats)] = _bookkeep(df, [order_by], partitions, sums, outputs)
+    w = Window.partitionBy(pid).orderBy(*sort_cols).rowsBetween(Window.unboundedPreceding, 0)
+    out = []
+    for c, bucket_sums in zip(cols, stats):
+        offs, tot = _prefix(bucket_sums, operator.add)
+        off, run = _at(pid, offs, T.LongType()), F.sum(c).over(w)
+        out += [
+            F.coalesce(off + run, run, off).alias(f"{c}_cum"),
+            F.lit(tot).cast("bigint").alias(f"{c}_tot"),
+        ]
+    return parted.select(*df.columns, *out)
 
 
 def global_cummax(
@@ -343,7 +335,6 @@ def global_cummax(
     out_col: str,
     inclusive: bool = True,
     partitions: int | None = None,
-    bounds: list[float] | None = None,
 ) -> DataFrame:
     """df + ``out_col`` = running ``MAX(col)`` in global ``order_by``
     order — ``inclusive=False`` gives the strictly-preceding frame
@@ -355,23 +346,29 @@ def global_cummax(
     ``order_by`` must be a total order (ROWS frame, see
     :func:`global_cumsum`).
     """
-    if out_col in df.columns:
-        raise ValueError(f"global cummax output column {out_col!r} already exists")
-    parted, sort_cols = _with_buckets(df, order_by, partitions, bounds)
-    pmax = parted.groupBy(_PID).agg(F.max(col).alias("__gr_m"))
-    one = F.pmod(F.col(_PID), F.lit(1))  # non-foldable constant, see _offsets
-    w_prefix = Window.partitionBy(one).orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-    offs = pmax.select(_PID, F.max("__gr_m").over(w_prefix).alias("__gr_moff"))
+    parted, [(pid, sort_cols, [maxima])] = _bookkeep(
+        df, [order_by], partitions, [F.max(col)], [out_col]
+    )
+    offs, _ = _prefix(maxima, _spark_max)
     end = 0 if inclusive else -1
-    w_local = (
-        Window.partitionBy(_PID).orderBy(*sort_cols).rowsBetween(Window.unboundedPreceding, end)
-    )
-    running = F.greatest(F.col("__gr_moff"), F.max(col).over(w_local))
-    return (
-        parted.join(F.broadcast(offs), _PID)
-        .withColumn(out_col, running)
-        .select(*df.columns, out_col)
-    )
+    w = Window.partitionBy(pid).orderBy(*sort_cols).rowsBetween(Window.unboundedPreceding, end)
+    running = F.greatest(_at(pid, offs, df.schema[col].dataType), F.max(col).over(w))
+    return parted.select(*df.columns, running.alias(out_col))
+
+
+def _ntile(n: int, rank_col: str, total: int) -> Column:
+    """ANSI NTILE(n) from a 1-based global rank and the total row count
+    N. Pure bigint arithmetic (DIV, never float division): exact at any
+    N. With q = N div n and r = N mod n, rows 1..r(q+1) fill the first r
+    (fat, q+1-row) buckets; the rest land in q-row buckets. When q == 0
+    (N < n) every row takes the first branch, so the second branch's
+    divisor only has to be non-zero."""
+    q, r = divmod(total, n)
+    fat = r * (q + 1)
+    return F.expr(
+        f"CASE WHEN {rank_col} <= {fat} THEN 1 + ({rank_col} - 1) DIV {q + 1}"
+        f" ELSE {r + 1} + ({rank_col} - {fat} - 1) DIV {max(q, 1)} END"
+    ).cast("int")
 
 
 def global_ntile(
@@ -380,34 +377,10 @@ def global_ntile(
     order_by: list[Column | str],
     bucket_col: str = "bucket",
     partitions: int | None = None,
-    bounds: list[float] | None = None,
 ) -> DataFrame:
     """df + ``bucket_col`` = exact ANSI ``NTILE(n) OVER (ORDER BY
-    order_by)`` (int, 1..n): with N rows, q = N div n and r = N mod n,
-    the first r buckets hold q+1 rows and the rest q — derived
-    arithmetically from the scale-safe global rank, so no engine's
-    NTILE implementation (or partitioning) is in the loop."""
-    if n <= 0:
-        raise ValueError(f"ntile bucket count must be positive, got {n}")
-    out = _ranked(df, order_by, partitions, bounds)
-    bucket = _ntile_expr(n, "__gr_rank", _TOT)
-    return out.select(*df.columns, bucket.alias(bucket_col))
-
-
-def _ntile_expr(n: int, rank_col: str, tot_col: str) -> Column:
-    """ANSI NTILE(n) from a 1-based global rank and the total row count.
-    Pure bigint arithmetic (DIV, never float division): exact at any N.
-    With q = N div n and r = N mod n, rows 1..r(q+1) fill the first r
-    (fat, q+1-row) buckets; the rest land in q-row buckets. When
-    q == 0 (N < n) every row satisfies the first branch, so the
-    DIV-by-q arm is never evaluated (CASE WHEN is lazy per row)."""
-    return F.expr(
-        f"CASE WHEN {rank_col} <= ({tot_col} % {n}) * ({tot_col} DIV {n} + 1)"
-        f" THEN 1 + ({rank_col} - 1) DIV ({tot_col} DIV {n} + 1)"
-        f" ELSE ({tot_col} % {n}) + 1"
-        f"      + ({rank_col} - ({tot_col} % {n}) * ({tot_col} DIV {n} + 1) - 1)"
-        f"        DIV ({tot_col} DIV {n}) END"
-    ).cast("int")
+    order_by)``: :func:`global_ntile_multi` with one dimension."""
+    return global_ntile_multi(df, n, [order_by], [bucket_col], partitions)
 
 
 def global_ntile_multi(
@@ -416,87 +389,25 @@ def global_ntile_multi(
     orders: list[list[Column | str]],
     bucket_cols: list[str],
     partitions: int | None = None,
-    bounds_list: list[list[float]] | None = None,
 ) -> DataFrame:
-    """Several exact ANSI ``NTILE(n)`` dimensions over ONE frame in one
-    fused pass — ``global_ntile`` chained k times layers each level's
-    window over the previous level's join output, so the plan pays the
-    persist + bookkeeping aggregate + broadcast machinery k times over
-    an ever-wider frame (q_rfm_segments measured 29 Exchanges and 8
-    parquet scans for k = 3). Fused, every dimension's bucket id is a
-    pure function of the SAME persisted input row, so the plan is: one
-    boundary-sampling pass for all dimensions, ONE grouping-sets
-    bookkeeping pass counting every dimension's buckets together
-    (collected — ≤ Σ per-dimension bucket counts rows, the same bounded
-    driver-state class as the approxQuantile boundaries this operator
-    family already collects), per-bucket offsets attached as literal
-    MAPS (zero joins, zero broadcast builds — a first cut attached them
-    via k broadcast offset joins and measured 19 Spark jobs vs the
-    chained form's 8: each broadcast build is its own job, and job
-    latency is serial driver wall; the literal form runs ~4 jobs), and
-    k in-bucket rank windows over the same narrow frame. Per dimension
-    the rank arithmetic is byte-identical to :func:`global_ntile`
-    (tests/test_rank.py pins row equality), so swapping a chain for
-    this fusion cannot move a result."""
+    """df + one exact ANSI ``NTILE(n) OVER (ORDER BY orders[i])`` (int,
+    1..n) per dimension, all over ONE frame: with N rows, q = N div n
+    and r = N mod n, the first r buckets hold q+1 rows and the rest q —
+    derived arithmetically from the scale-safe global rank, so no
+    engine's NTILE implementation (or partitioning) is in the loop.
+    Every dimension's bucket id is a pure function of the SAME persisted
+    input row, so k dimensions share one sampling pass and one
+    bookkeeping collect and add k in-bucket rank windows over the same
+    narrow frame. Chaining one call per dimension instead re-persists an
+    ever-wider frame per level (q_rfm_segments measured 29 Exchanges and
+    8 parquet scans for k = 3), and attaching the offsets through
+    broadcast joins instead of literals measured 19 Spark jobs against
+    ~4: each broadcast build is its own job, and job latency is serial
+    driver wall."""
     if n <= 0:
         raise ValueError(f"ntile bucket count must be positive, got {n}")
     if len(orders) != len(bucket_cols):
         raise ValueError("global_ntile_multi: orders and bucket_cols must align")
-    for c in df.columns:
-        if c.startswith("__gr_"):  # suffixed per-dimension internals
-            raise ValueError(f"global rank/cumsum reserves the __gr_ prefix, got {c!r}")
-    for bc in bucket_cols:
-        if bc in df.columns:
-            raise ValueError(f"global ntile output column {bc!r} already exists")
-    df = _materialize(df)
-    infos = [_order_info(o) for o in orders]
-    nparts = partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if bounds_list is None:
-        bounds_list = (
-            [[] for _ in infos]
-            if nparts <= 1
-            else range_bounds(df, [info[0][1] for info in infos], nparts)
-        )
-    bounds_list = [sorted(set(b)) for b in bounds_list]
-    k = len(infos)
-    pid_names = [f"{_PID}_{i}" for i in range(k)]
-    parted = df
-    for name, info, bounds in zip(pid_names, infos, bounds_list):
-        parted = parted.withColumn(name, _bucket_column(df, info, bounds))
-    # ONE grouping-sets pass counts every dimension's buckets together
-    # (Expand k-ways, partial-aggregated map-side, ≤ k·|buckets| rows
-    # out); grouping_id says which dimension each row belongs to —
-    # bucket ids are never NULL by construction, so NULL-as-marker is
-    # unambiguous.
-    gsets = (
-        parted.groupingSets([[name] for name in pid_names], *pid_names)
-        .agg(F.count(F.lit(1)).alias(_CNT), F.grouping_id().alias("__gr_gid"))
-        .collect()
-    )
-    per_dim: list[dict[int, int]] = [{} for _ in range(k)]
-    for r in gsets:
-        gid = r["__gr_gid"]
-        present = [j for j in range(k) if not (gid >> (k - 1 - j)) & 1]
-        if len(present) != 1:  # defensive: one grouping set per row
-            raise AssertionError(f"unexpected grouping_id {gid} for k={k}")
-        i = present[0]
-        per_dim[i][int(r[pid_names[i]])] = int(r[_CNT])
-    out = parted
-    for i, (name, info, bc) in enumerate(zip(pid_names, infos, bucket_cols)):
-        counts = per_dim[i]
-        tot = sum(counts.values())
-        acc, offsets = 0, {}
-        for pid in sorted(counts):  # offset = rows in lower buckets
-            offsets[pid] = acc
-            acc += counts[pid]
-        if offsets:
-            entries = ",".join(f"{p},{o}L" for p, o in sorted(offsets.items()))
-            off_expr = F.element_at(F.expr(f"map({entries})"), F.col(name).cast("int"))
-        else:  # empty input
-            off_expr = F.lit(0).cast("bigint")
-        w_local = Window.partitionBy(name).orderBy(*[w for w, _, _, _ in info])
-        rank = (off_expr + F.row_number().over(w_local)).cast("bigint")
-        out = out.withColumn(f"__gr_rank_{i}", rank).withColumn(
-            bc, _ntile_expr(n, f"__gr_rank_{i}", f"CAST({tot} AS BIGINT)")
-        )
-    return out.select(*df.columns, *bucket_cols)
+    out, total = _ranked(df, orders, partitions, bucket_cols)
+    tiles = [_ntile(n, f"__gr_rank_{i}", total).alias(bc) for i, bc in enumerate(bucket_cols)]
+    return out.select(*df.columns, *tiles)

@@ -535,8 +535,8 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "unbiased sample of the whole corpus (contiguous slicing would "
     "put correlated ingest neighbors in one shard). The global "
     "ROW_NUMBER is operators/rank.py's global_rank: "
-    "repartitionByRange(shuffle_key) + in-partition row_number + "
-    "per-partition-count prefix offsets broadcast back — no "
+    "range buckets on shuffle_key + in-bucket row_number + "
+    "per-bucket-count prefix offsets as an array literal — no "
     "single-partition exchange anywhere, and the md5 key guarantees "
     "balanced ranges at any scale. "
     "For writer-side sharding the position is unnecessary: "

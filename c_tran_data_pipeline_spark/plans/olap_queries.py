@@ -2278,11 +2278,12 @@ def q_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     "recipe) so sums are exact; recency is integer days; NTILE is ANSI "
     "(first n mod k buckets one larger) with a custkey tie-break, so "
     "both engines bucket identically. Plan: one partial-first agg to "
-    "the |customers| grain, then three global_ntile passes "
-    "(operators/rank.py: range partition + in-partition rank + prefix "
-    "offsets) over THAT table — exact quintiles with no "
-    "single-partition sort at any scale, and never a global sort of "
-    "the fact table.",
+    "the |customers| grain, then ONE global_ntile_multi call over THAT "
+    "table (operators/rank.py: one boundary-sampling pass and one "
+    "collected bookkeeping pass for all three dimensions, per-bucket "
+    "offsets as array literals, three in-bucket rank windows) — exact "
+    "quintiles with no single-partition sort at any scale, and never a "
+    "global sort of the fact table.",
     tags=("olap", "window", "segment"),
 )
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2304,15 +2305,15 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "monetary_cents",
     )
     # Three exact ANSI quintile scores in ONE fused pass
-    # (operators/rank.py global_ntile_multi, round 10): one sampling
-    # pass for all three boundaries, one bookkeeping aggregate at the
-    # joint (r, f, m)-bucket grain, per-bucket offsets attached as
-    # literal maps and three in-bucket rank windows over the SAME persisted
-    # customer-grain frame — the chained form re-persisted and re-joined
-    # an ever-wider frame per dimension (plan dumps of both forms:
-    # git show 48ae092:plans/r10/q_rfm_segments_{before,after}.txt).
-    # Bucket values are bit-identical per dimension (same rank
-    # arithmetic, pinned in tests/test_rank.py).
+    # (operators/rank.py global_ntile_multi): one sampling pass for all
+    # three boundaries, one collected grouping-sets bookkeeping pass
+    # counting every dimension's buckets, per-bucket offsets attached as
+    # dense array literals and three in-bucket rank windows over the
+    # SAME persisted customer-grain frame — the chained form
+    # re-persisted and re-joined an ever-wider frame per dimension (plan
+    # dumps of both forms: git show
+    # 48ae092:plans/r10/q_rfm_segments_{before,after}.txt). Each
+    # dimension equals Spark's own NTILE window (tests/test_rank.py).
     scored = global_ntile_multi(
         agg,
         5,

@@ -442,8 +442,10 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the corpus survives a decile cut' planning query behind every "
     "quality-threshold decision. The NTILE is exact at scale: "
     "operators/rank.py's global_ntile derives ANSI buckets "
-    "arithmetically from a range-partitioned global row number — no "
-    "single-partition sort. q_approx_percentiles remains the "
+    "arithmetically from a range-partitioned global row number whose "
+    "per-bucket offsets come from one collected counts pass as an "
+    "array literal — no single-partition sort, no offset join. "
+    "q_approx_percentiles remains the "
     "one-pass-cheaper approximate twin for threshold planning.",
     tags=("text", "quality", "window"),
 )

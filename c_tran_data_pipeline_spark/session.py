@@ -9,6 +9,7 @@ match columnar stores (and the DuckDB oracle) exactly.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
@@ -193,9 +194,12 @@ def swap_dir(tmp: str, path: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
+def _md5(text: str) -> str:
+    return hashlib.md5(text.encode()).hexdigest()[:10]
+
+
 def _artifact(kind: str, sf_dir: str, table: str, params: dict) -> tuple[str, dict]:
     root = os.path.abspath(sf_dir)
-    key = json.dumps({"sf_dir": root, "params": params}, sort_keys=True).encode()
     base = os.path.basename(sf_dir.rstrip("/")) or "sf"
     src = os.path.join(root, f"{table}.parquet")
     try:
@@ -203,7 +207,8 @@ def _artifact(kind: str, sf_dir: str, table: str, params: dict) -> tuple[str, di
         fixture = {"path": src, "mtime": st.st_mtime, "size": st.st_size}
     except OSError:
         fixture = {"path": src}
-    path = os.path.join(index_cache_dir(), f"{kind}_{base}_{hashlib.md5(key).hexdigest()[:10]}")
+    name = f"{kind}_{base}_{_md5(root)}_{_md5(json.dumps(params, sort_keys=True))}"
+    path = os.path.join(index_cache_dir(), name)
     return path, {"params": params, "fixture": fixture}
 
 
@@ -214,6 +219,18 @@ def _publish(path: str, meta: dict, build: Callable) -> None:
         swap_dir(tmp, path)
     else:
         atomic_write(path, text)
+    # Reap what this recipe supersedes: the same kind and fixture dir
+    # under another params hash, with every copy named after it.
+    cache, name = os.path.split(path)
+    family = name.rsplit("_", 1)[0] + "_"
+    for entry in os.listdir(cache):
+        if entry.startswith(family) and not entry.startswith(name):
+            old = os.path.join(cache, entry)
+            if os.path.isdir(old):
+                shutil.rmtree(old, ignore_errors=True)
+            else:
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(old)
 
 
 def cached_artifact(
@@ -225,10 +242,14 @@ def cached_artifact(
     ``meta``), build and publish it first, and once more if that load
     races a concurrent swap.
 
-    The path hashes the ABSOLUTE fixture dir and ``params``, so two
-    recipes or same-named fixtures never share an artifact. ``meta`` is
-    ``{"params", "fixture"}``, the fixture being the table's path, mtime
-    and size (the path alone if stat fails, which never matches).
+    The path is ``<kind>_<fixture dir name>_<hash of the ABSOLUTE
+    fixture dir>_<hash of params>``, so two recipes or same-named
+    fixtures never share an artifact. Publishing removes the artifacts
+    of the same kind and fixture dir built from other params, and their
+    ``.append-<pid>`` copies: one recipe per kind is live at a time.
+    ``meta`` is ``{"params", "fixture"}``, the fixture being the
+    table's path, mtime and size (the path alone if stat fails, which
+    never matches).
     ``build(tmp, meta)`` fills a directory ``tmp`` (``<path>.build-<pid>``,
     published by ``swap_dir``) and returns None, or returns a file
     artifact's text (published by ``atomic_write``)."""

@@ -158,11 +158,11 @@ def test_global_cummax_exclusive_matches_window(keyed, spark):
     assert sum(v is None for v in got.values()) == 1  # exactly the first row
 
 
-def test_global_ntile_multi_equals_chained(spark):
-    """The fused multi-dimension NTILE (round 10, q_rfm_segments' plan
-    fix) is row-identical to chaining global_ntile once per dimension —
-    ties, NULL lead keys, descending orders and the ANSI remainder rule
-    all included."""
+def test_global_ntile_multi_matches_window_ntile_per_dimension(spark):
+    """Each dimension of the fused multi-dimension NTILE equals Spark's
+    own single-partition NTILE window on the same frame — ties, NULL
+    lead keys, descending orders and the ANSI remainder rule (5,007
+    rows into 5 buckets) all included."""
     from c_tran_data_pipeline_spark.operators.rank import global_ntile_multi
 
     df = spark.range(0, 5_007).select(
@@ -172,15 +172,64 @@ def test_global_ntile_multi_equals_chained(spark):
         (-(F.col("id") % 13)).alias("c"),
     )
     orders = [["a", "id"], [F.col("b").desc(), F.col("id").asc()], ["c", "id"]]
-    chained = df
-    for order, bc in zip(orders, ["na", "nb", "nc"]):
-        chained = global_ntile(chained, 5, order, bucket_col=bc)
-    exp = {r["id"]: (r["na"], r["nb"], r["nc"]) for r in chained.collect()}
+    exp = {
+        r["id"]: (r["na"], r["nb"], r["nc"])
+        for r in df.select(
+            "id",
+            *[
+                F.ntile(5).over(Window.orderBy(*o)).alias(bc)
+                for o, bc in zip(orders, ["na", "nb", "nc"])
+            ],
+        ).collect()
+    }
     got = {
         r["id"]: (r["na"], r["nb"], r["nc"])
-        for r in global_ntile_multi(df, 5, orders, ["na", "nb", "nc"]).collect()
+        for r in global_ntile_multi(df, 5, orders, ["na", "nb", "nc"], partitions=7).collect()
     }
     assert got == exp
+
+
+def test_driver_prefixes_skip_nulls_and_rank_nan_like_window(spark):
+    """The bucket prefixes composed on the driver follow Spark's window
+    aggregates: an integer running sum over NULL runs (a bucket that is
+    all NULL so far still carries the earlier total; an all-NULL prefix
+    stays NULL) and a DOUBLE running max over NULL and NaN (NaN above
+    every number), inclusive and strictly-preceding."""
+    from c_tran_data_pipeline_spark.operators.rank import global_cummax, global_cumsum
+
+    df = spark.range(0, 300).select(
+        "id",
+        F.when((F.col("id") < 20) | (F.col("id") % 9 < 4), None).otherwise(F.col("id")).alias("v"),
+        F.when(F.col("id") % 7 == 0, None)
+        .when(F.col("id") == 150, float("nan"))
+        .otherwise((F.col("id") * 37 % 101).cast("double"))
+        .alias("d"),
+    )
+    w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, 0)
+    wx = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, -1)
+    exp = df.select(
+        "id",
+        F.sum("v").over(w).alias("v_cum"),
+        F.sum("v").over(Window.partitionBy()).alias("v_tot"),
+        F.max("d").over(w).alias("m"),
+        F.max("d").over(wx).alias("pm"),
+    )
+    got = global_cumsum(df, ["id"], ["v"], partitions=7)
+    got = global_cummax(got, ["id"], "d", "m", partitions=7)
+    got = global_cummax(got, ["id"], "d", "pm", inclusive=False, partitions=7)
+
+    def rows(frame):
+        return {repr(r) for r in frame.select(*exp.columns).collect()}  # repr: nan == nan
+
+    assert rows(got) == rows(exp)
+
+
+def test_global_cumsum_rejects_floating_columns(spark):
+    from c_tran_data_pipeline_spark.operators.rank import global_cumsum
+
+    df = spark.range(0, 10).select("id", F.col("id").cast("double").alias("x"))
+    with pytest.raises(ValueError, match="integral"):
+        global_cumsum(df, ["id"], ["x"])
 
 
 def test_global_ntile_multi_guards(keyed):

@@ -609,10 +609,6 @@ def _broadcast_bounded_class(sub: str) -> str | None:
     None if it could grow with the corpus."""
     if "HashAggregate(keys=[]" in sub:
         return "scalar-agg"  # 1-row global aggregate
-    if _re.search(r"Aggregate\(keys=\[__gr_pid\w*#\d+", sub):
-        # operators/rank.py prefix-offset bookkeeping: an aggregate
-        # keyed by the range-bucket id — ≤ |buckets| rows by construction
-        return "rank-bookkeeping"
     if "LeftSemi" in sub:
         return "semi-joined"  # restricted to a (bounded) probe set
     if "GlobalLimit" in sub or "TakeOrderedAndProject" in sub:

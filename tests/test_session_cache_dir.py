@@ -89,19 +89,36 @@ def test_cached_artifact_builds_only_when_absent_torn_or_stale(tmp_path, overrid
                 raise ValueError("stale")
         return path
 
-    def get(**params):
-        return cached_artifact("stub", str(sf), "t", params, build, load)
+    def get(kind="stub", **params):
+        return cached_artifact(kind, str(sf), "t", params, build, load)
 
     path = get(k=1)
     assert len(builds) == 1 and os.path.basename(path).startswith("stub_sf0.001_")
     assert get(k=1) == path and len(builds) == 1  # fresh: never builds
     os.utime(sf / "t.parquet", ns=(1, 1))  # regenerated fixture: new mtime
     assert get(k=1) == path and get(k=1) == path and len(builds) == 2
-    assert get(k=2) != path and len(builds) == 3  # changed recipe: own path
-    for artifact in (os.path.join(path, "_meta.json"), get(file=1)):
+    for artifact in (os.path.join(path, "_meta.json"), get("stubf", file=1)):
         with open(artifact, "w") as f:
             f.write("{garbage")  # torn payload
-    assert get(k=1) == path and get(file=1) and len(builds) == 6
+    assert get(k=1) == path and get("stubf", file=1) and len(builds) == 5
 
     left = [e for e in os.listdir(cache) if any(t in e for t in (".tmp-", ".build-", ".old-"))]
     assert left + [e for e in os.listdir(path) if ".tmp-" in e] == []
+    assert get(k=2) != path and len(builds) == 6  # changed recipe: own path
+
+
+def test_publish_reaps_superseded_params_of_the_same_fixture(tmp_path, override_env):
+    """Publishing params B removes the artifact built from params A for
+    the same kind and fixture dir, with its ``.append-<pid>`` copy; an
+    artifact of another fixture dir with the same basename survives."""
+    override_env(str(tmp_path / "idx"))
+    sfs = [tmp_path / d / "sf0.001" for d in ("a", "b")]
+
+    def get(sf, **params):
+        return cached_artifact("stub", str(sf), "t", params, lambda t, m: "{}", lambda p, m: os.stat(p) and p)
+
+    a, other = get(sfs[0], k=1), get(sfs[1], k=1)
+    assert os.path.basename(a).startswith("stub_sf0.001_") and a != other
+    atomic_write(f"{a}.append-1", "copy")
+    b = get(sfs[0], k=2)
+    assert sorted(os.listdir(tmp_path / "idx")) == sorted(os.path.basename(p) for p in (b, other))
