@@ -182,8 +182,8 @@ def _bucket_column(
     rk = _range_key(df, lead)
     # Chained boolean sums, NOT a higher-order F.filter over a literal
     # array: the lambda variable trips an [INTERNAL_ERROR_ATTRIBUTE_NOT_
-    # FOUND] when the bucket expression is inlined through the
-    # aggregate + self-join this operator builds (Spark 4.1.2); plain
+    # FOUND] when the bucket expression is inlined through an
+    # aggregate + self-join (Spark 4.1.2); plain
     # comparisons codegen fine and are one WholeStageCodegen span.
     if lead_desc:
         # bucket grows as the key shrinks
@@ -219,14 +219,14 @@ def _bookkeep(
     df = _materialize(df)
     infos = [_order_info(o) for o in orders]
     n = partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    bounds_list = _range_bounds(df, [info[0][1] for info in infos], n)
+    bounds = _range_bounds(df, [info[0][1] for info in infos], n)
     pids = [f"__gr_pid_{i}" for i in range(len(infos))]
     parted = df.withColumns(
-        {p: _bucket_column(df, info, b) for p, info, b in zip(pids, infos, bounds_list)}
+        {p: _bucket_column(df, info, b) for p, info, b in zip(pids, infos, bounds)}
     )
     # Bucket ids are never NULL, so the one non-NULL id column of a
     # grouping-sets row names the order it belongs to.
-    stats = [[[None] * (len(b) + 1) for _ in aggs] for b in bounds_list]
+    stats = [[[None] * (len(b) + 1) for _ in aggs] for b in bounds]
     for r in parted.groupingSets([[p] for p in pids], *pids).agg(*aggs).collect():
         i = next(j for j in range(len(pids)) if r[j] is not None)
         for j, v in enumerate(r[len(pids):]):

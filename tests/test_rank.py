@@ -9,7 +9,13 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c_tran_data_pipeline_spark.operators.rank import global_rank, global_ntile
+from c_tran_data_pipeline_spark.operators.rank import (
+    global_cummax,
+    global_cumsum,
+    global_ntile,
+    global_ntile_multi,
+    global_rank,
+)
 
 
 @pytest.fixture(scope="module")
@@ -65,6 +71,8 @@ def test_empty_input_and_guards(keyed, spark):
         global_rank(keyed.withColumn("__gr_pid", F.lit(1)), ["k"])
     with pytest.raises(ValueError, match="positive"):
         global_ntile(keyed, 0, ["k", "id"])
+    with pytest.raises(ValueError, match="integral"):  # prefixes are exact only for integers
+        global_cumsum(keyed.withColumn("x", F.col("id").cast("double")), ["id"], ["x"])
 
 
 def test_string_lead_key_variable_length(spark):
@@ -113,8 +121,6 @@ def test_input_materialized_once(keyed):
 def test_global_cumsum_matches_range_window(keyed, spark):
     """Inclusive running totals + grand totals over a unique-key grid
     equal the single-partition SUM ... OVER (ORDER BY) form."""
-    from c_tran_data_pipeline_spark.operators.rank import global_cumsum
-
     grid = keyed.groupBy("k").agg(
         F.count(F.lit(1)).alias("a"), F.sum("id").alias("b")
     )
@@ -143,8 +149,6 @@ def test_global_cumsum_matches_range_window(keyed, spark):
 def test_global_cummax_exclusive_matches_window(keyed, spark):
     """Strictly-preceding running max (the dominance-sweep frame) equals
     the single-partition exclusive window, including the NULL first row."""
-    from c_tran_data_pipeline_spark.operators.rank import global_cummax
-
     grid = keyed.groupBy("k").agg(F.max("id").alias("v"))
     w = Window.orderBy(F.desc("k")).rowsBetween(Window.unboundedPreceding, -1)
     exp = {r["k"]: r["pm"] for r in grid.select("k", F.max("v").over(w).alias("pm")).collect()}
@@ -163,8 +167,6 @@ def test_global_ntile_multi_matches_window_ntile_per_dimension(spark):
     own single-partition NTILE window on the same frame — ties, NULL
     lead keys, descending orders and the ANSI remainder rule (5,007
     rows into 5 buckets) all included."""
-    from c_tran_data_pipeline_spark.operators.rank import global_ntile_multi
-
     df = spark.range(0, 5_007).select(
         F.col("id"),
         (F.col("id") % 37).alias("a"),
@@ -195,8 +197,6 @@ def test_driver_prefixes_skip_nulls_and_rank_nan_like_window(spark):
     all NULL so far still carries the earlier total; an all-NULL prefix
     stays NULL) and a DOUBLE running max over NULL and NaN (NaN above
     every number), inclusive and strictly-preceding."""
-    from c_tran_data_pipeline_spark.operators.rank import global_cummax, global_cumsum
-
     df = spark.range(0, 300).select(
         "id",
         F.when((F.col("id") < 20) | (F.col("id") % 9 < 4), None).otherwise(F.col("id")).alias("v"),
@@ -224,17 +224,7 @@ def test_driver_prefixes_skip_nulls_and_rank_nan_like_window(spark):
     assert rows(got) == rows(exp)
 
 
-def test_global_cumsum_rejects_floating_columns(spark):
-    from c_tran_data_pipeline_spark.operators.rank import global_cumsum
-
-    df = spark.range(0, 10).select("id", F.col("id").cast("double").alias("x"))
-    with pytest.raises(ValueError, match="integral"):
-        global_cumsum(df, ["id"], ["x"])
-
-
 def test_global_ntile_multi_guards(keyed):
-    from c_tran_data_pipeline_spark.operators.rank import global_ntile_multi
-
     with pytest.raises(ValueError, match="align"):
         global_ntile_multi(keyed, 5, [["k", "id"]], ["x", "y"])
     with pytest.raises(ValueError, match="reserves"):
