@@ -2,7 +2,7 @@
 # The oracle corpus is verified at BOTH sf0.01 (the driver's gate SF)
 # and sf0.1 (the bench SF); VERIFICATION.md records the latest results.
 
-.PHONY: test test-all oracle oracle-sf01 bench bench-compare perf ab verify
+.PHONY: test test-all oracle oracle-typed oracle-sf01 bench bench-compare perf ab verify
 
 # Default profile: slow-marked E2E/property/audit tests deselected
 # (pytest.ini addopts) so a time-budgeted run finishes with a verdict.
@@ -41,9 +41,10 @@ perf:
 	python3 perfbench/run.py --workload reads --seed 1 --seconds 12
 
 # Interleaved A/B of two git revisions over BENCHMARK.json's workloads,
-# 10 pairs each, judged against its bounds:
-#   make ab PARENT=<rev> CHANGE=<rev>
+# 10 pairs each, judged against its bounds; with QUERIES, bench.py's
+# query mode on those queries instead:
+#   make ab PARENT=<rev> CHANGE=<rev> [QUERIES="q_ann_topk q_semantic_dedup"]
 ab:
-	python3 scripts/ab.py $(PARENT) $(CHANGE)
+	python3 scripts/ab.py $(PARENT) $(CHANGE) $(QUERIES)
 
 verify: test oracle oracle-sf01 bench bench-compare

@@ -15,11 +15,15 @@ table before the broadcast join is the entire point of ADC: computed
 after the join it would re-evaluate per (query, corpus) pair and the
 lookup trick buys nothing.
 
-The ADC ranking is approximate, so the registered query is rows-only;
-``pq_topk(rerank_factor=...)`` follows the standard refine step — ADC
-shortlist of k×factor, exact distance on the shortlist only (the full
-vectors are touched for shortlist rows, never the whole corpus), and
-tests pin the recall floors of both tiers against exact L2 top-k.
+Each stage exists once: ``_pq_codes`` builds the code column (encode_pq,
+encode_ivfpq), ``_adc`` scores a candidate from its codes, and
+``_adc_ranked`` is the rank tail — the ADC top-k, or the standard
+refine step: an ADC shortlist of k×rerank_factor re-scored by exact L2
+on the shortlist only (the full vectors are touched for shortlist rows,
+never the whole corpus). ``ivfpq_topk`` is the one-shot composition of
+the coarse quantizer, encode_ivfpq and ivfpq_search. The ADC ranking is
+approximate, so the registered queries are rows-only; tests pin the
+recall floors of both tiers against exact L2 top-k.
 
 Everything is deterministic: codebooks come from the md5-LSH-seeded
 k-means (no RNG), encode/ADC are pure expressions — same corpus, same
@@ -30,11 +34,16 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from c_tran_data_pipeline_spark.operators.similarity import (
     _as_double,
+    _kmeans_rows,
     _l2sq,
+    _lloyd,
+    _nearest_cell,
+    _probe_cells,
+    _ranked,
+    _train_sample,
 )
 from c_tran_data_pipeline_spark.session import atomic_write, read_json
 
@@ -63,63 +72,20 @@ def train_pq(
     vec: str = "embedding",
 ) -> Codebooks:
     """Per-subspace codebooks: subspace j covers dims [j·dsub, (j+1)·dsub).
-    Same deterministic recipe as the IVF quantizer — md5-LSH-seeded
-    k-means, ``iters`` Lloyd steps — run DRIVER-SIDE on a bounded
-    deterministic sample (the _kmeans_rows treatment): one hash-order
-    top-k collects at most ``_TRAIN_PER_CENTROID × ksub`` full vectors,
-    then every subspace's seed/assign/mean refinement is numpy on the
-    driver. Quantizer quality needs a bounded sample, not the corpus
-    (the faiss PQ training shape), so training is ONE bounded job
-    instead of 1+iters distributed aggregates whose per-job plan
-    compile dominated at small SF. Codebooks land driver-side
-    (m×ksub×dsub floats ≈ KBs at any corpus size) and re-enter every
-    downstream plan as literals — encode and search never join a
-    centroid table. Deterministic: hash-ordered key-tie-broken sample,
-    key-sorted rows, pure-function sign seed, float64 numpy."""
+    Same deterministic recipe as the IVF quantizer (_kmeans_rows): one
+    bounded hash-ordered sample of at most ``_TRAIN_PER_CENTROID × ksub``
+    full vectors (_train_sample), then the md5-LSH-seeded Lloyd loop
+    (_lloyd) once per subspace in numpy on the driver. Codebooks land
+    driver-side (m×ksub×dsub floats ≈ KBs at any corpus size) and
+    re-enter every downstream plan as literals — encode and search never
+    join a centroid table."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    import math
-
-    import numpy as np
-
-    from c_tran_data_pipeline_spark.operators.similarity import (
-        _TRAIN_PER_CENTROID,
-        _sign_value,
-    )
-
     dsub = dim // m
-    cap = _TRAIN_PER_CENTROID * ksub
-    proj = df.select(F.col(key).alias("__k"), _as_double(F.col(vec)).alias("__vv")).filter(
-        F.col("__vv").isNotNull()
-    )
-    rows = proj.orderBy(F.xxhash64(F.col("__k")), F.col("__k")).limit(cap).collect()
-    if not rows:
+    V = _train_sample(df, ksub, key, vec)
+    if V is None:
         return [[] for _ in range(m)]
-    rows.sort(key=lambda r: r["__k"])
-    V = np.array([r["__vv"] for r in rows], dtype=np.float64)
-    planes = max(1, math.ceil(math.log2(max(ksub, 2))))
-    signs = np.array(
-        [[_sign_value(j, t) for t in range(dsub)] for j in range(planes)], dtype=np.float64
-    )
-    books: Codebooks = []
-    for j in range(m):
-        S = V[:, j * dsub : (j + 1) * dsub]
-        assign = (((S @ signs.T) > 0.0).astype(np.int64) << np.arange(planes)).sum(axis=1)
-
-        def _means(a):
-            return [(int(c), S[a == c].mean(axis=0)) for c in np.unique(a)]
-
-        cents = _means(assign)
-        for _ in range(iters):
-            C = np.stack([c for _, c in cents])
-            ids = np.array([cid for cid, _ in cents])
-            d2 = ((S[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            # first argmin = lowest centroid id (id-sorted cents), the
-            # same tie-break the distributed assigner used (lowest centroid id)
-            assign = ids[np.argmin(d2, axis=1)]
-            cents = _means(assign)
-        books.append([(cid, [float(x) for x in mv]) for cid, mv in cents])
-    return books
+    return [_lloyd(V[:, j * dsub : (j + 1) * dsub], ksub, iters, dsub) for j in range(m)]
 
 
 def _book_lit(book: list[tuple[int, list[float]]]) -> Column:
@@ -142,23 +108,28 @@ def _sub_scores(v_sub: Column, book: list[tuple[int, list[float]]]) -> Column:
     return F.transform(_book_lit(book), lambda c: _l2sq(v_sub, c))
 
 
+def _sub_vectors(v: Column, books: Codebooks) -> list[Column]:
+    dsub = len(books[0][0][1])
+    return [F.slice(v, j * dsub + 1, dsub) for j in range(len(books))]
+
+
+def _pq_codes(v: Column, books: Codebooks) -> Column:
+    """array<int>: codes[j] = nearest sub-centroid id of v's subspace j.
+    Pure projection — literal codebooks, no shuffle, no join; ties break
+    to the lowest centroid id (array_position finds the first minimum),
+    which keeps codes engine-reproducible."""
+    codes = []
+    for v_sub, book in zip(_sub_vectors(v, books), books):
+        scores = _sub_scores(v_sub, book)
+        codes.append((F.array_position(scores, F.array_min(scores)) - 1).cast("int"))
+    return F.array(*codes)
+
+
 def encode_pq(
     df: DataFrame, books: Codebooks, key: str = "vec_id", vec: str = "embedding"
 ) -> DataFrame:
-    """(key, codes array<int>): codes[j] = nearest sub-centroid id in
-    subspace j. Pure projection — literal codebooks, no shuffle, no
-    join; ties break to the lowest centroid id (array_position finds
-    the first minimum), which keeps codes engine-reproducible."""
-    m = len(books)
-    dsub = len(books[0][0][1])
-    v = _as_double(F.col(vec))
-    code_cols = []
-    for j in range(m):
-        scores = _sub_scores(F.slice(v, j * dsub + 1, dsub), books[j])
-        code_cols.append(
-            (F.array_position(scores, F.array_min(scores)) - 1).cast("int")
-        )
-    return df.select(F.col(key), F.array(*code_cols).alias("codes"))
+    """(key, codes array<int>) — _pq_codes over every row."""
+    return df.select(F.col(key), _pq_codes(_as_double(F.col(vec)), books).alias("codes"))
 
 
 def adc_tables(
@@ -168,15 +139,54 @@ def adc_tables(
     table, one row per query. qtab[j·ksub + c] = ||q_sub_j − cent_c^j||².
     Computed ONCE per query here, before any join touches the corpus."""
     v = _as_double(F.col(vec))
-    dsub = len(books[0][0][1])
     return queries.select(
         F.col(key).alias("query_id"),
         F.flatten(
-            F.array(
-                *[_sub_scores(F.slice(v, j * dsub + 1, dsub), books[j]) for j in range(len(books))]
-            )
+            F.array(*[_sub_scores(v_sub, b) for v_sub, b in zip(_sub_vectors(v, books), books)])
         ).alias("qtab"),
     )
+
+
+def _adc(books: Codebooks) -> Column:
+    """The ADC distance of a (codes, qtab) pair: Σ_j qtab[off_j + codes[j]].
+    Per-subspace offsets into the flattened qtab: k-means may return
+    fewer than ksub centroids (empty seed clusters), so a fixed stride
+    would mis-address every later subspace. Codes are positional per
+    subspace; offsets are the prefix sums of each book's actual size."""
+    offs = [0]
+    for b in books:
+        offs.append(offs[-1] + len(b))
+    lookups = [
+        F.element_at(F.col("qtab"), F.lit(offs[j] + 1) + F.element_at(F.col("codes"), j + 1))
+        for j in range(len(books))
+    ]
+    return sum(lookups[1:], lookups[0])
+
+
+def _adc_ranked(
+    scored: DataFrame,
+    vectors: DataFrame,
+    queries: DataFrame,
+    k: int,
+    rerank_factor: int,
+    key: str,
+    vec: str,
+) -> DataFrame:
+    """The PQ rank tail over (query_id, neighbor_id, __adc) candidates:
+    without ``rerank_factor`` the ADC top-k; with it, an ADC shortlist
+    of k×rerank_factor re-scored by EXACT squared L2 against the true
+    vectors — ``vectors`` is (neighbor_id, __cv), joined for shortlist
+    rows only. Returns (query_id, neighbor_id, rank, dist)."""
+    if not rerank_factor:
+        return _ranked(scored, k, "__adc", desc=False, out="dist")
+    shortlist = _ranked(scored, k * rerank_factor, "__adc", desc=False)
+    qvs = queries.select(F.col(key).alias("query_id"), _as_double(F.col(vec)).alias("__qv"))
+    exact = (
+        shortlist.join(vectors, "neighbor_id")
+        .join(F.broadcast(qvs), "query_id")
+        .select("query_id", "neighbor_id", _l2sq(F.col("__qv"), F.col("__cv")).alias("__d"))
+    )
+    return _ranked(exact, k, "__d", desc=False, out="dist")
 
 
 def pq_topk(
@@ -198,51 +208,15 @@ def pq_topk(
 
     Returns (query_id, neighbor_id, rank, dist) — dist is the ADC
     approximation, or the exact distance when re-ranking."""
-    m = len(books)
-    # Per-subspace offsets into the flattened qtab: k-means may return
-    # fewer than ksub centroids (empty seed clusters), so a fixed stride
-    # would mis-address every later subspace. Codes are positional per
-    # subspace; offsets are the prefix sums of each book's actual size.
-    offs = [0]
-    for b in books:
-        offs.append(offs[-1] + len(b))
     codes = encode_pq(corpus, books, key=key, vec=vec).select(
         F.col(key).alias("neighbor_id"), "codes"
     )
     qt = adc_tables(queries, books, key=key, vec=vec)
-    lookups = [
-        F.element_at(F.col("qtab"), F.lit(offs[j] + 1) + F.element_at(F.col("codes"), j + 1))
-        for j in range(m)
-    ]
-    adc = sum(lookups[1:], lookups[0])
     scored = codes.join(F.broadcast(qt), F.col("neighbor_id") != F.col("query_id")).select(
-        "query_id", "neighbor_id", adc.alias("__adc")
+        "query_id", "neighbor_id", _adc(books).alias("__adc")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("__adc").asc(), F.col("neighbor_id").asc())
-    if not rerank_factor:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", F.round("__adc", 4).alias("dist"))
-        )
-    shortlist = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k * rerank_factor)
-        .select("query_id", "neighbor_id")
-    )
-    cv = corpus.select(F.col(key).alias("neighbor_id"), _as_double(F.col(vec)).alias("__cv"))
-    qv = queries.select(F.col(key).alias("query_id"), _as_double(F.col(vec)).alias("__qv"))
-    exact = (
-        shortlist.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select("query_id", "neighbor_id", _l2sq(F.col("__qv"), F.col("__cv")).alias("__d"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.col("__d").asc(), F.col("neighbor_id").asc())
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("__d", 4).alias("dist"))
-    )
+    vectors = corpus.select(F.col(key).alias("neighbor_id"), _as_double(F.col(vec)).alias("__cv"))
+    return _adc_ranked(scored, vectors, queries, k, rerank_factor, key, vec)
 
 
 def ivfpq_topk(
@@ -266,85 +240,20 @@ def ivfpq_topk(
     cost, + shortlist·d exact work — the two pruning axes (which rows,
     how many bytes per row) composed.
 
-    Physical shape: ONE corpus projection emits (id, cell, codes) — the
-    centroid table and codebooks are literal expressions, so neither
-    assignment nor encoding joins or shuffles anything (persist this
-    projection ``partitionBy('centroid_id')`` at scale with
-    write_ivfpq_index, and searches read nprobe cells' directories). The
-    query side broadcasts (probes × ADC tables); the only shuffles are
-    the candidate equi-join on centroid_id and the two top-k windows.
+    The one-shot form: train the coarse quantizer on ``corpus``, encode
+    it (encode_ivfpq — one projection, no joins), and search the
+    in-memory index with ivfpq_search. Without static cell pruning: the
+    encoded corpus is a projection here, not a partitioned layout, so
+    the probed-cell collect would be one more job for no scan saved.
 
     Deterministic end to end (md5-seeded quantizers, lowest-id ties), so
     recall floors vs exact L2 are stable pytest assertions.
     """
-    from c_tran_data_pipeline_spark.operators.similarity import (
-        _kmeans_rows,
-        _nearest_cell,
-        _probe_cells,
-    )
-
-    m = len(books)
-    dsub = len(books[0][0][1])
     cents = _kmeans_rows(corpus, nlist=nlist, iters=iters, key=key, vec=vec, dim=None)
-
-    # one projection: cell assignment + PQ codes, no joins corpus-side
-    cv = _as_double(F.col(vec))
-    code_cols = [
-        (
-            F.array_position(
-                _sub_scores(F.slice(cv, j * dsub + 1, dsub), books[j]),
-                F.array_min(_sub_scores(F.slice(cv, j * dsub + 1, dsub), books[j])),
-            )
-            - 1
-        ).cast("int")
-        for j in range(m)
-    ]
-    encoded_cells = corpus.select(
-        F.col(key).alias("neighbor_id"),
-        _nearest_cell(cv, cents).alias("centroid_id"),
-        F.array(*code_cols).alias("codes"),
-    )
-
-    qv = _as_double(F.col(vec))
-    probes = queries.select(
-        F.col(key).alias("query_id"),
-        F.explode(_probe_cells(qv, cents, nprobe)).alias("centroid_id"),
-    )
-    qt = adc_tables(queries, books, key=key, vec=vec)
-    probe_tabs = probes.join(qt, "query_id")  # tiny × tiny, broadcast below
-
-    offs = [0]
-    for b in books:
-        offs.append(offs[-1] + len(b))
-    lookups = [
-        F.element_at(F.col("qtab"), F.lit(offs[j] + 1) + F.element_at(F.col("codes"), j + 1))
-        for j in range(m)
-    ]
-    adc = sum(lookups[1:], lookups[0])
-
-    scored = (
-        encoded_cells.join(F.broadcast(probe_tabs), on="centroid_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", adc.alias("__adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("__adc").asc(), F.col("neighbor_id").asc())
-    shortlist = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k * max(rerank_factor, 1))
-        .select("query_id", "neighbor_id")
-    )
-    cvs = corpus.select(F.col(key).alias("neighbor_id"), _as_double(F.col(vec)).alias("__cv"))
-    qvs = queries.select(F.col(key).alias("query_id"), _as_double(F.col(vec)).alias("__qv"))
-    exact = (
-        shortlist.join(cvs, "neighbor_id")
-        .join(F.broadcast(qvs), "query_id")
-        .select("query_id", "neighbor_id", _l2sq(F.col("__qv"), F.col("__cv")).alias("__d"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.col("__d").asc(), F.col("neighbor_id").asc())
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("__d", 4).alias("dist"))
+    index = (cents, books, encode_ivfpq(corpus, cents, books, key=key, vec=vec))
+    return ivfpq_search(
+        index, queries, k=k, nprobe=nprobe, rerank_factor=rerank_factor,
+        key=key, vec=vec, static_cell_pruning=False,
     )
 
 
@@ -365,12 +274,12 @@ def ivfpq_index(
     exact re-rank, the cell for partition pruning — so a search never
     touches the raw corpus again.
 
-    This is the amortization point the one-shot ivfpq_topk deliberately
-    skips: both quantizers train per invocation there (fine for a
-    recall audit, wrong for production where one index serves thousands
-    of query batches). Build here, persist with write_ivfpq_index, and
-    every later ivfpq_search is PQ-code scans over nprobe pruned cells
-    — zero training passes.
+    This is the amortization point: the one-shot ivfpq_topk trains the
+    coarse quantizer on every call and takes its codebooks from the
+    caller (fine for a recall audit, wrong for production where one
+    index serves thousands of query batches). Build here, persist with
+    write_ivfpq_index, and every later ivfpq_search is PQ-code scans
+    over nprobe pruned cells — zero training passes.
 
     ``train_df``: train BOTH quantizers on this frame instead of the
     full corpus (pass ``deterministic_sample(corpus, ...)`` — the
@@ -378,12 +287,6 @@ def ivfpq_index(
     only part of the build whose cost scans the corpus O(iters) times,
     so at scale this is the build's dominant lever; assignment and
     encoding below always cover every corpus row regardless."""
-    from c_tran_data_pipeline_spark.operators.similarity import (
-        _as_double as _ad,
-        _kmeans_rows,
-        _nearest_cell,
-    )
-
     train = train_df if train_df is not None else corpus
     cents = _kmeans_rows(train, nlist=nlist, iters=iters, key=key, vec=vec, dim=dim)
     books = train_pq(train, m=m, ksub=ksub, dim=dim or len(cents[0][1]), iters=iters, key=key, vec=vec)
@@ -401,24 +304,14 @@ def encode_ivfpq(
     """Encode a batch against FROZEN quantizers — one projection per row
     (centroids/codebooks as literals, no joins, no training jobs):
     (neighbor_id, codes, __cv, centroid_id). This is the shared encode
-    of ivfpq_index (full corpus at build) and ivfpq_append (daily
-    batches) — same expression, so an appended row's codes and cell are
-    bit-identical to what a rebuild with the same quantizers assigns."""
-    from c_tran_data_pipeline_spark.operators.similarity import (
-        _as_double as _ad,
-        _nearest_cell,
-    )
-
-    m = len(books)
-    dsub = len(books[0][0][1])
-    cv = _ad(F.col(vec))
-    code_cols = []
-    for j in range(m):
-        scores = _sub_scores(F.slice(cv, j * dsub + 1, dsub), books[j])
-        code_cols.append((F.array_position(scores, F.array_min(scores)) - 1).cast("int"))
+    of ivfpq_index (full corpus at build), ivfpq_topk (one-shot) and
+    ivfpq_append (daily batches) — same expression, so an appended row's
+    codes and cell are bit-identical to what a rebuild with the same
+    quantizers assigns."""
+    cv = _as_double(F.col(vec))
     return corpus.select(
         F.col(key).alias("neighbor_id"),
-        F.array(*code_cols).alias("codes"),
+        _pq_codes(cv, books).alias("codes"),
         cv.alias("__cv"),
         _nearest_cell(cv, cents).alias("centroid_id"),
     )
@@ -491,27 +384,24 @@ def read_ivfpq_index(
     Only SIDECAR-LISTED generation dirs are opened (each its own
     partitioned scan, unioned by name — cell pruning still reaches each
     scan as a parquet PartitionFilter), so a torn append — parquet
-    written, sidecar bump lost — is simply never read. Legacy sidecars
-    without ``generations`` fall back to the flat root-scan layout."""
+    written, sidecar bump lost — is simply never read. A sidecar without
+    ``generations`` (the flat pre-generation layout) raises ValueError."""
     import os
     from functools import reduce
 
     meta, cents, books = _read_ivfpq_sidecar(path, expect_meta)
-    gens = meta.get("generations")
-    if gens:
-        scans = [spark.read.parquet(os.path.join(path, g)) for g in gens]
-        encoded = reduce(lambda a, b: a.unionByName(b), scans)
-    else:  # pre-generation layout: encoded parquet at the root
-        encoded = spark.read.parquet(path)
-    return cents, books, encoded
+    scans = [spark.read.parquet(os.path.join(path, g)) for g in meta["generations"]]
+    return cents, books, reduce(lambda a, b: a.unionByName(b), scans)
 
 
 def _read_ivfpq_sidecar(
     path: str, expect_meta: dict | None = None
 ) -> tuple[dict, list[tuple[int, list[float]]], Codebooks]:
     """(sidecar, centroids, codebooks) of a committed index; raises
-    FileNotFoundError without a sidecar and ValueError when it is torn
-    or its stored ``meta`` differs from ``expect_meta``."""
+    FileNotFoundError without a sidecar and ValueError when it is torn,
+    its stored ``meta`` differs from ``expect_meta``, or it lists no
+    ``generations`` (the flat layout written before the generation
+    layout; session.cached_artifact rebuilds on that error)."""
     import os
 
     meta_path = os.path.join(path, "_ivfpq_meta.json")
@@ -521,6 +411,11 @@ def _read_ivfpq_sidecar(
             f"sidecar — torn or absent write)"
         )
     meta = read_json(meta_path, expect_meta)
+    if not meta.get("generations"):
+        raise ValueError(
+            f"IVF-PQ index at {path} uses the pre-generation flat layout — "
+            f"rebuild it with write_ivfpq_index"
+        )
     cents = [(int(cid), [float(x) for x in cvec]) for cid, cvec in meta["centroids"]]
     books: Codebooks = [
         [(int(cid), [float(x) for x in cent]) for cid, cent in book]
@@ -577,12 +472,7 @@ def ivfpq_append(
     import shutil
 
     meta, cents, books = _read_ivfpq_sidecar(path, expect_meta)
-    gens = meta.get("generations")
-    if not gens:
-        raise ValueError(
-            f"IVF-PQ index at {path} uses the pre-generation flat layout — "
-            f"rebuild with write_ivfpq_index before appending"
-        )
+    gens = meta["generations"]
 
     encoded = encode_ivfpq(new_vectors, cents, books, key=key, vec=vec)
     new_counts = {
@@ -651,13 +541,15 @@ def ivfpq_search(
     vec: str = "embedding",
     static_cell_pruning: bool = True,
 ) -> DataFrame:
-    """Search a prebuilt IVF-PQ index — the amortized production path
-    (ivfpq_topk = ivfpq_index + this, fused and untuned). Same result
-    contract: (query_id, neighbor_id, rank, dist), dist exact after the
-    re-rank.
+    """Search an IVF-PQ index — the amortized production path over a
+    persisted index, and the body of the one-shot ivfpq_topk. Returns
+    (query_id, neighbor_id, rank, dist), dist exact after the re-rank of
+    the k×max(rerank_factor, 1) ADC shortlist.
 
     Physical shape per batch: probes and ADC tables are projections
-    over the tiny query batch (centroids/codebooks are literals);
+    over the tiny query batch (centroids/codebooks are literals); the
+    query side broadcasts (probes × ADC tables); the only shuffles are
+    the candidate equi-join on centroid_id and the two top-k windows.
     ``static_cell_pruning`` collects the probed-cell union (≤ nlist
     ids) and pushes it as a literal IN filter, which against a
     write_ivfpq_index layout becomes a parquet PartitionFilter on BOTH
@@ -665,16 +557,9 @@ def ivfpq_search(
     vectors for shortlist rows' cells) — the scan physically touches
     nprobe cells' directories, nothing else, no training jobs."""
     cents, books, encoded = index
-    m = len(books)
-    from c_tran_data_pipeline_spark.operators.similarity import (
-        _as_double as _ad,
-        _probe_cells,
-    )
-
-    qv = _ad(F.col(vec))
     probes = queries.select(
         F.col(key).alias("query_id"),
-        F.explode(_probe_cells(qv, cents, nprobe)).alias("centroid_id"),
+        F.explode(_probe_cells(_as_double(F.col(vec)), cents, nprobe)).alias("centroid_id"),
     )
     if static_cell_pruning:
         probed = sorted(
@@ -684,40 +569,15 @@ def ivfpq_search(
 
     qt = adc_tables(queries, books, key=key, vec=vec)
     probe_tabs = probes.join(qt, "query_id")  # tiny × tiny, broadcast below
-
-    offs = [0]
-    for b in books:
-        offs.append(offs[-1] + len(b))
-    lookups = [
-        F.element_at(F.col("qtab"), F.lit(offs[j] + 1) + F.element_at(F.col("codes"), j + 1))
-        for j in range(m)
-    ]
-    adc = sum(lookups[1:], lookups[0])
-
     scored = (
         encoded.select("neighbor_id", "centroid_id", "codes")
         .join(F.broadcast(probe_tabs), on="centroid_id")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", adc.alias("__adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("__adc").asc(), F.col("neighbor_id").asc())
-    shortlist = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k * max(rerank_factor, 1))
-        .select("query_id", "neighbor_id")
+        .select("query_id", "neighbor_id", _adc(books).alias("__adc"))
     )
     # Exact re-rank reads true vectors from the INDEX (same pruned cells
     # — the shortlist is a subset of probed cells), never the raw corpus.
-    cvs = encoded.select("neighbor_id", "__cv")
-    qvs = queries.select(F.col(key).alias("query_id"), qv.alias("__qv"))
-    exact = (
-        shortlist.join(cvs, "neighbor_id")
-        .join(F.broadcast(qvs), "query_id")
-        .select("query_id", "neighbor_id", _l2sq(F.col("__qv"), F.col("__cv")).alias("__d"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.col("__d").asc(), F.col("neighbor_id").asc())
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("__d", 4).alias("dist"))
+    return _adc_ranked(
+        scored, encoded.select("neighbor_id", "__cv"), queries,
+        k, max(rerank_factor, 1), key, vec,
     )

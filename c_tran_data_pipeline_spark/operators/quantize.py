@@ -29,7 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from c_tran_data_pipeline_spark.operators.similarity import _ranked
 
 
 def _q8(v: Column, scale: Column) -> Column:
@@ -128,9 +129,4 @@ def int8_cosine_topk(
             )
         ).alias("__cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("__cos", 4).alias("cosine"))
-    )
+    return _ranked(scored, k, "__cos", desc=True, out="cosine")

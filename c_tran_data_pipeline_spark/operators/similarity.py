@@ -1,22 +1,25 @@
 """Similarity search over embedding columns (north-star extensions).
 
-Two tiers, per the standard ANN playbook:
+Every top-k operator here (and in ``pq.py`` / ``quantize.py``) is three
+stages, each written once:
 
-- ``cosine_topk``: exact brute force — broadcast the (small) query set
-  against the full corpus, compute cosine JVM-side with array lambda
-  expressions (zip_with/aggregate — codegen, no Python), take top-k per
-  query with a window. This is the ground-truth baseline and is already
-  the right physical plan when |queries| is small: one scan of the
-  corpus, no shuffle of the embedding column beyond the top-k agg.
-
-- ``hyperplane_lsh_buckets`` / ``ann_lsh_topk``: the scale path — random-
-  hyperplane SimHash bucketing (Charikar LSH). Hyperplane components are
-  ±1 derived from md5(plane,dim) parity: deterministic, engine-portable
-  (exact SQL oracle), and needing no stored plane matrix. Candidates =
-  bucket equi-join; final ranking = exact cosine on candidates only.
-  At 100 TB the bucket join replaces the O(|corpus|×|queries|) scan with
-  a shuffle keyed on ~2^planes buckets; recall is tuned by number of
-  planes / multi-probe repeats.
+1. Candidate generation — which (query, corpus) pairs get scored:
+   the exact broadcast pair join (``cosine_topk`` and its label /
+   Matryoshka variants), the multi-table random-hyperplane LSH bucket
+   equi-join (``ann_lsh_topk``; Charikar SimHash with ±1 components
+   from md5(plane, dim) parity — deterministic, engine-portable, exact
+   SQL oracle, no stored plane matrix), or the IVF probed-cell
+   equi-join (``ivf_search``, k-means cells). At 100 TB the bucket and
+   cell joins replace the O(|corpus|×|queries|) scan with a shuffle
+   keyed on buckets or cells; recall is tuned by planes / tables /
+   nprobe.
+2. Scoring — cosine, with norms hoisted to one side projection per
+   vector (``_normed``) wherever candidates outnumber vectors, or
+   squared L2 (``_l2sq``; PQ's ADC lookups in pq.py).
+3. The top-k cut — ``_ranked``: row_number per query_id by score, then
+   neighbor_id ascending, score rounded to 4 places. Shortlists for a
+   re-rank (Matryoshka prefix, PQ ADC) are the same cut without the
+   score columns.
 
 Cosine is computed on float64 after casting the float32 storage vectors —
 sequential left-to-right fold, matching the oracle's summation order.
@@ -66,6 +69,54 @@ def _guard_size(df: DataFrame, cap: int | None, what: str, hint: str) -> None:
         )
 
 
+def _normed(
+    df: DataFrame, ident: str, tag: str, key: str, vec: str, *extra: Column,
+    dims: int | None = None,
+) -> DataFrame:
+    """(ident, *extra, __<tag>v, __<tag>n): each vector as doubles (its
+    first ``dims`` components when given) and its L2 norm, one row per
+    vector. Norms are computed here, ONCE per side before the pair join
+    (identical fold, identical IEEE order — just earlier): cosine(q, c)
+    inside the join recomputes both norms per PAIR, 3 array folds where
+    1 (the dot product) suffices — measured 2.05 → 1.55 s for the
+    50-query q_knn_label at sf0.1."""
+    v = _as_double(F.col(vec))
+    if dims is not None:
+        v = F.slice(v, 1, dims)
+    vc = f"__{tag}v"
+    return df.select(F.col(key).alias(ident), *extra, v.alias(vc)).select(
+        "*", norm(F.col(vc)).alias(f"__{tag}n")
+    )
+
+
+def _normed_cosine(a: str, b: str) -> Column:
+    """Cosine of two ``_normed`` sides (tags ``a`` and ``b``): the dot
+    product over the hoisted norms — the same arithmetic as cosine()."""
+    return dot(F.col(f"__{a}v"), F.col(f"__{b}v")) / (F.col(f"__{a}n") * F.col(f"__{b}n"))
+
+
+def _ranked(
+    scored: DataFrame,
+    k: int,
+    score: str,
+    desc: bool,
+    keep: tuple[str, ...] = ("query_id", "neighbor_id"),
+    out: str | None = None,
+) -> DataFrame:
+    """The family's one top-k cut: per query_id, rows ordered by
+    ``score`` (descending for similarities, ascending for distances)
+    then neighbor_id ascending, the first ``k`` kept. With ``out`` this
+    is the result contract — ``keep`` + rank + the score rounded to 4
+    places as ``out``; without it, a shortlist of the ``keep`` columns
+    for a re-rank to join back."""
+    order = F.col(score).desc() if desc else F.col(score).asc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id").asc())
+    top = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    if out is None:
+        return top.select(*keep)
+    return top.select(*keep, "rank", F.round(score, 4).alias(out))
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -88,33 +139,16 @@ def cosine_topk(
         "the exact brute-force baseline (one corpus scan PER BATCH, "
         "broadcast query side)",
     )
-    # Norms are computed ONCE per side before the pair join (identical
-    # fold, identical IEEE order — just earlier): the naive cosine(q, c)
-    # inside the join recomputes both norms per PAIR, 3 array folds
-    # where 1 (the dot product) suffices — measured 2.05 → 1.55 s for
-    # the 50-query q_knn_label at sf0.1.
-    c = corpus.select(
-        F.col(key).alias("neighbor_id"), _as_double(F.col(vec)).alias("__cv")
-    ).select("neighbor_id", "__cv", norm(F.col("__cv")).alias("__cn"))
-    q = queries.select(
-        F.col(key).alias("query_id"), _as_double(F.col(vec)).alias("__qv")
-    ).select("query_id", "__qv", norm(F.col("__qv")).alias("__qn"))
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn"))).alias(
-                "__cos"
-            ),
-        )
+    c = _normed(corpus, "neighbor_id", "c", key, vec)
+    q = _normed(queries, "query_id", "q", key, vec)
+    scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id", "neighbor_id", _normed_cosine("q", "c").alias("__cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("__cos", 4).alias("cosine"))
-    )
+    return _ranked(scored, k, "__cos", desc=True, out="cosine")
+
+
+#: the key columns of the hard-negative result contract
+_LABELLED = ("query_id", "query_label", "neighbor_id", "neighbor_label")
 
 
 def hard_negative_topk(
@@ -148,33 +182,33 @@ def hard_negative_topk(
         "the exact brute-force miner (one corpus scan per batch, "
         "broadcast query side)",
     )
-    c = corpus.select(
-        F.col(key).alias("neighbor_id"),
-        F.col(label).alias("neighbor_label"),
-        _as_double(F.col(vec)).alias("__cv"),
-    ).select("neighbor_id", "neighbor_label", "__cv", norm(F.col("__cv")).alias("__cn"))
-    q = queries.select(
-        F.col(key).alias("query_id"),
-        F.col(label).alias("query_label"),
-        _as_double(F.col(vec)).alias("__qv"),
-    ).select("query_id", "query_label", "__qv", norm(F.col("__qv")).alias("__qn"))
+    c = _normed(corpus, "neighbor_id", "c", key, vec, F.col(label).alias("neighbor_label"))
+    q = _normed(queries, "query_id", "q", key, vec, F.col(label).alias("query_label"))
     scored = c.join(
         F.broadcast(q), F.col("neighbor_label") != F.col("query_label")
     ).select(
-        "query_id",
-        "query_label",
-        "neighbor_id",
-        "neighbor_label",
-        (dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn"))).alias("__cos"),
+        *_LABELLED, _normed_cosine("q", "c").alias("__cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id").asc())
+    return _ranked(scored, k, "__cos", desc=True, keep=_LABELLED, out="cosine")
+
+
+def _lsh_pairs(
+    corpus: DataFrame, queries: DataFrame, planes: int, tables: int, key: str, vec: str, dim: int
+) -> DataFrame:
+    """(query_id, neighbor_id, __qv, __cv) once for every corpus row that
+    shares any LSH table bucket with a query (self excluded) — the
+    candidate stage of ann_lsh_topk and hard_negative_topk_lsh."""
+    cb = multi_table_lsh_buckets(corpus, planes, tables, key, vec, dim=dim).select(
+        F.col(key).alias("neighbor_id"), _as_double(F.col(vec)).alias("__cv"), "table", "bucket"
+    )
+    qb = multi_table_lsh_buckets(queries, planes, tables, key, vec, dim=dim).select(
+        F.col(key).alias("query_id"), _as_double(F.col(vec)).alias("__qv"), "table", "bucket"
+    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "query_label", "neighbor_id", "neighbor_label",
-            "rank", F.round("__cos", 4).alias("cosine"),
-        )
+        cb.join(qb, on=["table", "bucket"])
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", "__qv", "__cv")
+        .dropDuplicates(["query_id", "neighbor_id"])  # union across tables
     )
 
 
@@ -187,7 +221,8 @@ def hard_negative_topk_lsh(
     key: str = "vec_id",
     vec: str = "embedding",
     label: str = "label",
-    dim: int | None = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """The 100 TB path of ``hard_negative_topk``: candidates come from
     the multi-table LSH bucket equi-join (never a corpus×queries scan),
@@ -197,38 +232,18 @@ def hard_negative_topk_lsh(
     recall — tests measure the floor). Banding is effectively the
     over-fetch knob: each extra table raises the chance a true hard
     negative shares a bucket, exactly as in ann_lsh_topk."""
-    cb = multi_table_lsh_buckets(corpus, planes, tables, key, vec, dim).select(
-        F.col(key).alias("neighbor_id"), _as_double(F.col(vec)).alias("__cv"),
-        "table", "bucket",
-    )
     cl = corpus.select(F.col(key).alias("neighbor_id"), F.col(label).alias("neighbor_label"))
-    qb = multi_table_lsh_buckets(queries, planes, tables, key, vec, dim).select(
-        F.col(key).alias("query_id"), _as_double(F.col(vec)).alias("__qv"),
-        "table", "bucket",
-    )
     ql = queries.select(F.col(key).alias("query_id"), F.col(label).alias("query_label"))
     candidates = (
-        cb.join(qb, on=["table", "bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", "__qv", "__cv")
-        .dropDuplicates(["query_id", "neighbor_id"])  # union across tables
+        _lsh_pairs(corpus, queries, planes, tables, key, vec, dim)
         .join(cl, "neighbor_id")
         .join(F.broadcast(ql), "query_id")
         .filter(F.col("neighbor_label") != F.col("query_label"))
     )
     scored = candidates.select(
-        "query_id", "query_label", "neighbor_id", "neighbor_label",
-        cosine(F.col("__qv"), F.col("__cv")).alias("__cos"),
+        *_LABELLED, cosine(F.col("__qv"), F.col("__cv")).alias("__cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "query_label", "neighbor_id", "neighbor_label",
-            "rank", F.round("__cos", 4).alias("cosine"),
-        )
-    )
+    return _ranked(scored, k, "__cos", desc=True, keep=_LABELLED, out="cosine")
 
 
 def mrl_topk(
@@ -256,69 +271,26 @@ def mrl_topk(
     broadcastable) rejoin the corpus for the exact re-rank. Cosine over a
     prefix slice needs no re-normalization (cosine is scale-invariant),
     so the shortlist score is exactly reproducible in SQL."""
-    m = shortlist * k
-    # norms once per side, not per pair (see cosine_topk)
-    c_tr = corpus.select(
-        F.col(key).alias("neighbor_id"),
-        F.slice(_as_double(F.col(vec)), 1, prefix_dims).alias("__ct"),
-    ).select("neighbor_id", "__ct", norm(F.col("__ct")).alias("__ctn"))
-    q_tr = queries.select(
-        F.col(key).alias("query_id"),
-        F.slice(_as_double(F.col(vec)), 1, prefix_dims).alias("__qt"),
-    ).select("query_id", "__qt", norm(F.col("__qt")).alias("__qtn"))
+    c_tr = _normed(corpus, "neighbor_id", "c", key, vec, dims=prefix_dims)
+    q_tr = _normed(queries, "query_id", "q", key, vec, dims=prefix_dims)
     scored_tr = c_tr.join(F.broadcast(q_tr), F.col("neighbor_id") != F.col("query_id")).select(
-        "query_id",
-        "neighbor_id",
-        (dot(F.col("__qt"), F.col("__ct")) / (F.col("__qtn") * F.col("__ctn"))).alias(
-            "__tcos"
-        ),
+        "query_id", "neighbor_id", _normed_cosine("q", "c").alias("__tcos")
     )
-    w_tr = Window.partitionBy("query_id").orderBy(F.col("__tcos").desc(), F.col("neighbor_id").asc())
-    short = (
-        scored_tr.withColumn("__rn", F.row_number().over(w_tr))
-        .filter(F.col("__rn") <= m)
-        .select("query_id", "neighbor_id")
-    )
-    c_full = corpus.select(
-        F.col(key).alias("neighbor_id"), _as_double(F.col(vec)).alias("__cv")
-    ).select("neighbor_id", "__cv", norm(F.col("__cv")).alias("__cn"))
-    q_full = queries.select(
-        F.col(key).alias("query_id"), _as_double(F.col(vec)).alias("__qv")
-    ).select("query_id", "__qv", norm(F.col("__qv")).alias("__qn"))
+    short = _ranked(scored_tr, shortlist * k, "__tcos", desc=True)
     rerank = (
-        short.join(c_full, "neighbor_id")
-        .join(F.broadcast(q_full), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn"))).alias(
-                "__cos"
-            ),
-        )
+        short.join(_normed(corpus, "neighbor_id", "c", key, vec), "neighbor_id")
+        .join(F.broadcast(_normed(queries, "query_id", "q", key, vec)), "query_id")
+        .select("query_id", "neighbor_id", _normed_cosine("q", "c").alias("__cos"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id").asc())
-    return (
-        rerank.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("__cos", 4).alias("cosine"))
-    )
-
-
-def hyperplane_sign(plane: Column, dim_index: Column) -> Column:
-    """±1 pseudo-random hyperplane component from md5 parity — portable
-    across engines, no plane matrix to broadcast."""
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws(",", plane.cast("string"), dim_index.cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
-    return F.when(h % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
+    return _ranked(rerank, k, "__cos", desc=True, out="cosine")
 
 
 def _sign_value(plane: int, dim_index: int) -> float:
-    """Driver-side twin of hyperplane_sign: the sign matrix is constant
-    per (plane, dim), so computing it once here and embedding literals
-    removes planes×dims md5 calls from EVERY row (512/row at 8×64)."""
+    """±1 pseudo-random hyperplane component from md5("plane,dim")
+    parity — portable across engines (the DuckDB oracles replay the same
+    hash), no plane matrix to store. Computed on the driver: the sign
+    matrix is constant per (plane, dim), so it enters plans as literals
+    instead of planes×dims md5 calls on EVERY row (512/row at 8×64)."""
     import hashlib
 
     h = int(hashlib.md5(f"{plane},{dim_index}".encode()).hexdigest()[:15], 16)
@@ -331,42 +303,31 @@ def hyperplane_lsh_buckets(
     key: str = "vec_id",
     vec: str = "embedding",
     plane_offset: int = 0,
-    dim: int | None = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """SimHash bucket id per vector: bit_j = [⟨v, h_{offset+j}⟩ > 0],
     bucket = Σ bit_j·2^j. One projection per plane via array folds — no
     shuffle. ``plane_offset`` selects an independent plane set, which is
-    how multi-table LSH derives its tables; pass ``dim`` when known to
-    embed the sign matrix as literals (no per-row hashing)."""
+    how multi-table LSH derives its tables; ``dim`` sizes the literal
+    sign matrix (no per-row hashing)."""
     v = _as_double(F.col(vec))
     return df.select(
         F.col(key), F.col(vec), _bucket_expr(v, planes, plane_offset, dim).alias("bucket")
     )
 
 
-def _plane_signs(j: int, v: Column) -> Column:
-    """±1 sign vector for plane j as per-row md5 expressions over
-    ``v``'s own length. NB: this must use a 1-arg lambda — PySpark
-    treats a 2-arg transform lambda as (element, index), so a
-    default-arg closure (`lambda d, _j=j: ...`) silently binds the
-    plane to the array index instead."""
-
-    def sign_at(d: Column) -> Column:
-        return hyperplane_sign(F.lit(j), d)
-
-    return F.transform(F.sequence(F.lit(0), F.size(v) - 1), sign_at)
-
-
-def _bucket_from_sign_rows(v: Column, sign_rows: Column, planes: int) -> Column:
-    """bucket = Σ_j [⟨v, signs_j⟩ > 0]·2^j from an array<array<double>> of
-    per-plane sign vectors. ONE expression tree regardless of ``planes``:
-    projections via a transform over the sign matrix, bit weights via a
-    zip_with against a literal weight array. The per-plane Python loop
-    this replaced built ``planes`` separate aggregate trees (and
+def _bucket_expr(v: Column, planes: int, plane_offset: int, dim: int) -> Column:
+    """bucket = Σ_j [⟨v, signs_j⟩ > 0]·2^j over the planes×dim sign
+    literal (_sign_rows_sql). ONE expression tree regardless of
+    ``planes``: projections via a transform over the sign matrix, bit
+    weights via a zip_with against a literal weight array. A per-plane
+    Python loop builds ``planes`` separate aggregate trees (and
     multi-table, tables× that): Catalyst ANALYSIS of those trees — not
     execution — dominated q_ann_neardup_lsh (measured 1.6 s analyze vs
     0.4 s execute per evaluation at sf0.1), the same >1k-node-tree
     pathology _cell_scores documents for IVF centroids."""
+    sign_rows = F.expr(_sign_rows_sql(planes, plane_offset, dim))
     weights = F.lit([1 << j for j in range(planes)]).cast("array<bigint>")
     projs = F.transform(
         sign_rows,
@@ -418,20 +379,6 @@ def _flat_dot_sql(a: str, b: str, dim: int) -> str:
     return (
         f"IF(size(`{a}`) = {dim} AND size(`{b}`) = {dim}, {flat}, {fallback})"
     )
-
-
-def _bucket_expr(v: Column, planes: int, plane_offset: int = 0, dim: int | None = None) -> Column:
-    if dim is not None:
-        return _bucket_from_sign_rows(v, F.expr(_sign_rows_sql(planes, plane_offset, dim)), planes)
-    acc = F.lit(0).cast("bigint")
-    for j in range(planes):
-        proj = F.aggregate(
-            F.zip_with(v, _plane_signs(plane_offset + j, v), lambda x, s: x * s),
-            F.lit(0.0).cast("double"),
-            lambda a, x: a + x,
-        )
-        acc = acc + F.when(proj > 0, F.lit(1 << j).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
-    return acc
 
 
 def _multi_table_lsh_buckets_arrow(
@@ -502,15 +449,16 @@ def multi_table_lsh_buckets(
     tables: int = 8,
     key: str = "vec_id",
     vec: str = "embedding",
-    dim: int | None = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """Multi-table LSH: ``tables`` independent bucketings (disjoint plane
     sets via plane_offset), long form (key, vec, table, bucket). Recall
     for neighbors at angle θ is 1-(1-p^planes)^tables with p = 1-θ/π —
     tables buy recall, planes buy precision (smaller candidate sets).
-    One scan, no shuffle, on every shape.
+    One scan, no shuffle.
 
-    With ``dim`` known the projections run in the Arrow/numpy shape
+    The projections run in the Arrow/numpy shape
     (_multi_table_lsh_buckets_arrow). Two interpreted shapes were
     measured against it and deleted (LSH_SHAPE_AB_r10.json): one
     transform over a tables×planes×dim sign literal, and one flat SQL
@@ -520,14 +468,7 @@ def multi_table_lsh_buckets(
     Arrow plan is constant-size and numpy runs the projections at batch
     grain, while the flat tree pays Catalyst and codegen per action.
     Buckets equal ``tables`` runs of hyperplane_lsh_buckets with
-    ``plane_offset=t*planes`` (tests pin this). Without ``dim`` the
-    interpreted per-row fold of _bucket_expr is the only path."""
-    if dim is None:
-        v = _as_double(F.col(vec))
-        buckets = F.array(*[_bucket_expr(v, planes, t * planes, dim) for t in range(tables)])
-        return df.select(
-            F.col(key), F.col(vec), F.posexplode(buckets).alias("table", "bucket")
-        )
+    ``plane_offset=t*planes`` (tests pin this)."""
     return _multi_table_lsh_buckets_arrow(df, planes, tables, key, vec, dim)
 
 
@@ -539,7 +480,8 @@ def ann_lsh_topk(
     tables: int = 8,
     key: str = "vec_id",
     vec: str = "embedding",
-    dim: int | None = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """Approximate top-k: candidates share any LSH table bucket with the
     query; exact cosine re-ranks the (deduped) candidates. Recall < 1 by
@@ -556,59 +498,10 @@ def ann_lsh_topk(
     # norms to the bucketed side COSTS more folds than it saves
     # (measured 1.53 → 1.77 s at sf0.1, reverted; contrast
     # embedding_neardup_pairs_lsh, whose candidates are corpus×corpus).
-    cb = multi_table_lsh_buckets(corpus, planes, tables, key, vec, dim).select(
-        F.col(key).alias("neighbor_id"), _as_double(F.col(vec)).alias("__cv"), "table", "bucket"
-    )
-    qb = multi_table_lsh_buckets(queries, planes, tables, key, vec, dim).select(
-        F.col(key).alias("query_id"), _as_double(F.col(vec)).alias("__qv"), "table", "bucket"
-    )
-    candidates = (
-        cb.join(qb, on=["table", "bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", "__qv", "__cv")
-        .dropDuplicates(["query_id", "neighbor_id"])  # union across tables
-    )
-    scored = candidates.select(
+    scored = _lsh_pairs(corpus, queries, planes, tables, key, vec, dim).select(
         "query_id", "neighbor_id", cosine(F.col("__qv"), F.col("__cv")).alias("__cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("__cos", 4).alias("cosine"))
-    )
-
-
-def kmeans_centroids(
-    df: DataFrame,
-    nlist: int = 16,
-    iters: int = 2,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Deterministic k-means centroids for IVF coarse quantization:
-    seeded by the md5-hyperplane LSH buckets (log2(nlist) planes — no RNG,
-    no stored init state), refined by ``iters`` Lloyd steps. Returns
-    (centroid_id, centroid: array<double>).
-
-    Scale shape: each Lloyd step is ONE corpus scan — the nearest-centroid
-    assignment is a pure projection (the nlist×dim centroid table is
-    embedded as literals, see _cell_scores), fused by codegen into the
-    same stage as the per-dimension mean's partial aggregate; the only
-    shuffle per step is nlist×dim partial sums per partition, regardless
-    of corpus size. iters is O(1) small — IVF needs a usable partition of
-    space, not converged clusters."""
-    rows = _kmeans_rows(df, nlist=nlist, iters=iters, key=key, vec=vec, dim=dim)
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("centroid_id", T.LongType()),
-            T.StructField("centroid", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    return df.sparkSession.createDataFrame(rows, schema)
+    return _ranked(scored, k, "__cos", desc=True, out="cosine")
 
 
 #: Bounded training-sample cap: at most this many vectors per centroid
@@ -617,51 +510,48 @@ def kmeans_centroids(
 _TRAIN_PER_CENTROID = 256
 
 
-def _kmeans_rows(
-    df: DataFrame,
-    nlist: int,
-    iters: int,
-    key: str,
-    vec: str,
-    dim: int | None,
-) -> list[tuple[int, list[float]]]:
-    """Bounded-sample driver-side Lloyd, returning the centroid table as
-    plain rows (nlist×dim doubles ≈ KBs at any scale). The trainer
-    collects at most ``_TRAIN_PER_CENTROID × nlist`` vectors — chosen by
-    a deterministic hash-order top-k (one TakeOrdered job, never a full
-    sort) — and runs the seed + Lloyd refinement in numpy on the driver.
-    This is the faiss IVF training shape: clustering quality needs a
-    bounded sample, not the corpus, so training is ONE bounded job
-    instead of 1+iters distributed aggregate jobs (whose per-job plan
-    compile dominated at small SF: measured 4.3 s for 550 vectors,
-    nlist=16 — pure overhead). Assignment of the full corpus remains
-    distributed via centroid-literal projections (_cell_scores).
+def _train_sample(df: DataFrame, nclusters: int, key: str, vec: str):
+    """The bounded training sample of a driver-side quantizer: at most
+    ``_TRAIN_PER_CENTROID × nclusters`` vectors, chosen by a
+    deterministic hash-order top-k with a key tie-break (one TakeOrdered
+    job, never a full sort), returned key-sorted as a float64 matrix —
+    None when ``df`` has no vectors. Quantizer quality needs a bounded
+    sample, not the corpus (the faiss IVF/PQ training shape), so
+    training is ONE bounded job instead of 1+iters distributed
+    aggregate jobs, whose per-job plan compile dominated at small SF
+    (measured 4.3 s for 550 vectors, nlist=16 — pure overhead)."""
+    import numpy as np
 
-    Deterministic: the sample is hash-ordered with a key tie-break,
-    rows are key-sorted before training, the seed is the same
-    md5-derived hyperplane sign matrix the distributed path used
-    (_sign_value is a pure function of (plane, dim)), and float64
-    numpy arithmetic is reproducible — same corpus in, same centroids
-    out, on every run and partitioning."""
+    proj = df.select(F.col(key).alias("__k"), _as_double(F.col(vec)).alias("__vv")).filter(
+        F.col("__vv").isNotNull()
+    )
+    rows = (
+        proj.orderBy(F.xxhash64(F.col("__k")), F.col("__k"))
+        .limit(_TRAIN_PER_CENTROID * nclusters)
+        .collect()
+    )
+    if not rows:
+        return None
+    rows.sort(key=lambda r: r["__k"])  # collect order is not a contract
+    return np.array([r["__vv"] for r in rows], dtype=np.float64)
+
+
+def _lloyd(V, nclusters: int, iters: int, dim: int) -> list[tuple[int, list[float]]]:
+    """Seeded Lloyd k-means over the rows of ``V`` in numpy, returning
+    (centroid_id, centroid) rows id-sorted. The seed is the
+    deterministic hyperplane-LSH bucketing over ``dim`` components —
+    log2(nclusters) md5 sign planes (_sign_value), bit_j = proj_j > 0,
+    bucket = Σ bit_j·2^j, the numpy twin of _bucket_expr — then
+    ``iters`` assign/mean steps. No RNG, float64: same rows in, same
+    centroids out, on every run and partitioning. Empty seed buckets
+    simply yield fewer than ``nclusters`` centroids."""
     import math
 
     import numpy as np
 
-    planes = max(1, math.ceil(math.log2(max(nlist, 2))))
-    cap = _TRAIN_PER_CENTROID * nlist
-    proj = df.select(F.col(key).alias("__k"), _as_double(F.col(vec)).alias("__vv")).filter(
-        F.col("__vv").isNotNull()
-    )
-    rows = proj.orderBy(F.xxhash64(F.col("__k")), F.col("__k")).limit(cap).collect()
-    if not rows:
-        return []
-    rows.sort(key=lambda r: r["__k"])  # collect order is not a contract
-    V = np.array([r["__vv"] for r in rows], dtype=np.float64)
-    d = dim if dim is not None else V.shape[1]
-    # Seed: the deterministic hyperplane-LSH buckets (bit_j = proj_j > 0,
-    # bucket = Σ bit_j·2^j) — the numpy twin of _bucket_expr.
+    planes = max(1, math.ceil(math.log2(max(nclusters, 2))))
     signs = np.array(
-        [[_sign_value(j, t) for t in range(d)] for j in range(planes)], dtype=np.float64
+        [[_sign_value(j, t) for t in range(dim)] for j in range(planes)], dtype=np.float64
     )
     assign = (((V @ signs.T) > 0.0).astype(np.int64) << np.arange(planes)).sum(axis=1)
 
@@ -678,6 +568,26 @@ def _kmeans_rows(
         assign = ids[np.argmin(d2, axis=1)]
         cents = _means(assign)
     return [(int(c), [float(x) for x in m]) for c, m in cents]
+
+
+def _kmeans_rows(
+    df: DataFrame,
+    nlist: int,
+    iters: int,
+    key: str,
+    vec: str,
+    dim: int | None,
+) -> list[tuple[int, list[float]]]:
+    """The IVF coarse quantizer: deterministic k-means centroids as
+    plain (centroid_id, centroid) rows (nlist×dim doubles ≈ KBs at any
+    scale), trained driver-side (_lloyd) on the bounded sample
+    (_train_sample). Assignment of the full corpus stays distributed via
+    centroid-literal projections (_cell_scores). ``dim`` defaults to the
+    sampled vectors' width."""
+    V = _train_sample(df, nlist, key, vec)
+    if V is None:
+        return []
+    return _lloyd(V, nlist, iters, dim if dim is not None else V.shape[1])
 
 
 def _l2sq(v: Column, c: Column) -> Column:
@@ -794,27 +704,6 @@ def _assign_cells_arrow(
     return df.select(F.col(key), v.alias("__v")).mapInPandas(gen, out_schema)
 
 
-def _centroid_means(assigned: DataFrame, dim: int | None = None) -> DataFrame:
-    """Element-wise mean of __v per centroid_id. With ``dim`` known: one
-    HashAggregate of dim scalar AVGs (no explode, single shuffle of
-    nlist×dim partials). Fallback for unknown dim: posexplode + two-level
-    agg — still map-side combined, just two shuffles."""
-    if dim is not None:
-        aggd = assigned.groupBy("centroid_id").agg(
-            *[F.avg(F.col("__v")[d]).alias(f"_m{d}") for d in range(dim)]
-        )
-        return aggd.select(
-            "centroid_id", F.array(*[f"_m{d}" for d in range(dim)]).alias("centroid")
-        )
-    exploded = assigned.select("centroid_id", F.posexplode("__v").alias("pos", "x"))
-    per_dim = exploded.groupBy("centroid_id", "pos").agg(F.avg("x").alias("m"))
-    return per_dim.groupBy("centroid_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-        ).alias("centroid")
-    )
-
-
 def ivf_index(
     corpus: DataFrame,
     nlist: int = 16,
@@ -860,7 +749,10 @@ def ivf_search(
     runtime DPP."""
     cents, corpus_cells = index
     # norms once per assignment row / probe row, never per candidate
-    # pair (see cosine_topk)
+    # pair (see _normed). The query side stays one projection with the
+    # explode: _normed's two-step form moves the norm below the Generate,
+    # and the changed size estimate flips the corpus side to the
+    # broadcast side of the candidate join.
     corpus_cells = corpus_cells.withColumn("__cn", norm(F.col("__cv")))
     qv = _as_double(F.col(vec))
     query_probes = queries.select(
@@ -874,24 +766,12 @@ def ivf_search(
             r["centroid_id"] for r in query_probes.select("centroid_id").distinct().collect()
         )
         corpus_cells = corpus_cells.filter(F.col("centroid_id").isin(probed))
-    candidates = (
+    scored = (
         corpus_cells.join(query_probes, on="centroid_id")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", "__qv", "__cv", "__qn", "__cn")
+        .select("query_id", "neighbor_id", _normed_cosine("q", "c").alias("__cos"))
     )
-    scored = candidates.select(
-        "query_id",
-        "neighbor_id",
-        (dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn"))).alias(
-            "__cos"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("__cos", 4).alias("cosine"))
-    )
+    return _ranked(scored, k, "__cos", desc=True, out="cosine")
 
 
 def ivf_topk(
@@ -956,7 +836,8 @@ def cosine_topk_arrow(
     qrows = queries.select(key, vec).collect()
     qids = np.array([r[key] for r in qrows], dtype=np.int64)
     qm = np.asarray([list(r[vec]) for r in qrows], dtype=np.float64)
-    qm = qm / np.linalg.norm(qm, axis=1, keepdims=True)
+    if len(qids):  # an empty batch is a shape-(0,) array: nothing to normalize
+        qm = qm / np.linalg.norm(qm, axis=1, keepdims=True)
 
     out_schema = (
         "query_id bigint, neighbor_id bigint, cosine_full double"
@@ -964,7 +845,7 @@ def cosine_topk_arrow(
 
     def score(batches):
         for pdf in batches:
-            if pdf.empty:
+            if pdf.empty or not len(qids):
                 continue
             ids = pdf["__id"].to_numpy(dtype=np.int64)
             cm = np.asarray([list(v) for v in pdf["__v"]], dtype=np.float64)
@@ -990,14 +871,7 @@ def cosine_topk_arrow(
     local = corpus.select(
         F.col(key).alias("__id"), _as_double(F.col(vec)).alias("__v")
     ).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_full").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine_full", 4).alias("cosine"))
-    )
+    return _ranked(local, k, "cosine_full", desc=True, out="cosine")
 
 
 def label_centroids(
@@ -1006,8 +880,8 @@ def label_centroids(
     """Per-label element-wise embedding mean in LONG form
     (label, dim, n_vecs, mean) — class centroids for nearest-class-mean
     classification, cluster diagnostics, and coarse-quantizer seeding
-    (the distributed twin of _centroid_means, which keeps the same
-    computation driver-side for IVF's nlist×dim KBs).
+    (the distributed twin of the per-cell means _lloyd keeps
+    driver-side for IVF's nlist×dim KBs).
 
     Scale shape: posexplode fans each vector into (label, dim, x) rows,
     map-side partial aggregation collapses every partition to
@@ -1049,21 +923,11 @@ def embedding_neardup_pairs(
         "the O(n²) all-pairs oracle baseline (use "
         "embedding_neardup_pairs_lsh at scale)",
     )
-    a = df.select(F.col(key).alias("d1"), _as_double(F.col(vec)).alias("__v1")).select(
-        "d1", "__v1", norm(F.col("__v1")).alias("__n1")
-    )
-    b = df.select(F.col(key).alias("d2"), _as_double(F.col(vec)).alias("__v2")).select(
-        "d2", "__v2", norm(F.col("__v2")).alias("__n2")
-    )
+    a = _normed(df, "d1", "1", key, vec)
+    b = _normed(df, "d2", "2", key, vec)
     return (
         a.join(b, F.col("d1") < F.col("d2"))
-        .select(
-            "d1",
-            "d2",
-            (dot(F.col("__v1"), F.col("__v2")) / (F.col("__n1") * F.col("__n2"))).alias(
-                "__cos"
-            ),
-        )
+        .select("d1", "d2", _normed_cosine("1", "2").alias("__cos"))
         .filter(F.col("__cos") >= threshold)
         .select("d1", "d2", F.round("__cos", 4).alias("cosine"))
     )
@@ -1100,7 +964,8 @@ def embedding_lsh_candidates(
     tables: int = 8,
     key: str = "vec_id",
     vec: str = "embedding",
-    dim: int | None = None,
+    *,
+    dim: int,
     max_bucket_size: int | None = None,
     max_bucket_factor: float | None = 8.0,
 ) -> DataFrame:
@@ -1126,7 +991,7 @@ def embedding_lsh_candidates(
     # reading the parquet scan directly instead of paying the
     # repartition per branch; the persist below amortizes the shuffle.
     b = persist_once(
-        multi_table_lsh_buckets(spread(df), planes, tables, key, vec, dim).select(
+        multi_table_lsh_buckets(spread(df), planes, tables, key, vec, dim=dim).select(
             "table", "bucket", key
         )
     )
@@ -1167,7 +1032,8 @@ def embedding_neardup_pairs_lsh(
     tables: int = 8,
     key: str = "vec_id",
     vec: str = "embedding",
-    dim: int | None = None,
+    *,
+    dim: int,
     max_bucket_size: int | None = None,
     max_bucket_factor: float | None = 8.0,
 ) -> DataFrame:
@@ -1206,34 +1072,15 @@ def embedding_neardup_pairs_lsh(
         max_bucket_size=max_bucket_size,
         max_bucket_factor=max_bucket_factor,
     )
-    # Norms are per-VECTOR, not per-pair: computing them here (n rows)
-    # instead of inside the pair-level cosine (candidate-pair rows, often
-    # 100×n or more) removes two thirds of the interpreted array-fold
-    # work from the re-rank. dot/(n1*n2) with hoisted norms is the exact
-    # same arithmetic as cosine() — identical fold order, bit-identical
-    # results.
-    v1 = df.select(
-        F.col(key).alias("d1"), _as_double(F.col(vec)).alias("__v1")
-    ).withColumn("__n1", norm(F.col("__v1")))
-    v2 = df.select(
-        F.col(key).alias("d2"), _as_double(F.col(vec)).alias("__v2")
-    ).withColumn("__n2", norm(F.col("__v2")))
-    # Pair-grain dot: flat codegen'd arithmetic when dim is known (the
-    # candidate stream is often 100×n rows — the interpreted lambda fold
-    # was the per-pair hot loop), exact fallback otherwise.
-    pair_dot = (
-        F.expr(_flat_dot_sql("__v1", "__v2", dim))
-        if dim is not None
-        else dot(F.col("__v1"), F.col("__v2"))
-    )
+    # Norms are per-VECTOR, not per-pair (_normed: n rows instead of
+    # candidate-pair rows, often 100×n or more). The pair-grain dot is
+    # flat codegen'd arithmetic (_flat_dot_sql — the interpreted lambda
+    # fold was the per-pair hot loop), the same fold order as dot().
+    pair_dot = F.expr(_flat_dot_sql("__1v", "__2v", dim))
     return (
-        pairs.join(v1, "d1")
-        .join(v2, "d2")
-        .select(
-            "d1",
-            "d2",
-            (pair_dot / (F.col("__n1") * F.col("__n2"))).alias("__cos"),
-        )
+        pairs.join(_normed(df, "d1", "1", key, vec), "d1")
+        .join(_normed(df, "d2", "2", key, vec), "d2")
+        .select("d1", "d2", (pair_dot / (F.col("__1n") * F.col("__2n"))).alias("__cos"))
         .filter(F.col("__cos") >= threshold)
         .select("d1", "d2", F.round("__cos", 4).alias("cosine"))
     )

@@ -401,7 +401,9 @@ def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bucket_sql(planes: int = 8) -> str:
-    """DuckDB twin of operators.similarity._bucket_expr."""
+    """DuckDB twin of operators.similarity.hyperplane_lsh_buckets: the
+    md5 sign of each (plane, dim) computed per row in SQL, where the
+    engine embeds the same signs as a literal matrix (_sign_rows_sql)."""
     terms = []
     for j in range(planes):
         sign = (

@@ -323,7 +323,7 @@ def test_ivfpq_append_equals_rebuild_and_commit_protocol(spark, tmp_path):
     assert stats2["generation"] == 2
     assert read_ivfpq_index(spark, path)[2].count() == emb.count() + 5
 
-    # flat (pre-generation) layouts refuse to append
+    # flat (pre-generation) layouts refuse to load and to append
     flat = str(tmp_path / "flat")
     idx[2].write.partitionBy("centroid_id").parquet(flat)
     import json as _json
@@ -332,6 +332,8 @@ def test_ivfpq_append_equals_rebuild_and_commit_protocol(spark, tmp_path):
         _json.dump({"centroids": cents, "codebooks": books, "meta": None}, f)
     import pytest as _pytest
 
+    with _pytest.raises(ValueError, match="pre-generation"):
+        read_ivfpq_index(spark, flat)
     with _pytest.raises(ValueError, match="pre-generation"):
         ivfpq_append(spark, flat, new)
     shutil.rmtree(flat)

@@ -7,10 +7,10 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from c_tran_data_pipeline_spark.operators.similarity import (
+    _kmeans_rows,
     ann_lsh_topk,
     cosine_topk,
     ivf_topk,
-    kmeans_centroids,
 )
 
 
@@ -41,7 +41,7 @@ def test_lsh_topk_recall_floor(spark):
     exact = {(r.query_id, r.neighbor_id) for r in cosine_topk(emb, queries, k=3).collect()}
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in ann_lsh_topk(emb, queries, k=3, planes=4, tables=8).collect()
+        for r in ann_lsh_topk(emb, queries, k=3, planes=4, tables=8, dim=64).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.5, f"LSH recall@3 {recall:.2f} (single-table was ~0.0-0.18)"
@@ -92,7 +92,10 @@ def test_kmeans_centroids_shape(spark):
     from tests.conftest import SF_SMOKE
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    cents = kmeans_centroids(emb, nlist=8, iters=1, dim=64).collect()
+    cents = [
+        Row(centroid_id=cid, centroid=c)
+        for cid, c in _kmeans_rows(emb, nlist=8, iters=1, key="vec_id", vec="embedding", dim=64)
+    ]
     assert 1 < len(cents) <= 8
     assert all(len(r.centroid) == 64 for r in cents)
 
@@ -137,6 +140,25 @@ def test_cosine_topk_arrow_matches_jvm_path(spark):
     jvm = sorted(map(tuple, cosine_topk(emb, queries, k=3).collect()))
     blas = sorted(map(tuple, cosine_topk_arrow(emb, queries, k=3).collect()))
     assert jvm == blas
+
+
+def test_cosine_topk_arrow_empty_query_batch(spark):
+    """An empty query batch gives zero rows on both exact paths, with
+    the same schema — the BLAS path must not fail normalizing an empty
+    query matrix."""
+    from c_tran_data_pipeline_spark.operators.similarity import (
+        cosine_topk,
+        cosine_topk_arrow,
+    )
+    from c_tran_data_pipeline_spark.sources.readers import load_table
+    from tests.conftest import SF_SMOKE
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 10).limit(0)
+    jvm = cosine_topk(emb, queries, k=3)
+    blas = cosine_topk_arrow(emb, queries, k=3)
+    assert blas.collect() == jvm.collect() == []
+    assert blas.schema == jvm.schema
 
 
 def test_ivf_index_reusable_across_query_batches(spark):
