@@ -1329,8 +1329,7 @@ def read_semantic_store(
     torn append) and raises ValueError on a torn/uncommitted store
     (parquet without sidecar) or a stored meta other than
     ``expect_meta``. Pre-generation stores (sidecar without a
-    ``generations`` list, reps at the store root) still read — the
-    legacy-compat contract write_ivfpq_index set."""
+    ``generations`` list, reps at the store root) still read."""
     import os
 
     rec = read_json(os.path.join(path, "_semantic_store.json"), expect_meta)

@@ -990,11 +990,12 @@ def q_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pruning axes: the IVF coarse quantizer prunes WHICH rows each "
     "query scores (nprobe of nlist cells), PQ codes prune HOW MANY "
     "BYTES each scoring touches (ADC table lookups, 64x compression), "
-    "and an exact re-rank of the k×8 shortlist restores precision. One "
-    "corpus projection emits (id, cell, codes) with centroids and "
-    "codebooks as literals — assignment and encoding join nothing; "
-    "persisted partitionBy(centroid_id), searches read nprobe cells' "
-    "directories. tests/test_pq.py pins recall floors, the "
+    "and an exact re-rank of the k×8 shortlist restores precision. "
+    "Trains the coarse quantizer per call, encodes the corpus in ONE "
+    "projection (encode_ivfpq: id, codes, vector, cell, with centroids "
+    "and codebooks as literals — assignment and encoding join nothing) "
+    "and searches it with ivfpq_search, the body q_ann_ivfpq_search "
+    "runs over the persisted index. tests/test_pq.py pins recall floors, the "
     "probe-more-never-hurts ladder, and nprobe==nlist ≡ whole-corpus "
     "re-ranked PQ.",
     tags=("similarity", "topk", "quantize"),
